@@ -5,8 +5,8 @@ standard security handler's AESV2 (R4) and AESV3 (R6) crypt filters
 python implementation is fast enough, and a real deployment would slot
 a native provider behind the same two functions.
 
-Validated against the FIPS-197 appendix C known-answer vectors in
-tests/test_pdfparse_real.py.
+Validated against the FIPS-197 appendix C and SP 800-38A CBC
+known-answer vectors in tests/test_pdfparse_real.py.
 """
 
 from __future__ import annotations
@@ -77,71 +77,9 @@ def _expand_key(key: bytes) -> list[list[int]]:
     return w
 
 
-def _cipher(block: bytes, w: list[list[int]], inverse: bool) -> bytes:
-    nr = len(w) // 4 - 1
-    s = [[block[r + 4 * c] for c in range(4)] for r in range(4)]
-
-    def add_round_key(rnd):
-        for c in range(4):
-            for r in range(4):
-                s[r][c] ^= w[4 * rnd + c][r]
-
-    def sub(box):
-        for r in range(4):
-            for c in range(4):
-                s[r][c] = box[s[r][c]]
-
-    def shift(inv):
-        for r in range(1, 4):
-            k = -r if inv else r
-            s[r] = s[r][k:] + s[r][:k]
-
-    def mix():
-        for c in range(4):
-            a = [s[r][c] for r in range(4)]
-            s[0][c] = _mul(a[0], 2) ^ _mul(a[1], 3) ^ a[2] ^ a[3]
-            s[1][c] = a[0] ^ _mul(a[1], 2) ^ _mul(a[2], 3) ^ a[3]
-            s[2][c] = a[0] ^ a[1] ^ _mul(a[2], 2) ^ _mul(a[3], 3)
-            s[3][c] = _mul(a[0], 3) ^ a[1] ^ a[2] ^ _mul(a[3], 2)
-
-    def imix():
-        for c in range(4):
-            a = [s[r][c] for r in range(4)]
-            s[0][c] = (_mul(a[0], 14) ^ _mul(a[1], 11)
-                       ^ _mul(a[2], 13) ^ _mul(a[3], 9))
-            s[1][c] = (_mul(a[0], 9) ^ _mul(a[1], 14)
-                       ^ _mul(a[2], 11) ^ _mul(a[3], 13))
-            s[2][c] = (_mul(a[0], 13) ^ _mul(a[1], 9)
-                       ^ _mul(a[2], 14) ^ _mul(a[3], 11))
-            s[3][c] = (_mul(a[0], 11) ^ _mul(a[1], 13)
-                       ^ _mul(a[2], 9) ^ _mul(a[3], 14))
-
-    if not inverse:
-        add_round_key(0)
-        for rnd in range(1, nr):
-            sub(_SBOX)
-            shift(False)
-            mix()
-            add_round_key(rnd)
-        sub(_SBOX)
-        shift(False)
-        add_round_key(nr)
-    else:
-        add_round_key(nr)
-        for rnd in range(nr - 1, 0, -1):
-            shift(True)
-            sub(_ISBOX)
-            add_round_key(rnd)
-            imix()
-        shift(True)
-        sub(_ISBOX)
-        add_round_key(0)
-    return bytes(s[r % 4][r // 4] for r in range(16))
-
-
-# ---- T-table fast path for ENCRYPTION (the R6 KDF runs ~10k blocks
-# per password hash; the schoolbook _cipher is ~250 us/block, tables
-# are ~20 us).  Tables derive from the same generated S-box.
+# ---- T-table ENCRYPTION (the R6 KDF runs ~10k blocks per password
+# hash; a schoolbook round function is ~250 us/block, tables are
+# ~20 us).  Tables derive from the same generated S-box.
 def _build_ttables():
     t0, t1, t2, t3 = [], [], [], []
     for x in range(256):
@@ -204,8 +142,8 @@ def aes_encrypt_block(key: bytes, block: bytes) -> bytes:
 # ~10x-over-schoolbook win the encrypt side already has; the AESV2
 # stream decrypt in pdfparse was _mul/_xtime-bound, ~75% of the
 # encrypted-dialect parse kernel).  Tables derive from the same
-# generated S-box; round-trip + FIPS appendix-C vectors cover both
-# paths in tests/test_pdfparse_real.py.
+# generated S-box; the SP 800-38A CBC vectors cover both directions
+# in tests/test_pdfparse_real.py.
 def _build_dtables():
     d0, d1, d2, d3 = [], [], [], []
     for x in range(256):
@@ -281,10 +219,6 @@ def _decrypt_block_fast(drk: list[int], block: bytes) -> bytes:
           | (s[(w1 >> 8) & 0xFF] << 8) | s[w0 & 0xFF]) ^ drk[k + 3]
     return (o0.to_bytes(4, "big") + o1.to_bytes(4, "big")
             + o2.to_bytes(4, "big") + o3.to_bytes(4, "big"))
-
-
-def aes_decrypt_block(key: bytes, block: bytes) -> bytes:
-    return _decrypt_block_fast(_inv_round_keys_words(key), block)
 
 
 def cbc_encrypt(key: bytes, iv: bytes, data: bytes) -> bytes:

@@ -36,6 +36,7 @@ from ..constants import (
     MINHASH_SHINGLE_K,
     SIMHASH_BITS,
 )
+from ..session import checkpoint
 
 
 def _norm(col: Column) -> Column:
@@ -61,22 +62,6 @@ def exact_dedup(df: DataFrame, text_col: str = "text",
 
 
 # -------------------------------------------------------------- shingles
-
-
-def char_shingles(col: Column, k: int = MINHASH_SHINGLE_K) -> Column:
-    """Distinct k-char shingles of the normalized text as an array —
-    pure SQL: transform over an index sequence + substring.
-
-    NOTE: expressions inside HOF lambdas are re-evaluated per element
-    (no CSE in interpreted lambda eval), so the _norm regex runs once
-    per SHINGLE here — fine for small oracle-checked queries, but the
-    production path is char_shingle_rows (Generate-boundary form,
-    one regex per row)."""
-    t = _norm(col)
-    n = F.greatest(F.length(t) - (k - 1), F.lit(1))
-    return F.array_distinct(
-        F.transform(F.sequence(F.lit(1), n), lambda i: t.substr(i, F.lit(k)))
-    )
 
 
 def char_shingle_rows(df: DataFrame, text_col: str = "text",
@@ -131,18 +116,6 @@ def word_shingle_rows(df: DataFrame, text_col: str = "text",
         F.md5(F.array_join(F.slice(F.col("w"), F.col("i") + 1, F.lit(k)), " ")).alias("sh"),
     )
     return sh.dropDuplicates(["id", "sh"])
-
-
-def word_shingles(col: Column, k: int = 3) -> Column:
-    """Distinct k-word shingles (n-gram Jaccard unit)."""
-    words = F.split(_norm(col), " ")
-    n = F.greatest(F.size(words) - (k - 1), F.lit(1))
-    return F.array_distinct(
-        F.transform(
-            F.sequence(F.lit(0), n - 1),
-            lambda i: F.array_join(F.slice(words, i + 1, k), " "),
-        )
-    )
 
 
 # --------------------------------------------------------------- minhash
@@ -238,27 +211,14 @@ def minhash_dedup_pairs(
     threshold: float = 0.7,
     num_perm: int = MINHASH_NUM_PERM,
     bands: int = MINHASH_BANDS,
-    storage_path: str | None = None,
 ) -> DataFrame:
     """Candidate near-duplicate pairs via MinHash LSH, verified by
     estimated Jaccard = matching signature positions / num_perm.
-    Returns (id_a, id_b, est_jaccard) with id_a < id_b.
-
-    storage_path: production signature materialization — signatures are
-    WRITTEN to this parquet path and the band/verify stages read the
-    written table (executor-loss safe, reusable across runs; the
-    cluster-scale form).  Default None keeps the single-job
-    localCheckpoint form (lineage truncation only — an executor loss
-    forces a full restart, acceptable when the whole job is one
-    retryable unit)."""
+    Returns (id_a, id_b, est_jaccard) with id_a < id_b."""
     # Stage 1: materialize signatures ONCE (downstream uses them three
     # times: band explode + two verify joins).
-    sigs = minhash_signatures_fast(df, text_col, id_col, num_perm=num_perm)
-    if storage_path:
-        sigs.write.mode("overwrite").parquet(storage_path)
-        sigs = df.sparkSession.read.parquet(storage_path)
-    else:
-        sigs = sigs.localCheckpoint(eager=True)
+    sigs = checkpoint(
+        minhash_signatures_fast(df, text_col, id_col, num_perm=num_perm))
 
     # Stage 2: LSH band join on ids only (narrow shuffle rows)
     banded = sigs.select(
@@ -358,48 +318,6 @@ def simhash_sql(tokens_expr: str, bits: int = SIMHASH_BITS) -> str:
     return " || ".join(bit_cases)
 
 
-def simhash_hamming_pairs(df: DataFrame, text_col: str = "text",
-                          id_col: str = "doc_id", max_hamming: int = 3,
-                          bits: int = SIMHASH_BITS,
-                          blocks: int = 4) -> DataFrame:
-    """Near-dup pairs by SimHash hamming distance <= max_hamming, using
-    the pigeonhole block trick: split the signature into `blocks`
-    substrings; any pair within distance max_hamming < blocks shares at
-    least one exact block -> join on (block_idx, block_value)."""
-    w = bits // blocks
-    sigs = df.select(F.col(id_col).alias("id"), simhash(F.col(text_col), bits).alias("sig"))
-    blocked = sigs.select(
-        "id", "sig",
-        F.posexplode(
-            F.transform(
-                F.sequence(F.lit(0), F.lit(blocks - 1)),
-                lambda b: F.substring(F.col("sig"), b * w + 1, w),
-            )
-        ).alias("blk", "blk_val"),
-    )
-    a, b = blocked.alias("a"), blocked.alias("b")
-    cand = (
-        a.join(b, (F.col("a.blk") == F.col("b.blk"))
-               & (F.col("a.blk_val") == F.col("b.blk_val"))
-               & (F.col("a.id") < F.col("b.id")))
-        .select(F.col("a.id").alias("id_a"), F.col("b.id").alias("id_b"),
-                F.col("a.sig").alias("sig_a"), F.col("b.sig").alias("sig_b"))
-        .dropDuplicates(["id_a", "id_b"])
-    )
-    ham = F.size(
-        F.filter(
-            F.zip_with(
-                F.split(F.col("sig_a"), ""), F.split(F.col("sig_b"), ""),
-                lambda x, y: x != y,
-            ),
-            lambda m: m,
-        )
-    )
-    return cand.select("id_a", "id_b", ham.alias("hamming")).filter(
-        F.col("hamming") <= max_hamming
-    )
-
-
 # --------------------------------------------------------- ngram jaccard
 
 
@@ -410,7 +328,6 @@ def ngram_jaccard_pairs(
     k: int = 3,
     threshold: float = 0.8,
     max_df: int = 1000,
-    storage_path: str | None = None,
 ) -> DataFrame:
     """Exact n-gram Jaccard near-dup pairs via inverted-index join.
     Shingles appearing in > max_df docs are dropped (stopword-shingle
@@ -422,16 +339,9 @@ def ngram_jaccard_pairs(
     without materialization each consumer re-runs the Generate + md5 +
     distinct subtree — plan-audited at 6 parquet scans / 4 shingle
     subtrees under AQE (broadcast rewrites defeat ReuseExchange).  It
-    is therefore materialized once: to `storage_path` (parquet —
-    executor-loss safe, reusable, the cluster-scale form) when given,
-    else via eager localCheckpoint (the single-retryable-job form) —
-    the minhash_dedup_pairs signature-materialization pattern."""
-    sh = word_shingle_rows(df, text_col, id_col, k)
-    if storage_path:
-        sh.write.mode("overwrite").parquet(storage_path)
-        sh = df.sparkSession.read.parquet(storage_path)
-    else:
-        sh = sh.localCheckpoint(eager=True)
+    is therefore materialized once (session.checkpoint) — the
+    minhash_dedup_pairs signature-materialization pattern."""
+    sh = checkpoint(word_shingle_rows(df, text_col, id_col, k))
     sizes = sh.groupBy("id").agg(F.count("*").alias("n_sh"))
     popular = sh.groupBy("sh").agg(F.count("*").alias("df_cnt")).filter(
         F.col("df_cnt") > max_df
@@ -460,8 +370,7 @@ def ngram_jaccard_pairs(
 
 def connected_components(pairs: DataFrame, id_a: str = "id_a",
                          id_b: str = "id_b",
-                         max_iter: int = 20,
-                         checkpoint_dir: str | None = None) -> DataFrame:
+                         max_iter: int = 20) -> DataFrame:
     """Near-duplicate pairs -> canonical groups via iterative min-label
     propagation: each node adopts the smallest id reachable through its
     edges.  Returns (id, component) where component = min id of the
@@ -473,28 +382,18 @@ def connected_components(pairs: DataFrame, id_a: str = "id_a",
         convergence check rides on it as an Observation (CollectMetrics
         node in the same plan), so there is NO extra per-round driver
         count job or label self-join.
-      - with checkpoint_dir set, rounds use reliable `checkpoint()`
-        (HDFS/object store) and survive executor loss; the default
-        localCheckpoint is the single-job form (lineage truncation only
-        — executor loss would force a full restart, acceptable only
-        when the whole job is one retryable unit).
+      - the checkpoint is session.checkpoint: reliable storage (HDFS/
+        object store, survives executor loss) when the session has a
+        checkpoint dir, else the single-job localCheckpoint form.
     """
     from pyspark.sql import Observation
 
-    spark = pairs.sparkSession
-    if checkpoint_dir:
-        spark.sparkContext.setCheckpointDir(checkpoint_dir)
-
-    def _ckpt(df: DataFrame) -> DataFrame:
-        return df.checkpoint(eager=True) if checkpoint_dir else (
-            df.localCheckpoint(eager=True))
-
-    edges = _ckpt(
+    edges = checkpoint(
         pairs.select(F.col(id_a).alias("a"), F.col(id_b).alias("b"))
         .unionByName(pairs.select(F.col(id_b).alias("a"), F.col(id_a).alias("b")))
         .distinct()
     )
-    labels = _ckpt(
+    labels = checkpoint(
         edges.select(F.col("a").alias("id"))
         .distinct()
         .withColumn("component", F.col("id"))
@@ -508,7 +407,7 @@ def connected_components(pairs: DataFrame, id_a: str = "id_a",
             .agg(F.min("component").alias("n_comp"))
         )
         obs = Observation(f"cc_round_{i}")
-        new_labels = _ckpt(
+        new_labels = checkpoint(
             labels.join(prop, "id", "left")
             .select(
                 "id",
@@ -605,7 +504,6 @@ def duplicated_window_spans(
     min_docs: int = 2,
     text_col: str = "text",
     id_col: str = "doc_id",
-    storage_path: str | None = None,
 ) -> DataFrame:
     """Cross-document substring duplication: flag every n-WORD window
     whose exact content appears in >= min_docs distinct documents, and
@@ -631,14 +529,12 @@ def duplicated_window_spans(
     per-document prefix-max window — shuffles once on doc_id.
 
     The (id, pos, hash) window table feeds two consumers (the flag agg
-    and the semi-join probe side) and is materialized once: to
-    `storage_path` (parquet — executor-loss safe, reusable across
-    runs) when given, else via eager localCheckpoint (r7: recomputing
-    it meant hashing every 50-word window TWICE — the md5 over the
-    joined slice dominates the op, and the checkpoint halved the
-    sf0.1 query, 2.8 -> 1.5 s; the checkpointed rows are ~40 B each,
-    the same order as the shuffle blocks the aggregation writes
-    anyway).
+    and the semi-join probe side) and is materialized once via
+    session.checkpoint (r7: recomputing it meant hashing every 50-word
+    window TWICE — the md5 over the joined slice dominates the op, and
+    the checkpoint halved the sf0.1 query, 2.8 -> 1.5 s; the
+    checkpointed rows are ~40 B each, the same order as the shuffle
+    blocks the aggregation writes anyway).
     """
     w = docs.select(
         F.col(id_col).alias("id"),
@@ -649,16 +545,11 @@ def duplicated_window_spans(
         F.posexplode(F.sequence(F.lit(1), F.size("w") - (n - 1))).alias(
             "_p", "s"),
     )
-    hashed = pos.select(
+    hashed = checkpoint(pos.select(
         "id", "s",
         F.md5(F.array_join(F.slice(F.col("w"), F.col("s"), n), " ")).alias(
             "h"),
-    )
-    if storage_path:
-        hashed.write.mode("overwrite").parquet(storage_path)
-        hashed = docs.sparkSession.read.parquet(storage_path)
-    else:
-        hashed = hashed.localCheckpoint(eager=True)
+    ))
     flagged = (
         hashed.select("h", "id").distinct()
         .groupBy("h").agg(F.count("*").alias("n_docs"))

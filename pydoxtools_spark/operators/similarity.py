@@ -26,6 +26,8 @@ import random
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..session import checkpoint, pin
+
 
 def _dot(a: Column, b: Column) -> Column:
     return F.aggregate(
@@ -353,7 +355,6 @@ def pagerank(
     src_col: str = "src",
     dst_col: str = "dst",
     weight_col: str = "weight",
-    checkpoint_dir: str | None = None,
     nodes: DataFrame | None = None,
 ) -> DataFrame:
     """Weighted pagerank over per-graph edge sets (one graph per
@@ -364,40 +365,18 @@ def pagerank(
       r'(j) = (1-d)/N + d * (sum_{i->j} r(i) * w_ij / outw(i)
                              + dangling_mass / N)
     Deterministic (no convergence probe), so no per-round driver logic
-    is needed.  Each round's rank table is lineage-truncated (the
-    connected_components pattern: reliable `checkpoint()` when
-    checkpoint_dir is set — survives executor loss — else
-    localCheckpoint): the round's plan references the previous ranks
-    TWICE (edge contributions + dangling mass), so without truncation
-    the logical plan doubles per round and analysis time explodes
-    exponentially.  Normalized edges and the node table are persisted
-    because every round references them.
+    is needed.  Each round's rank table is lineage-truncated
+    (session.checkpoint, the connected_components pattern): the round's
+    plan references the previous ranks TWICE (edge contributions +
+    dangling mass), so without truncation the logical plan doubles per
+    round and analysis time explodes exponentially.  Normalized edges
+    and the node table are pinned (session.pin) because every round
+    references them.
 
     Scale: each round is two shuffles on (graph, node) keys, the
     standard distributed-pagerank shape; graphs are independent so skew
     is bounded by the largest single graph (per-doc token graphs:
     thousands of nodes at most)."""
-    spark = edges.sparkSession
-    if checkpoint_dir:
-        spark.sparkContext.setCheckpointDir(checkpoint_dir)
-
-    def _ckpt(df: DataFrame) -> DataFrame:
-        return df.checkpoint(eager=True) if checkpoint_dir else (
-            df.localCheckpoint(eager=True))
-
-    def _pin(df: DataFrame) -> DataFrame:
-        """Round-shared tables (ne / nodes) are referenced by EVERY
-        pagerank round.  Single-job mode pins them with a LAZY
-        localCheckpoint rather than persist(): both cache the rows, but
-        the checkpoint also truncates the lineage, so each round's plan
-        carries (and Catalyst re-analyzes, and explain re-prints) an
-        RDD leaf instead of the whole upstream subtree — measured
-        ~1.5-2 s off a cold sf0.1 textrank_summary.  Reliable mode
-        keeps persist(): lineage must stay recomputable for
-        executor-loss recovery there."""
-        return df.persist() if checkpoint_dir else (
-            df.localCheckpoint(eager=False))
-
     e = edges.select(
         F.col(graph_col).alias("g"),
         F.col(src_col).alias("src"),
@@ -405,7 +384,7 @@ def pagerank(
         F.col(weight_col).cast("double").alias("w"),
     )
     out_w = e.groupBy("g", "src").agg(F.sum("w").alias("ow"))
-    ne = _pin(e.join(out_w, ["g", "src"]).select(
+    ne = pin(e.join(out_w, ["g", "src"]).select(
         "g", "src", "dst", (F.col("w") / F.col("ow")).alias("p")
     ))
     if nodes is None:
@@ -433,7 +412,7 @@ def pagerank(
     # ~15 s of the 112 s sf0.1 wall); ne carries the same (g, src) set.
     src_set = ne.select("g", F.col("src").alias("id")).distinct() \
         .withColumn("_out", F.lit(True))
-    nodes = _pin(
+    nodes = pin(
         nodes.join(counts, "g")
         .join(src_set, ["g", "id"], "left")
         .withColumn("dang", F.col("_out").isNull())
@@ -455,7 +434,7 @@ def pagerank(
         "g", "id", "n", "dang", (1.0 / F.col("n")).alias("r"))
     for i in range(iters):
         if i % ckpt_every == 0:
-            ranks = _ckpt(ranks)
+            ranks = checkpoint(ranks)
         contrib = (
             ranks.select("g", F.col("id").alias("src"), "r")
             .join(ne, ["g", "src"])

@@ -171,57 +171,58 @@ def _text_branch(spans: DataFrame) -> DataFrame:
     )
 
 
-def _html_kernel(batches):
-    """mapInPandas kernel: html payload -> output span rows."""
+_OUT_COLS = [f.name for f in _OUT_SPAN.fields]
+
+
+def _span_kernel(parse, error_label: str, *payload_cols: str):
+    """mapInPandas kernel factory: (doc_id, span_idx, *payload_cols)
+    rows -> output span rows, one per `parse(*payload)` item in order
+    (ord1 = item index).  A raising parse emits ONE contained
+    `error_label` error row for its span — failure containment, never
+    task death."""
+
+    def kernel(batches):
+        for pdf in batches:
+            rows = []
+            for doc_id, span_idx, *payload in zip(
+                pdf["doc_id"], pdf["span_idx"], *(pdf[c] for c in payload_cols)
+            ):
+                try:
+                    for i, (k, t, r) in enumerate(parse(*payload)):
+                        rows.append((doc_id, int(span_idx), float(i), 0.0, 0.0,
+                                     k, t, r))
+                except Exception as e:  # failure containment, never task death
+                    rows.append(
+                        (doc_id, int(span_idx), 0.0, 0.0, 0.0, KIND_ERROR,
+                         f"{error_label}: {type(e).__name__}: {e}", None)
+                    )
+            yield pd.DataFrame(rows, columns=_OUT_COLS)
+
+    return kernel
+
+
+def _parse_html(raw):
     from .functions.htmlparse import extract_html_spans
 
-    cols = ["doc_id", "span_idx", "ord1", "ord2", "ord3", "kind", "text", "media_ref"]
-    for pdf in batches:
-        rows = []
-        for doc_id, span_idx, raw in zip(
-            pdf["doc_id"], pdf["span_idx"], pdf["in_text"]
-        ):
-            try:
-                for i, (k, t, r) in enumerate(extract_html_spans(raw or "")):
-                    rows.append((doc_id, int(span_idx), float(i), 0.0, 0.0, k, t, r))
-            except Exception as e:  # failure containment, never task death
-                rows.append(
-                    (doc_id, int(span_idx), 0.0, 0.0, 0.0, KIND_ERROR,
-                     f"html_parse_error: {type(e).__name__}: {e}", None)
-                )
-        yield pd.DataFrame(rows, columns=cols)
+    return extract_html_spans(raw or "")
 
 
-def _html_branch(spans: DataFrame, parallelism: int) -> DataFrame:
-    html = spans.filter(F.col("in_kind") == IN_KIND_HTML).select(
-        "doc_id", "span_idx", "in_text"
-    )
-    return html.mapInPandas(_html_kernel, _OUT_SPAN)
-
-
-def _markdown_kernel(batches):
-    """mapInPandas kernel: markdown/mediawiki payload -> output spans
-    (functions/markdown.py; reference extract_pandoc.py:98-167 block
-    mapping)."""
+def _parse_markup(raw, doc_type):
+    """markdown/mediawiki payload -> spans (functions/markdown.py;
+    reference extract_pandoc.py:98-167 block mapping)."""
     from .dispatch import TYPE_MEDIAWIKI
     from .functions.markdown import extract_markdown_spans, extract_wiki_spans
 
-    cols = ["doc_id", "span_idx", "ord1", "ord2", "ord3", "kind", "text", "media_ref"]
-    for pdf in batches:
-        rows = []
-        for doc_id, span_idx, raw, dt in zip(
-            pdf["doc_id"], pdf["span_idx"], pdf["in_text"], pdf["doc_type"]
-        ):
-            fn = extract_wiki_spans if dt == TYPE_MEDIAWIKI else extract_markdown_spans
-            try:
-                for i, (k, t, r) in enumerate(fn(raw or "")):
-                    rows.append((doc_id, int(span_idx), float(i), 0.0, 0.0, k, t, r))
-            except Exception as e:  # failure containment, never task death
-                rows.append(
-                    (doc_id, int(span_idx), 0.0, 0.0, 0.0, KIND_ERROR,
-                     f"markdown_parse_error: {type(e).__name__}: {e}", None)
-                )
-        yield pd.DataFrame(rows, columns=cols)
+    fn = extract_wiki_spans if doc_type == TYPE_MEDIAWIKI else extract_markdown_spans
+    return fn(raw or "")
+
+
+def _html_branch(spans: DataFrame) -> DataFrame:
+    html = spans.filter(F.col("in_kind") == IN_KIND_HTML).select(
+        "doc_id", "span_idx", "in_text"
+    )
+    return html.mapInPandas(
+        _span_kernel(_parse_html, "html_parse_error", "in_text"), _OUT_SPAN)
 
 
 def _markdown_branch(spans: DataFrame) -> DataFrame:
@@ -233,7 +234,10 @@ def _markdown_branch(spans: DataFrame) -> DataFrame:
         "doc_id", "span_idx", "in_text",
         doc_type_col(F.col("in_text")).alias("doc_type"),
     )
-    return md.mapInPandas(_markdown_kernel, _OUT_SPAN)
+    return md.mapInPandas(
+        _span_kernel(_parse_markup, "markdown_parse_error", "in_text",
+                     "doc_type"),
+        _OUT_SPAN)
 
 
 def _parse_pdf_blobs_kernel(batches):
@@ -352,16 +356,14 @@ def _pdf_branch(spans: DataFrame, pdf_elements: DataFrame,
     )
 
 
-def _docx_kernel(batches):
-    """mapInPandas kernel for zip-container documents: bytes -> output
-    spans.  Self-describing dispatch per blob (magic + part probes,
-    NOT the declared in_kind — a mislabeled blob still parses, and a
-    hopeless one errors): docx (functions/docx.py, ECMA-376), odt
-    (functions/odf.py, OASIS ODF), epub (functions/odf.py, XHTML
-    chapters through the html kernel in spine order) — the reference's
-    pandoc coverage (extract_pandoc.py:98-167) rebuilt from the
-    container specs.  Parse failure is a contained error span, never
-    task death."""
+def _parse_container(content):
+    """Zip-container / rtf document bytes -> spans.  Self-describing
+    dispatch per blob (magic + part probes, NOT the declared in_kind —
+    a mislabeled blob still parses, and a hopeless one errors): docx
+    (functions/docx.py, ECMA-376), odt (functions/odf.py, OASIS ODF),
+    epub (functions/odf.py, XHTML chapters through the html kernel in
+    spine order) — the reference's pandoc coverage
+    (extract_pandoc.py:98-167) rebuilt from the container specs."""
     from .functions.docx import extract_docx_spans, is_docx
     from .functions.odf import (
         extract_epub_spans,
@@ -371,36 +373,17 @@ def _docx_kernel(batches):
     )
     from .functions.rtf import extract_rtf_spans, is_rtf
 
-    cols = ["doc_id", "span_idx", "ord1", "ord2", "ord3", "kind", "text",
-            "media_ref"]
-    for pdf in batches:
-        rows = []
-        for doc_id, span_idx, content in zip(
-            pdf["doc_id"], pdf["span_idx"], pdf["content"]
-        ):
-            try:
-                blob = bytes(content) if content is not None else b""
-                if is_rtf(blob):
-                    extracted = extract_rtf_spans(blob)
-                elif is_docx(blob):
-                    extracted = extract_docx_spans(blob)
-                elif is_epub(blob):
-                    extracted = extract_epub_spans(blob)
-                elif is_odt(blob):
-                    extracted = extract_odt_spans(blob)
-                else:
-                    raise ValueError(
-                        "unrecognized container (rtf/docx/odt/epub probes"
-                        " all negative)")
-                for i, (k, t, r) in enumerate(extracted):
-                    rows.append((doc_id, int(span_idx), float(i), 0.0, 0.0,
-                                 k, t, r))
-            except Exception as e:  # failure containment, never task death
-                rows.append(
-                    (doc_id, int(span_idx), 0.0, 0.0, 0.0, KIND_ERROR,
-                     f"docx_parse_error: {type(e).__name__}: {e}", None)
-                )
-        yield pd.DataFrame(rows, columns=cols)
+    blob = bytes(content) if content is not None else b""
+    if is_rtf(blob):
+        return extract_rtf_spans(blob)
+    if is_docx(blob):
+        return extract_docx_spans(blob)
+    if is_epub(blob):
+        return extract_epub_spans(blob)
+    if is_odt(blob):
+        return extract_odt_spans(blob)
+    raise ValueError(
+        "unrecognized container (rtf/docx/odt/epub probes all negative)")
 
 
 _CONTAINER_IN_KINDS = (IN_KIND_DOCX_BYTES, IN_KIND_ODT_BYTES,
@@ -420,7 +403,9 @@ def _docx_branch(spans: DataFrame, doc_blobs: DataFrame) -> DataFrame:
     joined = refs.join(doc_blobs, refs.in_ref == doc_blobs.ref).select(
         "doc_id", "span_idx", "content"
     )
-    return joined.mapInPandas(_docx_kernel, _OUT_SPAN)
+    return joined.mapInPandas(
+        _span_kernel(_parse_container, "docx_parse_error", "content"),
+        _OUT_SPAN)
 
 
 def _ocr_branch(spans: DataFrame, media_blobs: DataFrame,
@@ -527,7 +512,6 @@ def extract(
     doc_blobs: DataFrame | None = None,
     media_blobs: DataFrame | None = None,
     ocr_model=None,
-    persist_spans: bool = False,
 ) -> DataFrame:
     """documents_in (+ pdf_elements side table, + optional
     pdf_blobs(ref, content binary) for raw-PDF-bytes ingestion, +
@@ -582,28 +566,15 @@ def extract(
     spans = explode_input_spans(documents_in).repartition(
         parallelism, "doc_id", "span_idx"
     )
-    if persist_spans:
-        # One-scan mode: materialize the exploded frame once and let
-        # every branch read the cache instead of re-scanning the source
-        # (each branch otherwise keeps its own scan — filters push
-        # below the exchange, so ReuseExchange never fires).  Trade-off
-        # at 100 TB: the cache is ~corpus-sized on executor disk; use
-        # when the source is remote/expensive to re-read, skip when
-        # local storage is the scarcer resource.
-        from pyspark import StorageLevel
-
-        spans = spans.persist(StorageLevel.MEMORY_AND_DISK)
     # Ref-only branches (pdf/image/docx/ocr) never touch span.text:
     # they read through the column-pruned ref explode (scan carries
     # kind+media_ref only — the r2-named 100x mitigation, now code;
-    # A/B at the 96k corpus in BASELINE.md).  In persist_spans mode
-    # the single cached copy is cheaper than any re-scan, so they
-    # share it instead.
-    ref_spans = spans if persist_spans else explode_input_refs(documents_in)
+    # A/B at the 96k corpus in BASELINE.md).
+    ref_spans = explode_input_refs(documents_in)
     out = (
         _text_branch(spans)
         .unionByName(_markdown_branch(spans))
-        .unionByName(_html_branch(spans, parallelism))
+        .unionByName(_html_branch(spans))
         .unionByName(_image_branch(ref_spans))
         .unionByName(_unknown_kind_branch(ref_spans))
         .unionByName(_sentinel_branch(documents_in))
@@ -676,30 +647,16 @@ def extract(
 # --------------------------------------------------------------- metrics
 
 
-def metrics_for(extracted: DataFrame, run_id: str | None = None,
-                input_snapshot: str | None = None) -> DataFrame:
-    """Per-partition lineage + metrics rows (north rule; FIXTURES.md §5).
-    Pure JVM aggregation over the extracted frame."""
-    run_id = run_id or uuid.uuid4().hex[:12]
-    return (
-        extracted.withColumn("partition_id", F.spark_partition_id())
-        .groupBy("partition_id")
-        .agg(
-            F.count("*").alias("docs_processed"),
-            F.sum(F.when(F.col("error").isNotNull(), 1).otherwise(0)).alias(
-                "parse_failures"),
-            F.sum(F.size("spans")).alias("span_count"),
-        )
-        .select(
-            F.lit(run_id).alias("run_id"),
-            "partition_id",
-            "docs_processed",
-            "parse_failures",
-            "span_count",
-            F.lit(0).cast("long").alias("elapsed_ms"),
-            F.lit(input_snapshot).alias("input_snapshot"),
-        )
-    )
+def _run_counters() -> list[F.Column]:
+    """The run-level counters, as aggregate columns over extracted
+    rows: the run's Observation and its per-partition metrics rows
+    both aggregate these."""
+    return [
+        F.count(F.lit(1)).alias("docs_processed"),
+        F.sum(F.when(F.col("error").isNotNull(), 1).otherwise(0)).alias(
+            "parse_failures"),
+        F.sum(F.size("spans")).alias("span_count"),
+    ]
 
 
 # ------------------------------------------------------------ resumable
@@ -783,8 +740,13 @@ def run_resumable(
 
     **extract_kwargs forward to extract(): pdf_blobs / doc_blobs
     (docx/odt/epub/rtf containers) / media_blobs + ocr_model /
-    table_mode / persist_spans — resumability covers every branch, not
-    just the text/html/pdf core.
+    table_mode — resumability covers every branch, not just the
+    text/html/pdf core.
+
+    Loss safety: the committed snapshot is the resume point.  Inside a
+    run, operator materializations follow the session policy
+    (session.checkpoint / session.pin): set the session checkpoint dir
+    for reliable, executor-loss-safe materialization.
     """
     from pyspark.sql import Observation
 
@@ -818,13 +780,7 @@ def run_resumable(
         extract(spark, todo, pdf_elements, parallelism, max_pages=max_pages,
                 **extract_kwargs)
         .withColumn("partition_id", F.spark_partition_id())
-        .observe(
-            obs,
-            F.count(F.lit(1)).alias("docs_processed"),
-            F.sum(F.when(F.col("error").isNotNull(), 1).otherwise(0)).alias(
-                "parse_failures"),
-            F.sum(F.size("spans")).alias("span_count"),
-        )
+        .observe(obs, *_run_counters())
     )
     extracted.write.mode("append").parquet(run_path)
     elapsed_ms = int((time.monotonic() - t0) * 1000)
@@ -837,12 +793,7 @@ def run_resumable(
         m = (
             spark.read.parquet(run_path)
             .groupBy("partition_id")
-            .agg(
-                F.count("*").alias("docs_processed"),
-                F.sum(F.when(F.col("error").isNotNull(), 1).otherwise(0)).alias(
-                    "parse_failures"),
-                F.sum(F.size("spans")).alias("span_count"),
-            )
+            .agg(*_run_counters())
             .select(
                 F.lit(run_id).alias("run_id"),
                 "partition_id",
@@ -955,8 +906,7 @@ def pdf_media_blobs(pdf_blobs: DataFrame) -> DataFrame:
 
 def ingest_blobs(spark: SparkSession, blobs: DataFrame,
                  ref_col: str = "ref",
-                 content_col: str = "content",
-                 persist: bool = True) -> dict:
+                 content_col: str = "content") -> dict:
     """Raw (ref, content) blobs -> routed extract() inputs — the
     reference's Document(source=...) experience (document.py:66-113:
     magic/type detection chooses the pipeline) over a distributed blob
@@ -976,15 +926,15 @@ def ingest_blobs(spark: SparkSession, blobs: DataFrame,
     the Arrow probe kernel, and only their (ref, kind) pairs join
     back, so the corpus-sized binary column never re-shuffles.
 
-    persist=True (default) caches the routed (ref, content, in_kind)
-    frame (MEMORY_AND_DISK): the three returned outputs feed 4-5
-    extract() branches, and WITHOUT the cache every branch re-scans
-    and re-probes the raw source — 29.3 -> 22.3 s on the 3000-file
-    mixed-directory bench (BASELINE.md).  At cluster scale
-    prefer materializing the routed frame to parquet once and running
-    extract() from that (the spark-submit job's two-step shape);
-    persist=False opts out when the caller manages its own
-    materialization."""
+    The routed (ref, content, in_kind) frame is cached
+    (MEMORY_AND_DISK): the three returned outputs feed 4-5 extract()
+    branches, and WITHOUT the cache every branch re-scans and re-probes
+    the raw source — 29.3 -> 22.3 s on the 3000-file mixed-directory
+    bench (BASELINE.md).  It is returned as "routed": release it with
+    `parts["routed"].unpersist()` once the consuming extract() has
+    materialized.  At cluster scale prefer materializing the routed
+    frame to parquet once and running extract() from that (the
+    spark-submit job's two-step shape)."""
     from .dispatch import TYPE_HTML, doc_type_col
 
     b = blobs.select(F.col(ref_col).alias("ref"),
@@ -1050,10 +1000,9 @@ def ingest_blobs(spark: SparkSession, blobs: DataFrame,
             F.col("zip_kind").alias("in_kind"),
         )
     )
-    if persist:
-        from pyspark import StorageLevel
+    from pyspark import StorageLevel
 
-        routed = routed.persist(StorageLevel.MEMORY_AND_DISK)
+    routed = routed.persist(StorageLevel.MEMORY_AND_DISK)
 
     # 'binary' is deliberately NOT in _KNOWN_IN_KINDS: those spans
     # fall through to _unknown_kind_branch's contained error row

@@ -102,23 +102,35 @@ def test_avi_frame_features_distributed_sampling(spark):
 
 
 def test_avi_frame_features_grouped_matches_fanout(spark):
-    """r7 grouped-indexes mode: identical rows to the per-frame fan-out
-    form, and the plan aggregates sampled indexes per media_ref BEFORE
-    the content join (one blob copy decodes all its sampled frames)."""
+    """Grouped-indexes mode: identical rows to the per-frame fan-out
+    decoded directly in one process (parse_avi_meta / parse_avi_frame /
+    luminance_hist16 per sampled index), and the plan aggregates sampled indexes per
+    media_ref BEFORE the content join (one blob copy decodes all its
+    sampled frames)."""
+    from pydoxtools_spark.functions.media import luminance_hist16
     from pydoxtools_spark.operators.multimodal import avi_frame_features
 
     fr = _frames(9, 3, 4)
     data = build_avi(fr, fps=5)
+    bad = b"RIFF\x04\x00\x00\x00AVI "
     media = spark.createDataFrame(
         [("v1", "video", bytearray(data), {"n_frames": "9"}),
-         ("bad", "video", bytearray(b"RIFF\x04\x00\x00\x00AVI "),
-          {"n_frames": "3"})],
+         ("bad", "video", bytearray(bad), {"n_frames": "3"})],
         "media_ref string, media_type string, content binary, "
         "meta map<string,string>")
     grouped = avi_frame_features(media, every_n=3)
-    fanout = avi_frame_features(media, every_n=3, fanout_frames=True)
-    assert sorted(map(tuple, grouped.collect())) == \
-        sorted(map(tuple, fanout.collect()))
+
+    def direct(ref, raw, idx):
+        try:
+            px = parse_avi_frame(raw, idx, parse_avi_meta(raw))
+        except Exception as e:
+            return (ref, idx, None, None, None, f"{type(e).__name__}: {e}")
+        return (ref, idx, px.shape[1], px.shape[0], luminance_hist16(px)[1],
+                None)
+
+    want = [direct("v1", data, i) for i in (0, 3, 6)] + [direct("bad", bad, 0)]
+    assert want[-1][-1] is not None  # the damaged blob is an error row
+    assert sorted(map(tuple, grouped.collect())) == sorted(want)
     # plan assert: the common case ships ONE content copy per blob —
     # the sampled indexes are collected per media_ref below the join
     plan = grouped._jdf.queryExecution().optimizedPlan().toString()

@@ -300,15 +300,6 @@ def test_knn_graph_lsh_no_corpus_broadcast(spark):
         assert (1000 + i, i) in edges
 
 
-def test_connected_components_checkpoint_dir(spark, tmp_path):
-    """Reliable-checkpoint form converges identically."""
-    pairs = spark.createDataFrame([(1, 2), (2, 3), (7, 8)], ["id_a", "id_b"])
-    comp = {r["id"]: r["component"]
-            for r in dedup.connected_components(
-                pairs, checkpoint_dir=str(tmp_path / "ckpt")).collect()}
-    assert comp == {1: 1, 2: 1, 3: 1, 7: 7, 8: 7}
-
-
 def test_extract_schema_microdata_opengraph():
     from pydoxtools_spark.functions.htmlparse import extract_schema
 
@@ -553,26 +544,6 @@ def test_knn_graph_auto_route_spends_no_job(spark):
     assert sorted(map(tuple, g1.collect())) == sorted(map(tuple, g2.collect()))
 
 
-def test_minhash_storage_path_written_table(spark, tmp_path):
-    """storage_path materializes signatures as a written parquet table:
-    the band/verify plan must READ from it (executor-loss-safe form)
-    and produce the same pairs as the localCheckpoint default."""
-    rows = [(1, "the quick brown fox jumps over the lazy dog"),
-            (2, "the quick brown fox jumps over the lazy dog"),
-            (3, "completely different content here entirely")]
-    df = spark.createDataFrame(rows, ["doc_id", "text"])
-    p = str(tmp_path / "sigs.parquet")
-    stored = dedup.minhash_dedup_pairs(
-        df, threshold=0.9, num_perm=16, bands=4, storage_path=p)
-    plan = stored._jdf.queryExecution().executedPlan().toString()
-    # the band/verify stages scan the written signatures table (the
-    # plan string elides long paths, so assert on the parquet scan)
-    assert "ReadSchema: struct<id:bigint,sig:array<bigint>>" in plan
-    default = dedup.minhash_dedup_pairs(df, threshold=0.9, num_perm=16, bands=4)
-    assert sorted(map(tuple, stored.collect())) == \
-        sorted(map(tuple, default.collect()))
-
-
 def test_model_plug_points_batched_contract(spark):
     """Mock deterministic linear-head models dropped into the
     classify/embed HF slots (operators/modelplug.py): batching (one
@@ -792,25 +763,6 @@ def test_unigram_logprob_known_corpus(spark):
     assert out[1] == pytest.approx(t - (2 * math.log(3.0) + math.log(2.0)) / 3)
     assert out[2] == pytest.approx(
         t - (math.log(3.0) + math.log(2.0) + math.log(1.0)) / 3)
-
-
-def test_duplicated_windows_storage_path_written_table(spark, tmp_path):
-    """storage_path materializes window hashes as a written parquet
-    table: both the flag agg and the probe side read it (no recompute),
-    and the intervals match the default recompute form."""
-    shared = " ".join(f"w{i}" for i in range(12))
-    rows = [(1, "pre1 " + shared + " post1"),
-            (2, "different opening words here " + shared),
-            (3, "no overlap with anything at all whatsoever honestly")]
-    df = spark.createDataFrame(rows, ["doc_id", "text"])
-    p = str(tmp_path / "winhash.parquet")
-    stored = dedup.duplicated_window_spans(
-        df, n=8, min_docs=2, storage_path=p)
-    plan = stored._jdf.queryExecution().executedPlan().toString()
-    assert "ReadSchema: struct<id:bigint,s:int,h:string>" in plan
-    default = dedup.duplicated_window_spans(df, n=8, min_docs=2)
-    assert sorted(map(tuple, stored.collect())) == \
-        sorted(map(tuple, default.collect()))
 
 
 def test_drop_duplicated_windows_canonical_keep(spark):

@@ -505,7 +505,7 @@ def test_aes_encrypted_pdfs():
     /Info strings ride the same path; wrong passwords are contained
     errors.  The AES core matches FIPS-197 / SP 800-38A vectors."""
     from pydoxtools_spark.functions.aescore import (
-        aes_encrypt_block, cbc_encrypt)
+        aes_encrypt_block, cbc_decrypt, cbc_encrypt)
 
     pt = bytes.fromhex("00112233445566778899aabbccddeeff")
     assert aes_encrypt_block(
@@ -515,11 +515,19 @@ def test_aes_encrypted_pdfs():
         bytes.fromhex("000102030405060708090a0b0c0d0e0f"
                       "101112131415161718191a1b1c1d1e1f"), pt
     ).hex() == "8ea2b7ca516745bfeafc49904b496089"
+    sp800_38a = (bytes.fromhex("2b7e151628aed2a6abf7158809cf4f3c"),
+                 bytes.fromhex("000102030405060708090a0b0c0d0e0f"))
     assert cbc_encrypt(
-        bytes.fromhex("2b7e151628aed2a6abf7158809cf4f3c"),
-        bytes.fromhex("000102030405060708090a0b0c0d0e0f"),
-        bytes.fromhex("6bc1bee22e409f96e93d7e117393172a"),
+        *sp800_38a, bytes.fromhex("6bc1bee22e409f96e93d7e117393172a"),
     ).hex() == "7649abac8119b246cee98e9b12e9197d"
+    # F.2.2 CBC-AES128.Decrypt, all four blocks (chaining included):
+    # the T-table decrypt's known answer
+    assert cbc_decrypt(*sp800_38a, bytes.fromhex(
+        "7649abac8119b246cee98e9b12e9197d5086cb9b507219ee95db113a917678b2"
+        "73bed6b8e3c1743b7116e69e222295163ff1caa1681fac09120eca307586e1a7"
+    )).hex() == (
+        "6bc1bee22e409f96e93d7e117393172aae2d8a571e03ac9c9eb76fac45af8e51"
+        "30c81c46a35ce411e5fbc1191a0a52eff69f2445df4f9b17ad2b417be66c3710")
 
     base = pdf_elements_from_bytes(build_tiny_pdf(PAGES), "d")
     # AESV2: cheap KDF — exercise several dialect combos

@@ -174,19 +174,6 @@ def test_flagship_plan_has_no_quadratic_joins(spark):
         assert "BroadcastNestedLoopJoin" not in plan, q
 
 
-def test_persist_spans_option_equivalent(spark, corpus):
-    """persist_spans=True (one-scan mode for remote/expensive sources)
-    produces byte-identical output to the default N-scan plan."""
-    docs_df, pdf_df, _exp = corpus
-    a = {r["doc_id"]: r["spans"] for r in
-         extract(spark, docs_df, pdf_df, parallelism=4).collect()}
-    b = {r["doc_id"]: r["spans"] for r in
-         extract(spark, docs_df, pdf_df, parallelism=4,
-                 persist_spans=True).collect()}
-    spark.catalog.clearCache()
-    assert a == b
-
-
 def test_replay_committed_run_id_is_noop_and_keeps_data(spark, corpus,
                                                         tmp_path):
     """Replaying run_resumable with an ALREADY-COMMITTED run_id must be

@@ -139,9 +139,10 @@ def test_ingest_routes_tiff_blobs_to_binary(spark):
                                            byte_order="MM"))),
             ("a.txt", bytearray("II* not a tiff, just text".encode()))]
     blobs = spark.createDataFrame(rows, "ref string, content binary")
-    parts = ingest_blobs(spark, blobs, persist=False)
+    parts = ingest_blobs(spark, blobs)
     spans = {r["doc_id"]: r["spans"] for r in
              parts["documents_in"].collect()}
+    parts["routed"].unpersist()
     assert [s["kind"] for s in spans["t.tif"]] == ["binary"]
     assert [s["kind"] for s in spans["m.tif"]] == ["binary"]
     assert [s["kind"] for s in spans["a.txt"]] == ["text"]

@@ -120,9 +120,10 @@ def test_wet_style_segment_through_ingest(spark):
         "path string, content binary")
     docs = warc_records(blobs).filter("warc_type = 'conversion'").select(
         F.col("target_uri").alias("ref"), "content")
-    parts = ingest_blobs(spark, docs, persist=False)
+    parts = ingest_blobs(spark, docs)
     spans = {r["doc_id"]: r["spans"] for r in
              parts["documents_in"].collect()}
+    parts["routed"].unpersist()
     assert len(spans) == 5
     for i in range(5):
         s = spans[f"http://ex.com/{i}"]

@@ -79,9 +79,10 @@ def test_zip_archive_through_ingest(spark):
                                   "path string, content binary")
     docs = zip_members(blobs).filter("error IS NULL").select(
         F.concat_ws("#", "ref", "member").alias("ref"), "content")
-    parts = ingest_blobs(spark, docs, persist=False)
+    parts = ingest_blobs(spark, docs)
     spans = {r["doc_id"]: r["spans"] for r in
              parts["documents_in"].collect()}
+    parts["routed"].unpersist()
     assert [s["kind"] for s in spans["arc.zip#doc1.txt"]] == ["text"]
     assert spans["arc.zip#doc1.txt"][0]["text"] == "plain body one"
     kinds = {s["kind"] for s in spans["arc.zip#doc2.html"]}
