@@ -109,7 +109,7 @@ def _exploded_spans(spark: SparkSession, docs_in: DataFrame) -> DataFrame:
     # parallelism 32 (the bench host's core count): ABAB-measured ~0.4 s
     # faster than 8 on the 5000-doc queries — kernel stages get full
     # width (r7)
-    out = extract(spark, docs_in, None, parallelism=32)
+    out = extract(spark, docs_in, None)
     return out.select(
         F.col("doc_id").cast("bigint").alias("doc_id"),
         F.posexplode("spans").alias("ord", "span"),
@@ -260,7 +260,7 @@ def q_pdf_bytes(spark: SparkSession, sf_dir: str) -> DataFrame:
             yield pd.DataFrame(rows, columns=["ref", "content"])
 
     blobs = d.repartition(32).mapInPandas(gen_blobs, "ref string, content binary")
-    out = _extract(spark, docs_in, None, parallelism=32, pdf_blobs=blobs)
+    out = _extract(spark, docs_in, None, pdf_blobs=blobs)
     return out.select(
         F.col("doc_id").cast("bigint").alias("doc_id"),
         F.posexplode("spans").alias("ord", "span"),
@@ -417,8 +417,7 @@ def q_pdf_table_chars(spark: SparkSession, sf_dir: str) -> DataFrame:
     # documents.parquet can be a single file -> repartition so blob
     # generation and the parse kernel parallelize
     blobs = d.repartition(32).mapInPandas(gen_blobs, "ref string, content binary")
-    out = _extract(spark, docs_in, None, parallelism=32, pdf_blobs=blobs,
-                   table_mode="chars")
+    out = _extract(spark, docs_in, None, pdf_blobs=blobs, table_mode="chars")
     return out.select(
         F.col("doc_id").cast("bigint").alias("doc_id"),
         F.posexplode("spans").alias("ord", "span"),
@@ -469,7 +468,7 @@ def q_ocr_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
         return [read_text_bmp_pixels(im) for im in images]
 
     blobs = d.repartition(32).mapInPandas(gen_blobs, "ref string, content binary")
-    out = _extract(spark, docs_in, None, parallelism=32,
+    out = _extract(spark, docs_in, None,
                    media_blobs=blobs, ocr_model=mock_model)
     return out.select(
         F.col("doc_id").cast("bigint").alias("doc_id"),
@@ -527,7 +526,7 @@ def q_docx_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
             yield pd.DataFrame(rows, columns=["ref", "content"])
 
     blobs = d.repartition(32).mapInPandas(gen_blobs, "ref string, content binary")
-    out = _extract(spark, docs_in, None, parallelism=32, doc_blobs=blobs)
+    out = _extract(spark, docs_in, None, doc_blobs=blobs)
     return out.select(
         F.col("doc_id").cast("bigint").alias("doc_id"),
         F.posexplode("spans").alias("ord", "span"),
@@ -582,7 +581,7 @@ def q_odt_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
             yield pd.DataFrame(rows, columns=["ref", "content"])
 
     blobs = d.repartition(32).mapInPandas(gen_blobs, "ref string, content binary")
-    out = _extract(spark, docs_in, None, parallelism=32, doc_blobs=blobs)
+    out = _extract(spark, docs_in, None, doc_blobs=blobs)
     return out.select(
         F.col("doc_id").cast("bigint").alias("doc_id"),
         F.posexplode("spans").alias("ord", "span"),
@@ -638,7 +637,7 @@ def q_epub_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
             yield pd.DataFrame(rows, columns=["ref", "content"])
 
     blobs = d.repartition(32).mapInPandas(gen_blobs, "ref string, content binary")
-    out = _extract(spark, docs_in, None, parallelism=32, doc_blobs=blobs)
+    out = _extract(spark, docs_in, None, doc_blobs=blobs)
     return out.select(
         F.col("doc_id").cast("bigint").alias("doc_id"),
         F.posexplode("spans").alias("ord", "span"),
@@ -724,7 +723,7 @@ def q_rtf_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
             yield pd.DataFrame(rows, columns=["ref", "content"])
 
     blobs = d.repartition(32).mapInPandas(gen_blobs, "ref string, content binary")
-    out = _extract(spark, docs_in, None, parallelism=32, doc_blobs=blobs)
+    out = _extract(spark, docs_in, None, doc_blobs=blobs)
     return out.select(
         F.col("doc_id").cast("bigint").alias("doc_id"),
         F.posexplode("spans").alias("ord", "span"),
@@ -1307,7 +1306,7 @@ def q_token_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_full_text(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Extraction + full_text reassembly (reference document.py:227-229)."""
     docs_in = _as_documents_in(_docs(spark, sf_dir), _html_payload_col(), "html")
-    extracted = extract(spark, docs_in, None, parallelism=32)
+    extracted = extract(spark, docs_in, None)
     return textops.full_text(extracted).select(
         F.col("doc_id").cast("bigint").alias("doc_id"), "full_text"
     )
@@ -1888,7 +1887,7 @@ def q_page_template(spark: SparkSession, sf_dir: str) -> DataFrame:
     extracted span stream rendered with {Kind_i} placeholders for
     excluded kinds."""
     docs_in = _as_documents_in(_docs(spark, sf_dir), _html_payload_col(), "html")
-    extracted = extract(spark, docs_in, None, parallelism=32)
+    extracted = extract(spark, docs_in, None)
     return templates.span_template(extracted).select(
         F.col("doc_id").cast("bigint").alias("doc_id"), "template"
     )

@@ -410,9 +410,9 @@ def quality_filter(
     reasons is the comma-joined failed-rule list in fixed order, ''
     for keepers, so downstream metrics can group by failure mode.
 
-    Scale shape: one projection (words/ratio exprs in codegen) + one
-    per-doc line hash-agg + one doc-keyed join — nothing cross-doc, so
-    the op scales like any per-doc map; at 100 TB the reasons column
+    Scale shape: one per-doc projection, no shuffle — dup_line_frac is
+    (n - distinct) / n over the doc's trimmed non-empty line array, so
+    the text lines never leave their row; at 100 TB the reasons column
     doubles as the per-rule drop-rate metric source."""
     from .textstats import a_d_ratio, num_words
 
@@ -420,26 +420,21 @@ def quality_filter(
     # coalesce every rule's WHEN evaluates NULL -> no reason fires and
     # a null doc silently KEEPS (caught by the unit test)
     t = F.coalesce(F.col(text_col), F.lit(""))
+    # the line array is built once in this inner projection: the outer
+    # one reads it three times (CLAUDE.md trap 1)
     base = df.select(
         F.col(id_col).alias("id"),
         num_words(t).alias("n_words"),
         F.round(a_d_ratio(t), 4).alias("ad_ratio"),
+        F.filter(F.transform(F.split(t, "\n"), lambda line: F.trim(line)),
+                 lambda line: line != "").alias("lines"),
     )
-    lines = df.select(
-        F.col(id_col).alias("id"),
-        F.explode(F.split(t, "\n")).alias("l"),
-    ).select("id", F.trim("l").alias("line")).filter(F.col("line") != "")
-    dup = (
-        lines.groupBy("id", "line").agg(F.count("*").alias("cnt"))
-        .groupBy("id")
-        .agg(
-            F.round(
-                (F.sum("cnt") - F.count("*")) / F.sum("cnt"), 4
-            ).alias("dup_line_frac")
-        )
+    n = F.size("lines")
+    j = base.select(
+        "id", "n_words", "ad_ratio",
+        F.when(n > 0, F.round((n - F.size(F.array_distinct("lines"))) / n, 4))
+        .otherwise(F.lit(0.0)).alias("dup_line_frac"),
     )
-    j = base.join(dup, "id", "left").withColumn(
-        "dup_line_frac", F.coalesce("dup_line_frac", F.lit(0.0)))
     reasons = F.concat_ws(
         ",",
         F.when(F.col("n_words") < min_words, "too_short"),

@@ -14,11 +14,13 @@ Scale notes (100 TB):
     map-side-combinable groupBy; no skew (md5 keys uniform).
   - minhash signatures: one md5 per shingle through a Generate
     boundary, then num_perm affine permutations as map-side-combinable
-    MIN aggregates — the only shuffle carries (id, num_perm longs) per
-    doc; the LSH bucket join shuffles just (id, band, band_sig).
-  - LSH bucket join: self-join on (band, band_sig); bucket sizes are
-    bounded because identical band signatures imply near-duplicate
-    docs; AQE skew-join splits pathological buckets.
+    MIN aggregates — that shuffle carries (id, num_perm longs) per doc;
+    the signatures are materialized at full shuffle width.
+  - LSH bucket join: self-join on (band, band_sig) with the signatures
+    on its rows, so the verify is a filter inside the join and only
+    verified pairs are deduplicated.  Bucket sizes are bounded because
+    identical band signatures imply near-duplicate docs; AQE skew-join
+    splits pathological buckets.
   - ngram-jaccard: inverted-index join on shingle hash, count common
     shingles, |A∪B| = |A|+|B|-common.  Quadratic only within a
     posting list; frequent-shingle cap bounds it (DF cap like a
@@ -214,50 +216,42 @@ def minhash_dedup_pairs(
 ) -> DataFrame:
     """Candidate near-duplicate pairs via MinHash LSH, verified by
     estimated Jaccard = matching signature positions / num_perm.
-    Returns (id_a, id_b, est_jaccard) with id_a < id_b."""
-    # Stage 1: materialize signatures ONCE (downstream uses them three
-    # times: band explode + two verify joins).
+    Returns (id_a, id_b, est_jaccard) with id_a < id_b: every pair that
+    shares >= 1 band and has est_jaccard >= threshold."""
+    # spread by id to full width: AQE lands the byte-light aggregate on
+    # 1 partition, and the band explode + verify inherit it (CLAUDE.md
+    # trap 7)
+    width = int(df.sparkSession.conf.get("spark.sql.shuffle.partitions"))
     sigs = checkpoint(
-        minhash_signatures_fast(df, text_col, id_col, num_perm=num_perm))
+        minhash_signatures_fast(df, text_col, id_col, num_perm=num_perm)
+        .repartition(width, "id"))
 
-    # Stage 2: LSH band join on ids only (narrow shuffle rows)
     banded = sigs.select(
-        "id", F.posexplode(minhash_bands(F.col("sig"), bands, num_perm)).alias(
-            "band", "band_sig")
+        "id", "sig",
+        F.posexplode(minhash_bands(F.col("sig"), bands, num_perm)).alias(
+            "band", "band_sig"),
     )
     a, b = banded.alias("a"), banded.alias("b")
-    cand = (
+    matches = F.filter(
+        F.zip_with(F.col("a.sig"), F.col("b.sig"), lambda x, y: x == y),
+        lambda m: m,
+    )
+    return (
         a.join(
             b,
             (F.col("a.band") == F.col("b.band"))
             & (F.col("a.band_sig") == F.col("b.band_sig"))
             & (F.col("a.id") < F.col("b.id")),
         )
-        .select(F.col("a.id").alias("id_a"), F.col("b.id").alias("id_b"))
+        .select(
+            F.col("a.id").alias("id_a"),
+            F.col("b.id").alias("id_b"),
+            (F.size(matches) / F.lit(num_perm)).alias("est_jaccard"),
+        )
+        .filter(F.col("est_jaccard") >= threshold)
+        # one row per shared band, all with the same estimate
         .dropDuplicates(["id_a", "id_b"])
     )
-
-    # Stage 3: verify candidates against the materialized signatures
-    sa = sigs.select(F.col("id").alias("id_a"), F.col("sig").alias("sig_a"))
-    sb = sigs.select(F.col("id").alias("id_b"), F.col("sig").alias("sig_b"))
-    est = (
-        cand.join(sa, "id_a")
-        .join(sb, "id_b")
-        .select(
-            "id_a",
-            "id_b",
-            (
-                F.size(
-                    F.filter(
-                        F.zip_with(F.col("sig_a"), F.col("sig_b"), lambda x, y: x == y),
-                        lambda m: m,
-                    )
-                )
-                / F.lit(num_perm)
-            ).alias("est_jaccard"),
-        )
-    )
-    return est.filter(F.col("est_jaccard") >= threshold)
 
 
 # --------------------------------------------------------------- simhash
@@ -374,8 +368,10 @@ def connected_components(pairs: DataFrame, id_a: str = "id_a",
     """Near-duplicate pairs -> canonical groups via iterative min-label
     propagation: each node adopts the smallest id reachable through its
     edges.  Returns (id, component) where component = min id of the
-    group.  Dedup graphs are unions of near-cliques (tiny diameter), so
-    2-3 rounds converge in practice; max_iter is the hard budget.
+    group.  Labels are seeded from the first hook (min over self and
+    neighbours).  Dedup graphs are unions of near-cliques (tiny
+    diameter), so 1-2 rounds converge in practice; max_iter is the hard
+    budget, and labels still changing after it raise RuntimeError.
 
     Scale notes (100 TB):
       - ONE materializing action per round — the checkpoint.  The
@@ -389,31 +385,29 @@ def connected_components(pairs: DataFrame, id_a: str = "id_a",
     from pyspark.sql import Observation
 
     edges = checkpoint(
-        pairs.select(F.col(id_a).alias("a"), F.col(id_b).alias("b"))
-        .unionByName(pairs.select(F.col(id_b).alias("a"), F.col(id_a).alias("b")))
-        .distinct()
+        pairs.select(F.explode(F.array(
+            F.struct(F.col(id_a).alias("a"), F.col(id_b).alias("b")),
+            F.struct(F.col(id_b).alias("a"), F.col(id_a).alias("b")),
+        )).alias("e")).select("e.a", "e.b")
     )
     labels = checkpoint(
-        edges.select(F.col("a").alias("id"))
-        .distinct()
-        .withColumn("component", F.col("id"))
+        edges.groupBy("a")
+        .agg(F.least(F.col("a"), F.min("b")).alias("component"))
+        .withColumnRenamed("a", "id")
     )
     for i in range(max_iter):
         # each node proposes its current component to its neighbors
         prop = (
             edges.join(labels, edges.a == labels.id)
-            .select(F.col("b").alias("id"), "component")
-            .groupBy("id")
+            .groupBy(F.col("b").alias("id"))
             .agg(F.min("component").alias("n_comp"))
         )
         obs = Observation(f"cc_round_{i}")
-        new_labels = checkpoint(
-            labels.join(prop, "id", "left")
+        labels = checkpoint(
+            labels.join(prop, "id")
             .select(
                 "id",
-                F.least(
-                    F.col("component"), F.coalesce("n_comp", F.col("component"))
-                ).alias("new_component"),
+                F.least("component", "n_comp").alias("new_component"),
                 F.col("component").alias("old_component"),
             )
             .observe(
@@ -424,10 +418,11 @@ def connected_components(pairs: DataFrame, id_a: str = "id_a",
             )
             .select("id", F.col("new_component").alias("component"))
         )
-        labels = new_labels
         if int(obs.get["changed"] or 0) == 0:
-            break
-    return labels
+            return labels
+    raise RuntimeError(
+        f"connected_components: labels still changing after max_iter="
+        f"{max_iter} rounds; raise the round budget")
 
 
 def dedup_keep_canonical(df: DataFrame, pairs: DataFrame,

@@ -500,11 +500,16 @@ def _image_branch(spans: DataFrame) -> DataFrame:
 # ------------------------------------------------------------- assembly
 
 
+def _width(spark: SparkSession, parallelism: int | None) -> int:
+    """parallelism, else the session's spark.sql.shuffle.partitions."""
+    return parallelism or int(spark.conf.get("spark.sql.shuffle.partitions"))
+
+
 def extract(
     spark: SparkSession,
     documents_in: DataFrame,
     pdf_elements: DataFrame | None = None,
-    parallelism: int = 32,
+    parallelism: int | None = None,
     page_numbers: list[int] | None = None,
     max_pages: int | None = None,
     table_mode: str = "grid",
@@ -526,7 +531,10 @@ def extract(
 
     table_mode: "grid" (element tables, relational cell assignment) or
     "chars" (full-fidelity word-rebuild/sweep-line/spanning-cell path —
-    requires type='Char' rows; see operators/pdf_relational.py)."""
+    requires type='Char' rows; see operators/pdf_relational.py).
+
+    parallelism: the span repartition width; None = the session's
+    spark.sql.shuffle.partitions."""
     # Statically-absent PDF input -> the pdf branch is skipped outright
     # (r7).  With the old empty-DataFrame default the branch still built
     # the FULL pdf_layout_items machinery over zero rows — its persist()
@@ -564,7 +572,7 @@ def extract(
     # 100 TB the mitigation is an explicit schema-subset read for the
     # ref-only branches (Iceberg column projection), not a plan change.
     spans = explode_input_spans(documents_in).repartition(
-        parallelism, "doc_id", "span_idx"
+        _width(spark, parallelism), "doc_id", "span_idx"
     )
     # Ref-only branches (pdf/image/docx/ocr) never touch span.text:
     # they read through the column-pruned ref explode (scan carries
@@ -713,7 +721,7 @@ def run_resumable(
     pdf_elements: DataFrame | None,
     out_dir: str,
     run_id: str | None = None,
-    parallelism: int = 32,
+    parallelism: int | None = None,
     max_pages: int | None = None,
     **extract_kwargs,
 ) -> dict:
@@ -1046,7 +1054,7 @@ def ingest_blobs(spark: SparkSession, blobs: DataFrame,
 
 
 def extract_files(spark: SparkSession, directory: str,
-                  wildcard: str = "*", parallelism: int = 32,
+                  wildcard: str = "*", parallelism: int | None = None,
                   **extract_kwargs) -> DataFrame:
     """One call from a directory of mixed files to extracted spans:
     binaryFile scan -> format probe -> routed extract().  The doc_id
@@ -1060,7 +1068,7 @@ def extract_files(spark: SparkSession, directory: str,
     # to the requested parallelism so downstream kernels get balanced,
     # fewer, fuller tasks (per-task overhead dominated the 3000-file
     # bench otherwise)
-    blobs = blobs.repartition(parallelism)
+    blobs = blobs.repartition(_width(spark, parallelism))
     parts = ingest_blobs(spark, blobs)
     return extract(
         spark, parts["documents_in"], None, parallelism,

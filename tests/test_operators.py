@@ -1,6 +1,8 @@
 """Operator-level tests: reference-derived invariants (FIXTURES.md §7)
 plus the training-data ops (dedup/similarity/multimodal/templates)."""
 
+import re
+
 import pandas as pd
 import pytest
 from pyspark.sql import functions as F
@@ -277,6 +279,63 @@ def test_connected_components_and_canonical_dedup(spark):
     kept = sorted(r["doc_id"]
                   for r in dedup.dedup_keep_canonical(docs, pairs).collect())
     assert kept == [1, 7, 9]
+
+
+def _union_find_components(edges):
+    parent = {}
+
+    def find(x):
+        parent.setdefault(x, x)
+        while parent[x] != x:
+            parent[x] = parent[parent[x]]
+            x = parent[x]
+        return x
+
+    for a, b in edges:
+        ra, rb = find(a), find(b)
+        parent[max(ra, rb)] = min(ra, rb)
+    return {x: find(x) for x in parent}
+
+
+_CC_GRAPHS = {
+    "ordered_chain_12": [(i, i + 1) for i in range(1, 12)],
+    "star": [(0, i) for i in range(1, 15)] + [(15, 0)],
+    "clique_union": [(c + i, c + j) for c in (0, 100, 200)
+                     for i in range(10) for j in range(i + 1, 10)],
+    "two_chains": [(i, i + 1) for i in range(50, 56)]
+                  + [(i + 1, i) for i in range(20, 27)],
+}
+
+
+@pytest.mark.parametrize("graph", sorted(_CC_GRAPHS))
+def test_connected_components_matches_union_find(spark, graph):
+    edges = _CC_GRAPHS[graph]
+    pairs = spark.createDataFrame(edges, ["id_a", "id_b"])
+    got = {r["id"]: r["component"]
+           for r in dedup.connected_components(pairs).collect()}
+    assert got == _union_find_components(edges)
+
+
+def test_connected_components_raises_when_budget_exhausted(spark):
+    """A long chain must not come back as partial labels."""
+    pairs = spark.createDataFrame([(i, i + 1) for i in range(39)],
+                                  ["id_a", "id_b"])
+    with pytest.raises(RuntimeError, match="max_iter=2"):
+        dedup.connected_components(pairs, max_iter=2)
+
+
+def test_minhash_pairs_verify_inside_band_join(spark):
+    """Above the signature checkpoint the only join is the band
+    self-join: the verify reads the signatures carried on its rows."""
+    text = "the quick brown fox jumps over the lazy dog near the river bank"
+    df = spark.createDataFrame(
+        [(1, text), (2, text), (3, "completely different content here")],
+        ["doc_id", "text"])
+    pairs = dedup.minhash_dedup_pairs(df, threshold=0.5, num_perm=16, bands=8)
+    plan = pairs._jdf.queryExecution().optimizedPlan().toString()
+    assert "LogicalRDD" in plan, plan  # the checkpointed signatures
+    assert len(re.findall(r"\bJoin ", plan)) == 1, plan
+    assert sorted(map(tuple, pairs.select("id_a", "id_b").collect())) == [(1, 2)]
 
 
 def test_knn_graph_lsh_no_corpus_broadcast(spark):
@@ -1027,6 +1086,23 @@ def test_quality_filter_reason_trail(spark):
     assert out[4]["reasons"] == "repetitive_lines"
     assert out[5]["reasons"] == "too_short,low_alpha_ratio"
     assert out[6]["reasons"].startswith("too_short") and not out[6]["keep"]
+
+
+def test_quality_filter_is_one_projection(spark):
+    """dup_line_frac is computed on the row: the executed plan neither
+    shuffles the text nor aggregates its lines."""
+    from pydoxtools_spark.operators import curation
+
+    df = spark.createDataFrame(
+        [(1, "a\n a \n\nb\n  \nb"), (2, None), (3, "x\ny")],
+        "doc_id int, text string")
+    out = curation.quality_filter(df)
+    plan = out._jdf.queryExecution().executedPlan().toString()
+    assert "Exchange" not in plan and "HashAggregate" not in plan, plan
+    # 4 non-empty trimmed lines, 2 distinct; NULL text and no
+    # repeats read 0
+    frac = {r["doc_id"]: r["dup_line_frac"] for r in out.collect()}
+    assert frac == {1: 0.5, 2: 0.0, 3: 0.0}
 
 
 def test_lang_id_eleven_languages_spark_duckdb_agree(spark):
