@@ -106,9 +106,6 @@ def _as_documents_in(df: DataFrame, payload: F.Column, kind: str) -> DataFrame:
 
 def _exploded_spans(spark: SparkSession, docs_in: DataFrame) -> DataFrame:
     _ensure_pkg(spark)
-    # parallelism 32 (the bench host's core count): ABAB-measured ~0.4 s
-    # faster than 8 on the 5000-doc queries — kernel stages get full
-    # width (r7)
     out = extract(spark, docs_in, None)
     return out.select(
         F.col("doc_id").cast("bigint").alias("doc_id"),

@@ -420,8 +420,7 @@ def quality_filter(
     # coalesce every rule's WHEN evaluates NULL -> no reason fires and
     # a null doc silently KEEPS (caught by the unit test)
     t = F.coalesce(F.col(text_col), F.lit(""))
-    # the line array is built once in this inner projection: the outer
-    # one reads it three times (CLAUDE.md trap 1)
+    # lines built once here: the outer select reads them 3x (trap 1)
     base = df.select(
         F.col(id_col).alias("id"),
         num_words(t).alias("n_words"),

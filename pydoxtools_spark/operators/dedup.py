@@ -16,11 +16,11 @@ Scale notes (100 TB):
     boundary, then num_perm affine permutations as map-side-combinable
     MIN aggregates — that shuffle carries (id, num_perm longs) per doc;
     the signatures are materialized at full shuffle width.
-  - LSH bucket join: self-join on (band, band_sig) with the signatures
-    on its rows, so the verify is a filter inside the join and only
-    verified pairs are deduplicated.  Bucket sizes are bounded because
-    identical band signatures imply near-duplicate docs; AQE skew-join
-    splits pathological buckets.
+  - LSH bucket join: self-join on narrow (id, band, band_sig) rows;
+    the verify joins then scale with candidate pairs per document,
+    small at realistic near-dup rates.  Bucket sizes are bounded
+    because identical band signatures imply near-duplicate docs; AQE
+    skew-join splits pathological buckets.
   - ngram-jaccard: inverted-index join on shingle hash, count common
     shingles, |A∪B| = |A|+|B|-common.  Quadratic only within a
     posting list; frequent-shingle cap bounds it (DF cap like a
@@ -38,7 +38,7 @@ from ..constants import (
     MINHASH_SHINGLE_K,
     SIMHASH_BITS,
 )
-from ..session import checkpoint
+from ..session import checkpoint, width
 
 
 def _norm(col: Column) -> Column:
@@ -216,41 +216,40 @@ def minhash_dedup_pairs(
 ) -> DataFrame:
     """Candidate near-duplicate pairs via MinHash LSH, verified by
     estimated Jaccard = matching signature positions / num_perm.
-    Returns (id_a, id_b, est_jaccard) with id_a < id_b: every pair that
-    shares >= 1 band and has est_jaccard >= threshold."""
-    # spread by id to full width: AQE lands the byte-light aggregate on
-    # 1 partition, and the band explode + verify inherit it (CLAUDE.md
-    # trap 7)
-    width = int(df.sparkSession.conf.get("spark.sql.shuffle.partitions"))
+    Returns (id_a, id_b, est_jaccard) with id_a < id_b."""
+    # Stage 1: materialize signatures ONCE (downstream uses them three
+    # times: band explode + two verify joins) at full width (trap 7)
     sigs = checkpoint(
         minhash_signatures_fast(df, text_col, id_col, num_perm=num_perm)
-        .repartition(width, "id"))
+        .repartition(width(df.sparkSession), "id"))
 
+    # Stage 2: LSH band join on ids only (narrow shuffle rows)
     banded = sigs.select(
-        "id", "sig",
-        F.posexplode(minhash_bands(F.col("sig"), bands, num_perm)).alias(
-            "band", "band_sig"),
+        "id", F.posexplode(minhash_bands(F.col("sig"), bands, num_perm)).alias(
+            "band", "band_sig")
     )
     a, b = banded.alias("a"), banded.alias("b")
-    matches = F.filter(
-        F.zip_with(F.col("a.sig"), F.col("b.sig"), lambda x, y: x == y),
-        lambda m: m,
-    )
-    return (
+    cand = (
         a.join(
             b,
             (F.col("a.band") == F.col("b.band"))
             & (F.col("a.band_sig") == F.col("b.band_sig"))
             & (F.col("a.id") < F.col("b.id")),
         )
-        .select(
-            F.col("a.id").alias("id_a"),
-            F.col("b.id").alias("id_b"),
-            (F.size(matches) / F.lit(num_perm)).alias("est_jaccard"),
-        )
-        .filter(F.col("est_jaccard") >= threshold)
-        # one row per shared band, all with the same estimate
+        .select(F.col("a.id").alias("id_a"), F.col("b.id").alias("id_b"))
         .dropDuplicates(["id_a", "id_b"])
+    )
+
+    # Stage 3: verify candidates against the materialized signatures
+    sa = sigs.select(F.col("id").alias("id_a"), F.col("sig").alias("sig_a"))
+    sb = sigs.select(F.col("id").alias("id_b"), F.col("sig").alias("sig_b"))
+    same = F.filter(F.zip_with("sig_a", "sig_b", lambda x, y: x == y),
+                    lambda m: m)
+    return (
+        cand.join(sa, "id_a").join(sb, "id_b")
+        .select("id_a", "id_b",
+                (F.size(same) / F.lit(num_perm)).alias("est_jaccard"))
+        .filter(F.col("est_jaccard") >= threshold)
     )
 
 
@@ -364,14 +363,14 @@ def ngram_jaccard_pairs(
 
 def connected_components(pairs: DataFrame, id_a: str = "id_a",
                          id_b: str = "id_b",
-                         max_iter: int = 20) -> DataFrame:
+                         max_iter: int | None = None) -> DataFrame:
     """Near-duplicate pairs -> canonical groups via iterative min-label
     propagation: each node adopts the smallest id reachable through its
     edges.  Returns (id, component) where component = min id of the
-    group.  Labels are seeded from the first hook (min over self and
-    neighbours).  Dedup graphs are unions of near-cliques (tiny
-    diameter), so 1-2 rounds converge in practice; max_iter is the hard
-    budget, and labels still changing after it raise RuntimeError.
+    group.  Labels are seeded from the first hook, so a graph of
+    diameter d takes d rounds: 1-2 for near-cliques, d for a revision
+    chain.  max_iter None = the node count, which always converges; an
+    explicit budget that ends with labels changing raises RuntimeError.
 
     Scale notes (100 TB):
       - ONE materializing action per round — the checkpoint.  The
@@ -382,6 +381,8 @@ def connected_components(pairs: DataFrame, id_a: str = "id_a",
         object store, survives executor loss) when the session has a
         checkpoint dir, else the single-job localCheckpoint form.
     """
+    import itertools
+
     from pyspark.sql import Observation
 
     edges = checkpoint(
@@ -390,12 +391,13 @@ def connected_components(pairs: DataFrame, id_a: str = "id_a",
             F.struct(F.col(id_b).alias("a"), F.col(id_a).alias("b")),
         )).alias("e")).select("e.a", "e.b")
     )
-    labels = checkpoint(
+    # seed: read twice in round 0 (one reused exchange), then checkpointed
+    labels = (
         edges.groupBy("a")
         .agg(F.least(F.col("a"), F.min("b")).alias("component"))
         .withColumnRenamed("a", "id")
     )
-    for i in range(max_iter):
+    for i in itertools.count(1):
         # each node proposes its current component to its neighbors
         prop = (
             edges.join(labels, edges.a == labels.id)
@@ -415,20 +417,23 @@ def connected_components(pairs: DataFrame, id_a: str = "id_a",
                 F.sum(
                     (F.col("new_component") != F.col("old_component")).cast("int")
                 ).alias("changed"),
+                F.count(F.lit(1)).alias("nodes"),
             )
             .select("id", F.col("new_component").alias("component"))
         )
-        if int(obs.get["changed"] or 0) == 0:
+        seen = obs.get
+        if int(seen["changed"] or 0) == 0:
             return labels
-    raise RuntimeError(
-        f"connected_components: labels still changing after max_iter="
-        f"{max_iter} rounds; raise the round budget")
+        if i >= (seen["nodes"] if max_iter is None else max_iter):
+            raise RuntimeError(f"connected_components: labels still changing"
+                               f" after max_iter={i} rounds")
 
 
 def dedup_keep_canonical(df: DataFrame, pairs: DataFrame,
                          id_col: str = "doc_id") -> DataFrame:
     """Drop near-duplicates: keep only the minimum-id member of each
-    connected component (plus all docs with no near-dup edges)."""
+    connected component (plus all docs with no near-dup edges).  CC runs
+    to convergence: a long revision chain costs rounds, not an error."""
     comp = connected_components(pairs)
     losers = comp.filter(F.col("id") != F.col("component")).select(
         F.col("id").alias(id_col))

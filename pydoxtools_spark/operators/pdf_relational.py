@@ -49,6 +49,7 @@ from ..constants import (
     VERTICAL_ORIENTATION,
 )
 from ..functions.spantext import CELL_SEP
+from ..session import width
 
 # item rows joined back into the extraction pipeline:
 # (ref, p_num, y0, x0, kind, text, media_ref)
@@ -376,9 +377,8 @@ def pdf_layout_items(pdf_elements: DataFrame,
     # mapInPandas walk (see _run_walk_by_doc_bucket) instead of
     # groupBy.applyInPandas — identical per-group inputs without the
     # ~18 ms/group pandas fixed cost.
-    n_shuffle = int(el.sparkSession.conf.get("spark.sql.shuffle.partitions"))
     routed = _run_walk_by_doc_bucket(
-        gc, _page_router_kernel, ROUTED, n_shuffle).persist()
+        gc, _page_router_kernel, ROUTED, width(el.sparkSession)).persist()
 
     tables_chars = routed.filter(F.col("kind") == "table").select(
         F.col("doc_id").alias("ref"),
@@ -562,6 +562,5 @@ def textonly_tables_from_elements(pdf_elements: DataFrame,
         "doc_id", "p_num", "type", "x0", "y0", "x1", "y1", "rawtext",
         (F.col("p_num") / pages_per_bucket).cast("int").alias("page_bucket"),
     )
-    n_shuffle = int(
-        el.sparkSession.conf.get("spark.sql.shuffle.partitions"))
-    return _run_walk_by_doc_bucket(el, _textonly_kernel, TEXTONLY, n_shuffle)
+    return _run_walk_by_doc_bucket(
+        el, _textonly_kernel, TEXTONLY, width(el.sparkSession))

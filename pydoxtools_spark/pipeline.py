@@ -500,11 +500,6 @@ def _image_branch(spans: DataFrame) -> DataFrame:
 # ------------------------------------------------------------- assembly
 
 
-def _width(spark: SparkSession, parallelism: int | None) -> int:
-    """parallelism, else the session's spark.sql.shuffle.partitions."""
-    return parallelism or int(spark.conf.get("spark.sql.shuffle.partitions"))
-
-
 def extract(
     spark: SparkSession,
     documents_in: DataFrame,
@@ -532,9 +527,7 @@ def extract(
     table_mode: "grid" (element tables, relational cell assignment) or
     "chars" (full-fidelity word-rebuild/sweep-line/spanning-cell path —
     requires type='Char' rows; see operators/pdf_relational.py).
-
-    parallelism: the span repartition width; None = the session's
-    spark.sql.shuffle.partitions."""
+    parallelism: span repartition width; None = defaultParallelism."""
     # Statically-absent PDF input -> the pdf branch is skipped outright
     # (r7).  With the old empty-DataFrame default the branch still built
     # the FULL pdf_layout_items machinery over zero rows — its persist()
@@ -572,7 +565,7 @@ def extract(
     # 100 TB the mitigation is an explicit schema-subset read for the
     # ref-only branches (Iceberg column projection), not a plan change.
     spans = explode_input_spans(documents_in).repartition(
-        _width(spark, parallelism), "doc_id", "span_idx"
+        parallelism or spark.sparkContext.defaultParallelism, "doc_id", "span_idx"
     )
     # Ref-only branches (pdf/image/docx/ocr) never touch span.text:
     # they read through the column-pruned ref explode (scan carries
@@ -1068,7 +1061,7 @@ def extract_files(spark: SparkSession, directory: str,
     # to the requested parallelism so downstream kernels get balanced,
     # fewer, fuller tasks (per-task overhead dominated the 3000-file
     # bench otherwise)
-    blobs = blobs.repartition(_width(spark, parallelism))
+    blobs = blobs.repartition(parallelism or spark.sparkContext.defaultParallelism)
     parts = ingest_blobs(spark, blobs)
     return extract(
         spark, parts["documents_in"], None, parallelism,

@@ -47,6 +47,11 @@ def pin(df: DataFrame) -> DataFrame:
     return df.localCheckpoint(eager=False)
 
 
+def width(spark: SparkSession) -> int:
+    """Partition count for compute-heavy, byte-light stages (trap 7)."""
+    return int(spark.conf.get("spark.sql.shuffle.partitions"))
+
+
 def get_spark(
     app_name: str = "pydoxtools-spark",
     cores: int | None = None,
