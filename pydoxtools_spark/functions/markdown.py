@@ -23,8 +23,8 @@ Mediawiki aliases onto the same extractor via a line-level pre-pass
 {{templates}}, ''' bold '''.
 
 Everything here is per-document python executed inside an
-Arrow-batched mapInPandas kernel (pipeline._markdown_branch) — no
-per-row Python at the Spark level.
+Arrow-batched mapInPandas kernel (pipeline._markdown_branch through
+kernels.map_rows) — no per-row Python at the Spark level.
 """
 
 from __future__ import annotations

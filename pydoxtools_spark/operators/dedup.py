@@ -38,6 +38,7 @@ from ..constants import (
     MINHASH_SHINGLE_K,
     SIMHASH_BITS,
 )
+from ..kernels import map_rows
 from ..session import checkpoint, width
 
 
@@ -715,32 +716,26 @@ def cdc_chunk_table(blobs: DataFrame, ref_col: str = "ref",
     blob scan (vectorized 64-tap hash; chunks stay in their blob's
     partition, no shuffle); only (ref, idx, offset, size, md5) rows —
     never chunk BYTES — leave the kernel, so the dedup join moves
-    ~40 bytes per chunk no matter how large the chunks are."""
-    import pandas as pd
-
-    out_schema = ("ref string, chunk_idx int, offset long, "
-                  "size long, chunk_md5 string")
-
-    def kernel(batches):
+    ~40 bytes per chunk no matter how large the chunks are.  A NULL
+    blob is empty (no chunks); a blob the chunker raises on is one
+    contained row with NULL chunk fields and the error text in
+    chunk_md5."""
+    def chunks(ref, raw):
         import hashlib
 
         from ..functions.cdc import chunk_boundaries
 
-        cols = ["ref", "chunk_idx", "offset", "size", "chunk_md5"]
-        for pdf in batches:
-            rows = []
-            for ref, content in zip(pdf[ref_col], pdf[content_col]):
-                raw = bytes(content) if content is not None else b""
-                last = 0
-                for i, end in enumerate(chunk_boundaries(
-                        raw, mask_bits, min_size, max_size)):
-                    rows.append((ref, i, last, end - last,
-                                 hashlib.md5(raw[last:end]).hexdigest()))
-                    last = end
-            yield pd.DataFrame(rows, columns=cols)
+        rows, last = [], 0
+        for i, end in enumerate(chunk_boundaries(
+                raw, mask_bits, min_size, max_size)):
+            rows.append((ref, i, last, end - last,
+                         hashlib.md5(raw[last:end]).hexdigest()))
+            last = end
+        return rows
 
-    return blobs.select(ref_col, content_col).mapInPandas(
-        kernel, out_schema)
+    return map_rows(blobs.select(ref_col, content_col), chunks,
+                    "ref string, chunk_idx int, offset long, "
+                    "size long, chunk_md5 string")
 
 
 def cdc_dedup_stats(chunks: DataFrame) -> DataFrame:

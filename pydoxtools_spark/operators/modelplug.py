@@ -23,7 +23,6 @@ a mock deterministic linear-head model):
 
 from __future__ import annotations
 
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F  # noqa: F401  (callers compose)
 from pyspark.sql.types import (
@@ -33,6 +32,8 @@ from pyspark.sql.types import (
     StructField,
     StructType,
 )
+
+from ..kernels import call_model, map_batches
 
 CLASSIFIED = StructType(
     [
@@ -49,23 +50,13 @@ def classify_with_model(df: DataFrame, model, text_col: str = "text",
     list[str] -> list[str] callable (an HF text-classification pipeline
     wraps to exactly this).  Returns (id, label, error)."""
 
-    def kernel(batches):
-        for pdf in batches:
-            ids = [str(v) for v in pdf[id_col]]
-            texts = [v if v is not None else "" for v in pdf[text_col]]
-            try:
-                labels = list(model(texts))
-                if len(labels) != len(texts):
-                    raise ValueError(
-                        f"model returned {len(labels)} labels for "
-                        f"{len(texts)} inputs")
-                rows = [(i, lb, None) for i, lb in zip(ids, labels)]
-            except Exception as e:  # poison the batch's rows, not the task
-                msg = f"model_error: {type(e).__name__}: {e}"
-                rows = [(i, None, msg) for i in ids]
-            yield pd.DataFrame(rows, columns=["id", "label", "error"])
+    def batch(ids, texts):
+        labels, err = call_model(
+            model, [t if t is not None else "" for t in texts],
+            "labels", "inputs")
+        return [(str(i), lb, err) for i, lb in zip(ids, labels)]
 
-    return df.select(id_col, text_col).mapInPandas(kernel, CLASSIFIED)
+    return map_batches(df.select(id_col, text_col), batch, CLASSIFIED)
 
 
 EMBEDDED = StructType(
@@ -85,21 +76,13 @@ def embed_with_model(df: DataFrame, model, text_col: str = "text",
     output plugs straight into similarity.knn_graph_lsh /
     embedding_neardup_pairs."""
 
-    def kernel(batches):
-        for pdf in batches:
-            ids = [str(v) for v in pdf[id_col]]
-            texts = [v if v is not None else "" for v in pdf[text_col]]
-            try:
-                vecs = list(model(texts))
-                if len(vecs) != len(texts):
-                    raise ValueError(
-                        f"model returned {len(vecs)} vectors for "
-                        f"{len(texts)} inputs")
-                rows = [(i, [float(x) for x in v], None)
-                        for i, v in zip(ids, vecs)]
-            except Exception as e:
-                msg = f"model_error: {type(e).__name__}: {e}"
-                rows = [(i, None, msg) for i in ids]
-            yield pd.DataFrame(rows, columns=["id", "embedding", "error"])
+    def vectors(texts):
+        return [[float(x) for x in v] for v in model(texts)]
 
-    return df.select(id_col, text_col).mapInPandas(kernel, EMBEDDED)
+    def batch(ids, texts):
+        vecs, err = call_model(
+            vectors, [t if t is not None else "" for t in texts],
+            "vectors", "inputs")
+        return [(str(i), v, err) for i, v in zip(ids, vecs)]
+
+    return map_batches(df.select(id_col, text_col), batch, EMBEDDED)

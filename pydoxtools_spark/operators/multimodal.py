@@ -29,7 +29,6 @@ from __future__ import annotations
 
 import hashlib
 
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
@@ -42,6 +41,8 @@ from pyspark.sql.types import (
     StructField,
     StructType,
 )
+
+from ..kernels import call_model, error_text, map_batches, map_rows, walk_runs
 
 MEDIA = StructType(
     [
@@ -173,27 +174,20 @@ def media_features(media: DataFrame, batch_size_hint: int = 256) -> DataFrame:
     observed (giant videos -> dedicated partitions, same pattern as
     giant PDFs)."""
 
-    def kernel(batches):
-        cols = [f.name for f in MEDIA_FEATURES.fields]
-        for pdf in batches:
-            rows = []
-            for ref, mtype, content in zip(
-                pdf["media_ref"], pdf["media_type"], pdf["content"]
-            ):
-                content = bytes(content) if content is not None else b""
-                row = dict.fromkeys(cols)
-                row.update(
-                    media_ref=ref, media_type=mtype, n_bytes=len(content),
-                    content_hash=hashlib.md5(content).hexdigest(),
-                )
-                try:
-                    row.update(decode_media(mtype, content))
-                except Exception as e:  # containment: error column, not death
-                    row["decode_error"] = f"{type(e).__name__}: {e}"
-                rows.append(row)
-            yield pd.DataFrame(rows, columns=cols)
+    def features(ref, mtype, content):
+        d = decode_media(mtype, content)
+        return [(ref, mtype, len(content), hashlib.md5(content).hexdigest(),
+                 d.get("width"), d.get("height"), d.get("sample_rate"),
+                 d.get("duration_ms"), d.get("mean_level"), d.get("feature"),
+                 None)]
 
-    return media.mapInPandas(kernel, MEDIA_FEATURES)
+    def on_error(values, e):  # containment: error column, not death
+        ref, mtype, content = values
+        return (ref, mtype, len(content), hashlib.md5(content).hexdigest(),
+                None, None, None, None, None, None, error_text(e))
+
+    return map_rows(media.select("media_ref", "media_type", "content"),
+                    features, MEDIA_FEATURES, on_error)
 
 
 OCR_TEXT = StructType(
@@ -214,45 +208,24 @@ def ocr_extract(media: DataFrame, model) -> DataFrame:
     Arrow batch (the batch-size contract a real model needs); decode or
     model failure is contained per row."""
 
-    def kernel(batches):
+    def batch(refs, contents):
         from ..functions.media import parse_bmp
 
-        for pdf in batches:
-            refs, imgs, errs = [], [], []
-            for ref, content in zip(pdf["media_ref"], pdf["content"]):
-                refs.append(ref)
-                try:
-                    _w, _h, px = parse_bmp(
-                        bytes(content) if content is not None else b"")
-                    imgs.append(px)
-                    errs.append(None)
-                except Exception as e:
-                    imgs.append(None)
-                    errs.append(f"{type(e).__name__}: {e}")
-            ok = [im for im in imgs if im is not None]
+        imgs, errs = [], []
+        for content in contents:
             try:
-                out = list(model(ok))
-                # modelplug contract: one output per input, or the whole
-                # batch is an error — a short list must not silently
-                # null-out trailing rows, nor extras be silently dropped
-                if len(out) != len(ok):
-                    raise ValueError(
-                        f"model returned {len(out)} texts for {len(ok)} images")
-                texts = iter(out)
-            except Exception as e:  # whole-batch model failure -> rows
-                texts = iter([])
-                errs = [err or f"model_error: {type(e).__name__}: {e}"
-                        for err in errs]
-            rows = []
-            for ref, im, err in zip(refs, imgs, errs):
-                rows.append((
-                    ref,
-                    next(texts, None) if im is not None and err is None
-                    else None,
-                    err))
-            yield pd.DataFrame(rows, columns=["media_ref", "text", "error"])
+                imgs.append(parse_bmp(content)[2])
+                errs.append(None)
+            except Exception as e:
+                imgs.append(None)
+                errs.append(error_text(e))
+        texts, model_err = call_model(
+            model, [im for im in imgs if im is not None], "texts", "images")
+        texts = iter(texts)
+        return [(ref, None if im is None else next(texts), err or model_err)
+                for ref, im, err in zip(refs, imgs, errs)]
 
-    return media.select("media_ref", "content").mapInPandas(kernel, OCR_TEXT)
+    return map_batches(media.select("media_ref", "content"), batch, OCR_TEXT)
 
 
 def frame_sample_plan(media: DataFrame, every_n: int = 30) -> DataFrame:
@@ -293,35 +266,26 @@ def avi_frame_features(media: DataFrame, every_n: int = 30) -> DataFrame:
         F.sort_array(F.collect_list("frame_idx")).alias("frame_idxs"))
     joined = idxs.join(media.select("media_ref", "content"), "media_ref")
 
-    def kernel(batches):
+    def frames(ref, fidxs, content):
         from ..functions.avi import parse_avi_frame, parse_avi_meta
         from ..functions.media import luminance_hist16
 
-        cols = ["media_ref", "frame_idx", "width", "height",
-                "mean_level", "decode_error"]
-        for pdf in batches:
-            rows = []
-            for ref, fidxs, content in zip(
-                pdf["media_ref"], pdf["frame_idxs"], pdf["content"]
-            ):
-                raw = bytes(content)
-                meta = None
-                for idx in fidxs:
-                    try:
-                        if meta is None:
-                            meta = parse_avi_meta(raw)
-                        px = parse_avi_frame(raw, int(idx), meta)
-                        _hist, mean = luminance_hist16(px)
-                        rows.append((ref, int(idx), px.shape[1],
-                                     px.shape[0], mean, None))
-                    except Exception as e:  # containment per frame
-                        rows.append((ref, int(idx), None, None, None,
-                                     f"{type(e).__name__}: {e}"))
-            yield pd.DataFrame(rows, columns=cols)
+        rows, meta = [], None
+        for idx in fidxs:
+            try:
+                if meta is None:
+                    meta = parse_avi_meta(content)
+                px = parse_avi_frame(content, int(idx), meta)
+                _hist, mean = luminance_hist16(px)
+                rows.append((ref, int(idx), px.shape[1], px.shape[0], mean,
+                             None))
+            except Exception as e:  # containment per frame
+                rows.append((ref, int(idx), None, None, None, error_text(e)))
+        return rows
 
-    return joined.mapInPandas(
-        kernel, "media_ref string, frame_idx int, width int, "
-                "height int, mean_level int, decode_error string")
+    return map_rows(
+        joined, frames, "media_ref string, frame_idx int, width int, "
+                        "height int, mean_level int, decode_error string")
 
 
 PDF_META = StructType(
@@ -343,27 +307,15 @@ def pdf_meta_from_blobs(blobs: DataFrame, id_col: str = "doc_id",
     Arrow-batched kernel, per-row error containment — a hopeless blob
     yields an error row, never a task death."""
 
-    def kernel(batches):
+    def info(did, content):
         from ..functions.pdfparse import parse_pdf_info
 
-        for pdf in batches:
-            rows = []
-            for did, content in zip(pdf[id_col], pdf[content_col]):
-                try:
-                    info = parse_pdf_info(
-                        bytes(content) if content is not None else b"")
-                    rows.append((did, info["n_pages"], info["producer"],
-                                 info["creator"], None))
-                except Exception as e:
-                    rows.append((did, None, None, None,
-                                 f"{type(e).__name__}: {e}"))
-            yield pd.DataFrame(
-                rows, columns=["doc_id", "n_pages", "producer", "creator",
-                               "error"])
+        m = parse_pdf_info(content)
+        return [(did, m["n_pages"], m["producer"], m["creator"], None)]
 
-    return blobs.select(
+    return map_rows(blobs.select(
         F.col(id_col).cast("string").alias(id_col), content_col
-    ).mapInPandas(kernel, PDF_META)
+    ), info, PDF_META)
 
 
 PDF_RENDER = StructType(
@@ -415,31 +367,19 @@ def render_pdf_pages(blobs: DataFrame, scale: float = 0.25,
     full page at that scale is ~5.8 MB — crop when only a headline
     band matters)."""
 
-    def kernel(batches):
+    def pages(did, content):
         from ..functions.pdfparse import pdf_elements_from_bytes
 
-        cols = [f.name for f in PDF_RENDER.fields]
-        for pdf in batches:
-            rows = []
-            for did, content in zip(pdf[id_col], pdf[content_col]):
-                try:
-                    els = pdf_elements_from_bytes(
-                        bytes(content) if content is not None else b"",
-                        doc_id=str(did), emit_chars=glyphs)
-                except Exception as e:
-                    rows.append((did, None, None, None, None, None,
-                                 f"{type(e).__name__}: {e}"))
-                    continue
-                rows.extend(_paint_doc_pages(
-                    did,
-                    [(e["p_num"], e["type"], e["x0"], e["y0"],
-                      e["x1"], e["y1"], e.get("rawtext")) for e in els],
-                    scale, max_pages, glyphs, crop_top_pt))
-            yield pd.DataFrame(rows, columns=cols)
+        els = pdf_elements_from_bytes(content, doc_id=did, emit_chars=glyphs)
+        return _paint_doc_pages(
+            did,
+            [(e["p_num"], e["type"], e["x0"], e["y0"], e["x1"], e["y1"],
+              e.get("rawtext")) for e in els],
+            scale, max_pages, glyphs, crop_top_pt)
 
-    return blobs.select(
+    return map_rows(blobs.select(
         F.col(id_col).cast("string").alias(id_col), content_col
-    ).mapInPandas(kernel, PDF_RENDER)
+    ), pages, PDF_RENDER)
 
 
 def _paint_doc_pages(did, els, scale: float, max_pages: int | None,
@@ -525,7 +465,6 @@ def _paint_doc_pages(did, els, scale: float, max_pages: int | None,
 def render_pdf_pages_from_elements(elements: DataFrame, scale: float = 0.25,
                                    max_pages: int | None = None,
                                    id_col: str = "doc_id",
-                                   partitions: int | None = None,
                                    glyphs: bool = False,
                                    crop_top_pt: float | None = None
                                    ) -> DataFrame:
@@ -537,64 +476,34 @@ def render_pdf_pages_from_elements(elements: DataFrame, scale: float = 0.25,
 
     Scale shape: only the narrow (doc_id, p_num, type, x0..y1)
     projection shuffles (~40 B/element — the rawtext payload and the
-    blob bytes stay out).  Grouping is repartition-by-doc +
-    sortWithinPartitions + a mapInPandas kernel that walks contiguous
-    doc runs with cross-batch buffering — NOT groupBy.applyInPandas:
-    its ~18 ms/group fixed cost on per-DOC groups measured SLOWER
-    than re-parsing small blobs outright (36.7 vs 29.0 s on the 24k
-    A/B; the batched form wins at every blob size — BASELINE.md).
-    A type='ParseError' row (parse_pdf_blobs' contained failure)
-    becomes the error row."""
+    blob bytes stay out).  Grouping is kernels.walk_runs over doc runs
+    sorted by p_num — NOT groupBy.applyInPandas: its ~18 ms/group fixed
+    cost on per-DOC groups measured SLOWER than re-parsing small blobs
+    outright (36.7 vs 29.0 s on the 24k A/B; the batched form wins at
+    every blob size — BASELINE.md).  A type='ParseError' row
+    (parse_pdf_blobs' contained failure) becomes the error row."""
     cols = ["p_num", "type", "x0", "y0", "x1", "y1"]
     if glyphs:
         cols.append("rawtext")  # glyph cells need the char itself
     proj = elements.select(
         F.col(id_col).cast("string").alias("doc_id"), *cols)
-    proj = proj.repartition(partitions or 64, "doc_id") \
-        .sortWithinPartitions("doc_id", "p_num")
-    out_cols = [f.name for f in PDF_RENDER.fields]
-
     tuple_cols = ["p_num", "type", "x0", "y0", "x1", "y1"]
 
-    def kernel(batches):
+    def paint_run(sub):
         import numpy as np
 
-        def paint_run(sub):
-            did = sub["doc_id"].iat[0]
-            typ = sub["type"]
-            if (typ == "ParseError").any():
-                return [(did, None, None, None, None, None,
-                         "pdf parse failed upstream (ParseError "
-                         "element row)")]
-            raw = (sub["rawtext"].to_numpy() if glyphs
-                   else np.full(len(sub), None, dtype=object))
-            els = zip(*(sub[c].to_numpy() for c in tuple_cols), raw)
-            return _paint_doc_pages(did, els, scale, max_pages,
-                                    glyphs, crop_top_pt)
+        did = sub["doc_id"].iat[0]
+        if (sub["type"] == "ParseError").any():
+            return [(did, None, None, None, None, None,
+                     "pdf parse failed upstream (ParseError element row)")]
+        raw = (sub["rawtext"].to_numpy() if glyphs
+               else np.full(len(sub), None, dtype=object))
+        els = zip(*(sub[c].to_numpy() for c in tuple_cols), raw)
+        return _paint_doc_pages(did, els, scale, max_pages, glyphs,
+                                crop_top_pt)
 
-        buf = None  # trailing (possibly batch-spanning) doc run
-        for pdf in batches:
-            if buf is not None:
-                pdf = pd.concat([buf, pdf], ignore_index=True)
-                buf = None
-            if len(pdf) == 0:
-                continue
-            ids = pdf["doc_id"].to_numpy()
-            # numpy run-split on the sorted doc ids (no per-row loop)
-            cut = np.flatnonzero(ids[1:] != ids[:-1]) + 1
-            starts = np.concatenate(([0], cut))
-            out = []
-            for s, e in zip(starts[:-1], starts[1:]):
-                out.extend(paint_run(pdf.iloc[s:e]))
-            buf = pdf.iloc[starts[-1]:]
-            if out:
-                yield pd.DataFrame(out, columns=out_cols)
-        if buf is not None and len(buf):
-            tail = paint_run(buf)
-            if tail:
-                yield pd.DataFrame(tail, columns=out_cols)
-
-    return proj.mapInPandas(kernel, PDF_RENDER)
+    return walk_runs(proj, ["doc_id"], paint_run, PDF_RENDER,
+                     order=["p_num"])
 
 
 OCR_GLYPH = StructType(
@@ -620,33 +529,20 @@ def ocr_glyph_decode(rasters: DataFrame) -> DataFrame:
     can recompute.  Upstream error rows pass through; undecodable
     bytes become contained error rows."""
 
-    def kernel(batches):
+    def lines(did, p_num, content, err):
         from ..functions.glyphfont import decode_glyph_page
         from ..functions.media import parse_bmp
 
-        cols = [f.name for f in OCR_GLYPH.fields]
-        for pdf in batches:
-            rows = []
-            for did, p_num, content, err in zip(
-                    pdf["doc_id"], pdf["p_num"], pdf["content"],
-                    pdf["error"]):
-                if err is not None:
-                    rows.append((did, None, None, None, None, err))
-                    continue
-                try:
-                    _w, _h, px = parse_bmp(bytes(content))
-                    for i, (top, text) in enumerate(
-                            decode_glyph_page(px)):
-                        rows.append((did, int(p_num), i, int(top),
-                                     text, None))
-                except Exception as e:
-                    rows.append((did, int(p_num), None, None, None,
-                                 f"{type(e).__name__}: {e}"))
-            yield pd.DataFrame(rows, columns=cols)
+        if err is not None:
+            return [(did, None, None, None, None, err)]
+        _w, _h, px = parse_bmp(content)
+        return [(did, int(p_num), i, int(top), text, None)
+                for i, (top, text) in enumerate(decode_glyph_page(px))]
 
-    return rasters.select(
-        "doc_id", "p_num", "content", "error"
-    ).mapInPandas(kernel, OCR_GLYPH)
+    return map_rows(
+        rasters.select("doc_id", "p_num", "content", "error"), lines,
+        OCR_GLYPH, lambda v, e: (v[0], int(v[1]), None, None, None,
+                                 error_text(e)))
 
 
 def scrub_image_metadata(media: DataFrame) -> DataFrame:
@@ -663,39 +559,25 @@ def scrub_image_metadata(media: DataFrame) -> DataFrame:
     failures are contained error rows.  Arrow-batched mapInPandas,
     blobs stay in their scan partition."""
 
-    def kernel(batches):
+    def scrub(ref, raw):
         from ..functions.exif import parse_exif, strip_jpeg_metadata
 
-        cols = ["media_ref", "content", "n_bytes_clean",
-                "removed_bytes", "had_exif", "had_gps", "error"]
-        for pdf in batches:
-            rows = []
-            for ref, content in zip(pdf["media_ref"], pdf["content"]):
-                raw = bytes(content) if content is not None else b""
-                if raw[:2] != b"\xff\xd8":
-                    rows.append((ref, raw, len(raw), 0, False, False,
-                                 None))
-                    continue
-                try:
-                    # the audit parse gets its OWN try: a corrupt EXIF
-                    # TIFF IFD inside intact segment framing must not
-                    # fail the scrub closed and drop the image — the
-                    # segment surgery alone still succeeds, with the
-                    # audit columns unknown (r6 advisor finding)
-                    try:
-                        ex = parse_exif(raw)
-                        had_exif, had_gps = bool(ex), "gps" in ex
-                    except Exception:
-                        had_exif = had_gps = None
-                    clean, removed = strip_jpeg_metadata(raw)
-                    rows.append((ref, clean, len(clean), removed,
-                                 had_exif, had_gps, None))
-                except Exception as e:  # containment per blob
-                    rows.append((ref, None, None, None, None, None,
-                                 f"{type(e).__name__}: {e}"))
-            yield pd.DataFrame(rows, columns=cols)
+        if raw[:2] != b"\xff\xd8":
+            return [(ref, raw, len(raw), 0, False, False, None)]
+        # the audit parse gets its OWN try: a corrupt EXIF TIFF IFD
+        # inside intact segment framing must not fail the scrub closed
+        # and drop the image — the segment surgery alone still
+        # succeeds, with the audit columns unknown (r6 advisor finding)
+        try:
+            ex = parse_exif(raw)
+            had_exif, had_gps = bool(ex), "gps" in ex
+        except Exception:
+            had_exif = had_gps = None
+        clean, removed = strip_jpeg_metadata(raw)
+        return [(ref, clean, len(clean), removed, had_exif, had_gps, None)]
 
-    return media.select("media_ref", "content").mapInPandas(
-        kernel, "media_ref string, content binary, n_bytes_clean long, "
-                "removed_bytes long, had_exif boolean, "
-                "had_gps boolean, error string")
+    return map_rows(
+        media.select("media_ref", "content"), scrub,
+        "media_ref string, content binary, n_bytes_clean long, "
+        "removed_bytes long, had_exif boolean, had_gps boolean, "
+        "error string")

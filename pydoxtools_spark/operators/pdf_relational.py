@@ -49,7 +49,10 @@ from ..constants import (
     VERTICAL_ORIENTATION,
 )
 from ..functions.spantext import CELL_SEP
-from ..session import width
+from ..kernels import walk_runs
+
+# the routed kernels' group: one (doc, page bucket) per kernel call
+_BUCKET = ("doc_id", "page_bucket")
 
 # item rows joined back into the extraction pipeline:
 # (ref, p_num, y0, x0, kind, text, media_ref)
@@ -86,8 +89,8 @@ ROUTED = StructType(
 )
 
 
-def _page_router_kernel(pdf: pd.DataFrame) -> pd.DataFrame:
-    """applyInPandas kernel over one (doc_id, page_bucket) group of
+def _page_router_kernel(pdf: pd.DataFrame) -> list[tuple]:
+    """kernels.walk_runs kernel over one (doc_id, page_bucket) group of
     GRAPHIC + CHAR rows, routing PER PAGE exactly like the canonical
     oracle (functions/pdflayout.extract_pdf_items:383-407):
 
@@ -145,51 +148,7 @@ def _page_router_kernel(pdf: pd.DataFrame) -> pd.DataFrame:
                      [float(v) for v in row_b], [float(v) for v in col_b],
                      None)
                 )
-    return pd.DataFrame(rows, columns=[f.name for f in ROUTED.fields])
-
-
-def _run_walk_by_doc_bucket(df: DataFrame, kernel, schema: StructType,
-                            n_shuffle: int) -> DataFrame:
-    """repartition(doc_id, page_bucket) + sortWithinPartitions +
-    mapInPandas walking contiguous (doc_id, page_bucket) runs with
-    cross-batch buffering — the multimodal rasterizer pattern
-    (CLAUDE.md trap 14): groupBy.applyInPandas costs ~18 ms of fixed
-    pandas overhead PER GROUP, which at one group per (doc, bucket)
-    measured 88 task-seconds on the 5000-doc sf0.1 chars corpus vs
-    ~8 for this form.  Group contents and keying are identical —
-    `kernel` receives exactly one (doc_id, page_bucket) group per
-    call, same as applyInPandas handed it."""
-    sorted_df = df.repartition(n_shuffle, "doc_id", "page_bucket") \
-        .sortWithinPartitions("doc_id", "page_bucket")
-
-    def runs(batches):
-        import numpy as np
-
-        buf = None
-        for pdf in batches:
-            if buf is not None:
-                pdf = pd.concat([buf, pdf], ignore_index=True)
-                buf = None
-            if len(pdf) == 0:
-                continue
-            ids = pdf["doc_id"].to_numpy()
-            pb = pdf["page_bucket"].to_numpy()
-            cut = np.flatnonzero(
-                (ids[1:] != ids[:-1]) | (pb[1:] != pb[:-1])) + 1
-            starts = np.concatenate(([0], cut))
-            frames = []
-            for s, e in zip(starts[:-1], starts[1:]):
-                frames.append(kernel(pdf.iloc[s:e]))
-            buf = pdf.iloc[starts[-1]:]
-            frames = [f for f in frames if len(f)]
-            if frames:
-                yield pd.concat(frames, ignore_index=True)
-        if buf is not None and len(buf):
-            tail = kernel(buf)
-            if len(tail):
-                yield tail
-
-    return sorted_df.mapInPandas(runs, schema)
+    return rows
 
 
 def _grid_tables(areas, lines):
@@ -374,11 +333,11 @@ def pdf_layout_items(pdf_elements: DataFrame,
     # AQE's size-based coalescing would shrink it to a handful of
     # tasks (measured: 5 tasks / 12.6 s on a 5000-doc chars corpus vs
     # full-width ~2 s).  Since r7 the kernel runs as a contiguous-run
-    # mapInPandas walk (see _run_walk_by_doc_bucket) instead of
-    # groupBy.applyInPandas — identical per-group inputs without the
-    # ~18 ms/group pandas fixed cost.
-    routed = _run_walk_by_doc_bucket(
-        gc, _page_router_kernel, ROUTED, width(el.sparkSession)).persist()
+    # mapInPandas walk (kernels.walk_runs, CLAUDE.md trap 14) instead
+    # of groupBy.applyInPandas — identical per-group inputs without the
+    # ~18 ms/group pandas fixed cost (88 vs ~8 task-seconds on the
+    # 5000-doc sf0.1 chars corpus).
+    routed = walk_runs(gc, _BUCKET, _page_router_kernel, ROUTED).persist()
 
     tables_chars = routed.filter(F.col("kind") == "table").select(
         F.col("doc_id").alias("ref"),
@@ -501,8 +460,8 @@ TEXTONLY = StructType(
 )
 
 
-def _textonly_kernel(pdf: pd.DataFrame) -> pd.DataFrame:
-    """applyInPandas kernel over one (doc_id, page_bucket) group of
+def _textonly_kernel(pdf: pd.DataFrame) -> list[tuple]:
+    """kernels.walk_runs kernel over one (doc_id, page_bucket) group of
     Text+Graphic rows: pages WITHOUT graphics run alignment-based grid
     detection (functions/textonly_tables.detect_text_only_grid); pages
     with graphics belong to the ruled/chars routed kernel and are
@@ -528,7 +487,7 @@ def _textonly_kernel(pdf: pd.DataFrame) -> pd.DataFrame:
              float(boxes[:, 2].max()), float(boxes[:, 3].max()),
              table_to_text(grid))
         )
-    return pd.DataFrame(rows, columns=[f.name for f in TEXTONLY.fields])
+    return rows
 
 
 def textonly_tables_from_elements(pdf_elements: DataFrame,
@@ -546,11 +505,10 @@ def textonly_tables_from_elements(pdf_elements: DataFrame,
     Returns (doc_id, p_num, bbox, text) with the canonical ' | '/'\\n'
     table rendering.
 
-    Scale shape: same as the routed table kernel — one applyInPandas
-    pass grouped by (doc, page_bucket) with an explicit repartition on
+    Scale shape: same as the routed table kernel — one kernels.walk_runs
+    pass over (doc, page_bucket) runs with an explicit repartition on
     exactly the group keys (the stage is compute-heavy and byte-light,
-    so AQE's byte-based coalescing would serialize it; hashing on the
-    groupBy keys adds no second exchange)."""
+    so AQE's byte-based coalescing would serialize it)."""
     el = pdf_elements.filter(
         (F.col("type") == "Graphic")
         | (
@@ -562,5 +520,4 @@ def textonly_tables_from_elements(pdf_elements: DataFrame,
         "doc_id", "p_num", "type", "x0", "y0", "x1", "y1", "rawtext",
         (F.col("p_num") / pages_per_bucket).cast("int").alias("page_bucket"),
     )
-    return _run_walk_by_doc_bucket(
-        el, _textonly_kernel, TEXTONLY, width(el.sparkSession))
+    return walk_runs(el, _BUCKET, _textonly_kernel, TEXTONLY)

@@ -1,7 +1,9 @@
 """End-to-end extraction pipeline (Spark-first).
 
 Logical plan (all relational steps are JVM-side / whole-stage-codegen;
-Python appears only in two Arrow-batched kernels):
+Python runs only in Arrow-batched kernels, all of them through
+kernels.py — the markdown, html, container, blob-parse, OCR and
+routed-table kernels):
 
   documents_in (doc_id, spans)
     └─ posexplode(spans) ────────────────────────────┐ single pass
@@ -25,10 +27,11 @@ Scale properties (SURVEY.md §4):
     kernel page-local;
   * html spans are hash-repartitioned for balance; AQE handles residual
     skew;
-  * failures never kill a task: per-doc try/except inside kernels emits
-    KIND_ERROR rows that surface as the `error` column + parse_failures
-    metrics (reference semantics: .default()/forgiving_extracts,
-    operators_base.py:186-194, dask_operators.py:48-57).
+  * failures never kill a task: kernels.map_rows turns a raising
+    per-span parse into a KIND_ERROR row that surfaces as the `error`
+    column + parse_failures metrics (reference semantics:
+    .default()/forgiving_extracts, operators_base.py:186-194,
+    dask_operators.py:48-57).
 """
 
 from __future__ import annotations
@@ -38,7 +41,6 @@ import os as _os
 import time
 import uuid
 
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
@@ -66,6 +68,7 @@ from .constants import (
     KIND_TEXT,
     PARAGRAPH_SPLIT_REGEX,
 )
+from .kernels import error_text, map_rows
 
 PAGES_PER_BUCKET = 8
 
@@ -171,34 +174,20 @@ def _text_branch(spans: DataFrame) -> DataFrame:
     )
 
 
-_OUT_COLS = [f.name for f in _OUT_SPAN.fields]
+def _span_rows(rows: DataFrame, parse, error_label: str) -> DataFrame:
+    """(doc_id, span_idx, *payload) rows -> output span rows, one per
+    `parse(*payload)` item in order (ord1 = item index).  A raising
+    parse emits ONE contained `error_label` error row for its span."""
 
+    def spans(doc_id, span_idx, *payload):
+        return [(doc_id, span_idx, float(i), 0.0, 0.0, k, t, r)
+                for i, (k, t, r) in enumerate(parse(*payload))]
 
-def _span_kernel(parse, error_label: str, *payload_cols: str):
-    """mapInPandas kernel factory: (doc_id, span_idx, *payload_cols)
-    rows -> output span rows, one per `parse(*payload)` item in order
-    (ord1 = item index).  A raising parse emits ONE contained
-    `error_label` error row for its span — failure containment, never
-    task death."""
+    def on_error(values, e):
+        return (values[0], values[1], 0.0, 0.0, 0.0, KIND_ERROR,
+                f"{error_label}: {error_text(e)}", None)
 
-    def kernel(batches):
-        for pdf in batches:
-            rows = []
-            for doc_id, span_idx, *payload in zip(
-                pdf["doc_id"], pdf["span_idx"], *(pdf[c] for c in payload_cols)
-            ):
-                try:
-                    for i, (k, t, r) in enumerate(parse(*payload)):
-                        rows.append((doc_id, int(span_idx), float(i), 0.0, 0.0,
-                                     k, t, r))
-                except Exception as e:  # failure containment, never task death
-                    rows.append(
-                        (doc_id, int(span_idx), 0.0, 0.0, 0.0, KIND_ERROR,
-                         f"{error_label}: {type(e).__name__}: {e}", None)
-                    )
-            yield pd.DataFrame(rows, columns=_OUT_COLS)
-
-    return kernel
+    return map_rows(rows, spans, _OUT_SPAN, on_error)
 
 
 def _parse_html(raw):
@@ -221,8 +210,7 @@ def _html_branch(spans: DataFrame) -> DataFrame:
     html = spans.filter(F.col("in_kind") == IN_KIND_HTML).select(
         "doc_id", "span_idx", "in_text"
     )
-    return html.mapInPandas(
-        _span_kernel(_parse_html, "html_parse_error", "in_text"), _OUT_SPAN)
+    return _span_rows(html, _parse_html, "html_parse_error")
 
 
 def _markdown_branch(spans: DataFrame) -> DataFrame:
@@ -234,52 +222,40 @@ def _markdown_branch(spans: DataFrame) -> DataFrame:
         "doc_id", "span_idx", "in_text",
         doc_type_col(F.col("in_text")).alias("doc_type"),
     )
-    return md.mapInPandas(
-        _span_kernel(_parse_markup, "markdown_parse_error", "in_text",
-                     "doc_type"),
-        _OUT_SPAN)
-
-
-def _parse_pdf_blobs_kernel(batches):
-    """mapInPandas kernel: (ref, content) -> PDF_ELEMENT rows via the
-    strict -> lenient repair ladder (functions/pdfparse.py; reference
-    semantics pdf_utils.py:81-148).  A blob failing BOTH rungs emits a
-    type='ParseError' row — the layout branch converts it to an error
-    span, never a task failure."""
-    from .functions.pdfparse import PdfParseError, pdf_elements_from_bytes
-    from .schemas import PDF_ELEMENT
-
-    cols = [f.name for f in PDF_ELEMENT.fields]
-    for pdf in batches:
-        rows: list[dict] = []
-        emit_chars = bool(pdf["emit_chars"].iloc[0]) if len(pdf) else False
-        for ref, content in zip(pdf["ref"], pdf["content"]):
-            try:
-                rows.extend(pdf_elements_from_bytes(
-                    bytes(content), doc_id=ref, emit_chars=emit_chars))
-            except PdfParseError as e:
-                rows.append(dict(
-                    doc_id=ref, p_num=0, boxnum=0, linenum=0,
-                    type="ParseError", x0=0.0, y0=0.0, x1=0.0, y1=0.0,
-                    rawtext=f"pdf_parse_error: {e}", font_name=None,
-                    font_size=None, font_color=None,
-                    mean_char_orientation=None, linewidth=None,
-                    media_ref=None,
-                ))
-        yield pd.DataFrame(rows, columns=cols)
+    return _span_rows(md, _parse_markup, "markdown_parse_error")
 
 
 def parse_pdf_blobs(pdf_blobs: DataFrame, emit_chars: bool = False) -> DataFrame:
-    """pdf_blobs(ref string, content binary) -> pdf_elements rows.
-    This is the expensive scan of the bytes path (SURVEY.md §2.1
-    PDFFileLoader row): Arrow-batched, one python worker import of the
-    parser per executor (scalar-iterator form).  emit_chars feeds the
-    full-fidelity table path (extract(..., table_mode='chars'))."""
+    """pdf_blobs(ref string, content binary) -> pdf_elements rows via
+    the strict -> lenient repair ladder (functions/pdfparse.py;
+    reference semantics pdf_utils.py:81-148).  This is the expensive
+    scan of the bytes path (SURVEY.md §2.1 PDFFileLoader row).  A blob
+    failing BOTH rungs (a NULL blob included) emits a type='ParseError'
+    row — the layout branch converts it to an error span, never a task
+    failure.  emit_chars feeds the full-fidelity table path
+    (extract(..., table_mode='chars'))."""
+    from operator import itemgetter
+
     from .schemas import PDF_ELEMENT
 
-    return pdf_blobs.select(
-        "ref", "content", F.lit(emit_chars).alias("emit_chars")
-    ).mapInPandas(_parse_pdf_blobs_kernel, PDF_ELEMENT)
+    as_row = itemgetter(*PDF_ELEMENT.fieldNames())
+
+    def elements(ref, content):
+        from .functions.pdfparse import pdf_elements_from_bytes
+
+        return map(as_row, pdf_elements_from_bytes(
+            content, doc_id=ref, emit_chars=emit_chars))
+
+    def on_error(values, e):
+        from .functions.pdfparse import PdfParseError
+
+        msg = str(e) if isinstance(e, PdfParseError) else error_text(e)
+        return (values[0], 0, 0, 0, "ParseError", 0.0, 0.0, 0.0, 0.0,
+                f"pdf_parse_error: {msg}", None, None, None, None, None,
+                None)
+
+    return map_rows(pdf_blobs.select("ref", "content"), elements,
+                    PDF_ELEMENT, on_error)
 
 
 HTML_META = StructType(
@@ -302,31 +278,19 @@ def html_meta_table(documents_in: DataFrame) -> DataFrame:
     keywords, meta description/language, canonical url) as a side
     table keyed by (doc_id, span_idx)."""
 
-    def kernel(batches):
+    def meta(doc_id, span_idx, raw):
         from .functions.htmlparse import extract_html_meta
 
-        cols = [f.name for f in HTML_META.fields]
-        for pdf in batches:
-            rows = []
-            for doc_id, span_idx, raw in zip(
-                pdf["doc_id"], pdf["span_idx"], pdf["in_text"]
-            ):
-                try:
-                    m = extract_html_meta(raw or "")
-                except Exception:
-                    m = {}
-                rows.append(
-                    (doc_id, int(span_idx), m.get("title"),
-                     m.get("short_title"), m.get("keywords") or [],
-                     m.get("description"), m.get("language"),
-                     m.get("canonical_url"))
-                )
-            yield pd.DataFrame(rows, columns=cols)
+        m = extract_html_meta(raw or "")
+        return [(doc_id, span_idx, m.get("title"), m.get("short_title"),
+                 m.get("keywords") or [], m.get("description"),
+                 m.get("language"), m.get("canonical_url"))]
 
     html = explode_input_spans(documents_in).filter(
         F.col("in_kind") == IN_KIND_HTML
     ).select("doc_id", "span_idx", "in_text")
-    return html.mapInPandas(kernel, HTML_META)
+    return map_rows(html, meta, HTML_META, lambda v, e: (
+        v[0], v[1], None, None, [], None, None, None))
 
 
 def _pdf_branch(spans: DataFrame, pdf_elements: DataFrame,
@@ -373,15 +337,14 @@ def _parse_container(content):
     )
     from .functions.rtf import extract_rtf_spans, is_rtf
 
-    blob = bytes(content) if content is not None else b""
-    if is_rtf(blob):
-        return extract_rtf_spans(blob)
-    if is_docx(blob):
-        return extract_docx_spans(blob)
-    if is_epub(blob):
-        return extract_epub_spans(blob)
-    if is_odt(blob):
-        return extract_odt_spans(blob)
+    if is_rtf(content):
+        return extract_rtf_spans(content)
+    if is_docx(content):
+        return extract_docx_spans(content)
+    if is_epub(content):
+        return extract_epub_spans(content)
+    if is_odt(content):
+        return extract_odt_spans(content)
     raise ValueError(
         "unrecognized container (rtf/docx/odt/epub probes all negative)")
 
@@ -403,9 +366,7 @@ def _docx_branch(spans: DataFrame, doc_blobs: DataFrame) -> DataFrame:
     joined = refs.join(doc_blobs, refs.in_ref == doc_blobs.ref).select(
         "doc_id", "span_idx", "content"
     )
-    return joined.mapInPandas(
-        _span_kernel(_parse_container, "docx_parse_error", "content"),
-        _OUT_SPAN)
+    return _span_rows(joined, _parse_container, "docx_parse_error")
 
 
 def _ocr_branch(spans: DataFrame, media_blobs: DataFrame,
@@ -838,28 +799,14 @@ def container_media_blobs(doc_blobs: DataFrame) -> DataFrame:
     Scale shape: one Arrow pass over the blob column, no shuffle; a
     corrupt zip is a contained error row."""
 
-    def kernel(batches):
+    def media(ref, content):
         from .functions.docx import extract_container_media
 
-        cols = ["ref", "target", "media_ref", "media_type", "content",
-                "error"]
-        for pdf in batches:
-            rows = []
-            for ref, content in zip(pdf["ref"], pdf["content"]):
-                try:
-                    media = extract_container_media(
-                        bytes(content) if content is not None else b"")
-                except Exception as e:
-                    rows.append((ref, None, None, None, None,
-                                 f"{type(e).__name__}: {e}"))
-                    continue
-                for target, payload in media:
-                    rows.append((ref, target, f"{ref}#{target}",
-                                 "image", payload, None))
-            yield pd.DataFrame(rows, columns=cols)
+        return [(ref, target, f"{ref}#{target}", "image", payload, None)
+                for target, payload in extract_container_media(content)]
 
-    return doc_blobs.select("ref", "content").mapInPandas(
-        kernel,
+    return map_rows(
+        doc_blobs.select("ref", "content"), media,
         "ref string, target string, media_ref string, "
         "media_type string, content binary, error string")
 
@@ -878,28 +825,14 @@ def pdf_media_blobs(pdf_blobs: DataFrame) -> DataFrame:
     shape: one Arrow pass over the blob column, no shuffle; a damaged
     or undecryptable PDF is a contained error row."""
 
-    def kernel(batches):
+    def media(ref, content):
         from .functions.pdfparse import extract_pdf_images
 
-        cols = ["ref", "target", "media_ref", "media_type",
-                "width", "height", "content", "error"]
-        for pdf in batches:
-            rows = []
-            for ref, content in zip(pdf["ref"], pdf["content"]):
-                try:
-                    media = extract_pdf_images(
-                        bytes(content) if content is not None else b"")
-                except Exception as e:
-                    rows.append((ref, None, None, None, None, None,
-                                 None, f"{type(e).__name__}: {e}"))
-                    continue
-                for target, mtype, w, h, payload in media:
-                    rows.append((ref, target, f"{ref}#{target}", mtype,
-                                 w, h, payload, None))
-            yield pd.DataFrame(rows, columns=cols)
+        return [(ref, target, f"{ref}#{target}", mtype, w, h, payload, None)
+                for target, mtype, w, h, payload in extract_pdf_images(content)]
 
-    return pdf_blobs.select("ref", "content").mapInPandas(
-        kernel,
+    return map_rows(
+        pdf_blobs.select("ref", "content"), media,
         "ref string, target string, media_ref string, "
         "media_type string, width int, height int, "
         "content binary, error string")
@@ -979,18 +912,14 @@ def ingest_blobs(spark: SparkSession, blobs: DataFrame,
     )
     b = b.withColumn("in_kind", jvm_kind)
 
-    def probe_zip(batches):
+    def probe_zip(ref, content):
         from .dispatch import blob_in_kind
 
-        for pdf in batches:
-            yield pd.DataFrame(
-                {"ref": pdf["ref"],
-                 "zip_kind": [
-                     blob_in_kind(bytes(c) if c is not None else b"")
-                     for c in pdf["content"]]})
+        return [(ref, blob_in_kind(content))]
 
     zips = b.filter(F.col("in_kind") == "_zip")
-    zip_kinds = zips.mapInPandas(probe_zip, "ref string, zip_kind string")
+    zip_kinds = map_rows(zips.select("ref", "content"), probe_zip,
+                         "ref string, zip_kind string")
     routed = b.filter(F.col("in_kind") != "_zip").unionByName(
         # only the zip SUBSET joins its probe results — the rest of the
         # corpus-sized binary column never enters a shuffle

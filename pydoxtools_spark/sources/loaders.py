@@ -16,6 +16,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..kernels import error_text, map_rows
+
 
 def load_directory(
     spark: SparkSession,
@@ -122,37 +124,29 @@ def docs_from_yaml(df: DataFrame, yaml_col: str = "yaml",
             "docs_from_yaml requires pyyaml; use docs_from_json/"
             "docs_from_records otherwise") from e
 
-    def kernel(batches):
-        import pandas as pd
+    def flat(prefix, v, out):
+        if isinstance(v, dict):
+            for k, sub in v.items():
+                flat(f"{prefix}.{k}" if prefix else str(k), sub, out)
+        elif isinstance(v, (list, tuple)):
+            for i, sub in enumerate(v):
+                flat(f"{prefix}.{i}" if prefix else str(i), sub, out)
+        else:
+            out.append((prefix, None if v is None else str(v)))
+
+    def rows(doc_id, raw):
         import yaml as _yaml
 
-        def flat(prefix, v, out):
-            if isinstance(v, dict):
-                for k, sub in v.items():
-                    flat(f"{prefix}.{k}" if prefix else str(k), sub, out)
-            elif isinstance(v, (list, tuple)):
-                for i, sub in enumerate(v):
-                    flat(f"{prefix}.{i}" if prefix else str(i), sub, out)
-            else:
-                out.append((prefix, None if v is None else str(v)))
+        data = _yaml.safe_load(raw or "")
+        if not isinstance(data, (dict, list)):
+            return [(doc_id, None, None)]
+        kv: list[tuple[str, str | None]] = []
+        flat("", data, kv)
+        return [(doc_id, k, v) for k, v in kv]
 
-        for pdf in batches:
-            rows = []
-            for doc_id, raw in zip(pdf[id_col], pdf[yaml_col]):
-                try:
-                    data = _yaml.safe_load(raw or "")
-                except Exception:
-                    data = None
-                if not isinstance(data, (dict, list)):
-                    rows.append((doc_id, None, None))
-                    continue
-                kv: list[tuple[str, str | None]] = []
-                flat("", data, kv)
-                rows.extend((doc_id, k, v) for k, v in kv)
-            yield pd.DataFrame(rows, columns=[id_col, "key", "value"])
-
-    return df.select(id_col, yaml_col).mapInPandas(
-        kernel, f"{id_col} string, key string, value string")
+    return map_rows(df.select(id_col, yaml_col), rows,
+                    f"{id_col} string, key string, value string",
+                    lambda v, e: (v[0], None, None))
 
 
 def select_keys(df: DataFrame, keys: list[str],
@@ -275,13 +269,7 @@ def warc_records(blobs: DataFrame, ref_col: str = "path",
     spark.sql.files.maxPartitionBytes at the binaryFile scan or
     pre-split segments; per-record gzip members mean a segment never
     needs to be decompressed twice."""
-    import pandas as pd
-
-    out_schema = (
-        "ref string, rec_idx int, warc_type string, target_uri string, "
-        "rec_headers map<string,string>, content binary, error string")
-
-    def kernel(batches):
+    def records(ref, content):
         from ..functions.warc import (
             http_payload,
             parse_warc,
@@ -289,27 +277,14 @@ def warc_records(blobs: DataFrame, ref_col: str = "path",
             warc_type,
         )
 
-        cols = ["ref", "rec_idx", "warc_type", "target_uri",
-                "rec_headers", "content", "error"]
-        for pdf in batches:
-            rows = []
-            for ref, content in zip(pdf["ref"], pdf["content"]):
-                try:
-                    recs = parse_warc(
-                        bytes(content) if content is not None else b"")
-                except Exception as e:  # contained per file
-                    rows.append((ref, None, None, None, None, None,
-                                 f"{type(e).__name__}: {e}"))
-                    continue
-                for i, (headers, payload) in enumerate(recs):
-                    rows.append((ref, i, warc_type(headers),
-                                 warc_target_uri(headers), headers,
-                                 http_payload(payload), None))
-            yield pd.DataFrame(rows, columns=cols)
+        return [(ref, i, warc_type(headers), warc_target_uri(headers),
+                 headers, http_payload(payload), None)
+                for i, (headers, payload) in enumerate(parse_warc(content))]
 
-    return blobs.select(
-        F.col(ref_col).alias("ref"), F.col(content_col).alias("content")
-    ).mapInPandas(kernel, out_schema)
+    return map_rows(_blobs(blobs, ref_col, content_col), records,
+                    "ref string, rec_idx int, warc_type string, "
+                    "target_uri string, rec_headers map<string,string>, "
+                    "content binary, error string")
 
 
 def zip_members(blobs: DataFrame, ref_col: str = "path",
@@ -332,49 +307,18 @@ def zip_members(blobs: DataFrame, ref_col: str = "path",
     Scale shape: stateless Arrow-batched mapInPandas, members stay in
     their archive's scan partition (no shuffle); like warc_records,
     archive files are the parallelism unit."""
-    import pandas as pd
-
-    out_schema = ("ref string, member string, n_bytes long, "
-                  "content binary, error string")
-
-    def kernel(batches):
+    def members(ref, raw):
         import io
         import zipfile
 
-        cols = ["ref", "member", "n_bytes", "content", "error"]
-        for pdf in batches:
-            rows = []
-            for ref, content in zip(pdf["ref"], pdf["content"]):
-                raw = bytes(content) if content is not None else b""
-                try:
-                    zf = zipfile.ZipFile(io.BytesIO(raw))
-                    infos = zf.infolist()
-                except Exception as e:
-                    rows.append((ref, None, None, None,
-                                 f"{type(e).__name__}: {e}"))
-                    continue
-                for info in infos:
-                    if info.is_dir():
-                        continue
-                    if (max_member_bytes is not None
-                            and info.file_size > max_member_bytes):
-                        rows.append((ref, info.filename, info.file_size,
-                                     None, "member exceeds "
-                                     f"max_member_bytes ({info.file_size})"))
-                        continue
-                    try:
-                        data = zf.read(info)
-                    except Exception as e:  # bad CRC / encrypted / short
-                        rows.append((ref, info.filename, info.file_size,
-                                     None, f"{type(e).__name__}: {e}"))
-                        continue
-                    rows.append((ref, info.filename, len(data),
-                                 data, None))
-            yield pd.DataFrame(rows, columns=cols)
+        zf = zipfile.ZipFile(io.BytesIO(raw))
+        return _members(
+            ref, ((i.filename, i.file_size, lambda i=i: zf.read(i))
+                  for i in zf.infolist() if not i.is_dir()),
+            max_member_bytes)
 
-    return blobs.select(
-        F.col(ref_col).alias("ref"), F.col(content_col).alias("content")
-    ).mapInPandas(kernel, out_schema)
+    return map_rows(_blobs(blobs, ref_col, content_col), members,
+                    _MEMBERS)
 
 
 def tar_members(blobs: DataFrame, ref_col: str = "path",
@@ -384,48 +328,15 @@ def tar_members(blobs: DataFrame, ref_col: str = "path",
     member: (ref, member, n_bytes, content, error) — the zip_members
     twin for the tape-archive world.  Per-member containment and the
     same zip-bomb guard; non-tar blobs are one file-level error row."""
-    import pandas as pd
+    def members(ref, raw):
+        tf = _open_tar(raw)
+        return _members(
+            ref, ((i.name, i.size, lambda i=i: tf.extractfile(i).read())
+                  for i in tf.getmembers() if i.isfile()),
+            max_member_bytes)
 
-    out_schema = ("ref string, member string, n_bytes long, "
-                  "content binary, error string")
-
-    def kernel(batches):
-        import io
-        import tarfile
-
-        cols = ["ref", "member", "n_bytes", "content", "error"]
-        for pdf in batches:
-            rows = []
-            for ref, content in zip(pdf["ref"], pdf["content"]):
-                raw = bytes(content) if content is not None else b""
-                try:
-                    tf = tarfile.open(fileobj=io.BytesIO(raw), mode="r:*")
-                    infos = tf.getmembers()
-                except Exception as e:
-                    rows.append((ref, None, None, None,
-                                 f"{type(e).__name__}: {e}"))
-                    continue
-                for info in infos:
-                    if not info.isfile():
-                        continue
-                    if (max_member_bytes is not None
-                            and info.size > max_member_bytes):
-                        rows.append((ref, info.name, info.size, None,
-                                     "member exceeds max_member_bytes "
-                                     f"({info.size})"))
-                        continue
-                    try:
-                        data = tf.extractfile(info).read()
-                    except Exception as e:
-                        rows.append((ref, info.name, info.size, None,
-                                     f"{type(e).__name__}: {e}"))
-                        continue
-                    rows.append((ref, info.name, len(data), data, None))
-            yield pd.DataFrame(rows, columns=cols)
-
-    return blobs.select(
-        F.col(ref_col).alias("ref"), F.col(content_col).alias("content")
-    ).mapInPandas(kernel, out_schema)
+    return map_rows(_blobs(blobs, ref_col, content_col), members,
+                    _MEMBERS)
 
 
 def webdataset_samples(blobs: DataFrame, ref_col: str = "path",
@@ -447,47 +358,62 @@ def webdataset_samples(blobs: DataFrame, ref_col: str = "path",
     unit, exactly how WebDataset loaders consume them.  Directories
     and keyless members are skipped; a non-tar blob is one error
     row."""
-    import pandas as pd
+    def samples(ref, raw):
+        tf = _open_tar(raw)
+        rows, by_key = [], {}
+        for info in tf.getmembers():
+            if not info.isfile():
+                continue
+            d = info.name.rfind("/") + 1
+            dot = info.name.find(".", d)
+            if dot <= d:  # dotless or hidden: not a sample part
+                continue
+            key, ext = info.name[:dot], info.name[dot + 1:]
+            try:
+                data = tf.extractfile(info).read()
+            except Exception as e:
+                rows.append((ref, key, None, None, f"{ext}: {error_text(e)}"))
+                continue
+            by_key.setdefault(key, {})[ext] = data
+        rows.extend((ref, key, parts, len(parts), None)
+                    for key, parts in by_key.items())
+        return rows
 
-    out_schema = ("ref string, key string, parts map<string,binary>, "
-                  "n_parts int, error string")
+    return map_rows(_blobs(blobs, ref_col, content_col), samples,
+                    "ref string, key string, parts map<string,binary>, "
+                    "n_parts int, error string")
 
-    def kernel(batches):
-        import io
-        import tarfile
 
-        cols = ["ref", "key", "parts", "n_parts", "error"]
-        for pdf in batches:
-            rows = []
-            for ref, content in zip(pdf["ref"], pdf["content"]):
-                raw = bytes(content) if content is not None else b""
-                try:
-                    tf = tarfile.open(fileobj=io.BytesIO(raw), mode="r:*")
-                    infos = tf.getmembers()
-                except Exception as e:
-                    rows.append((ref, None, None, None,
-                                 f"{type(e).__name__}: {e}"))
-                    continue
-                samples: dict[str, dict[str, bytes]] = {}
-                for info in infos:
-                    if not info.isfile():
-                        continue
-                    d = info.name.rfind("/") + 1
-                    dot = info.name.find(".", d)
-                    if dot <= d:  # dotless or hidden: not a sample part
-                        continue
-                    key, ext = info.name[:dot], info.name[dot + 1:]
-                    try:
-                        data = tf.extractfile(info).read()
-                    except Exception as e:
-                        rows.append((ref, key, None, None,
-                                     f"{ext}: {type(e).__name__}: {e}"))
-                        continue
-                    samples.setdefault(key, {})[ext] = data
-                for key, parts in samples.items():
-                    rows.append((ref, key, parts, len(parts), None))
-            yield pd.DataFrame(rows, columns=cols)
+_MEMBERS = ("ref string, member string, n_bytes long, content binary, "
+            "error string")
 
-    return blobs.select(
-        F.col(ref_col).alias("ref"), F.col(content_col).alias("content")
-    ).mapInPandas(kernel, out_schema)
+
+def _blobs(blobs: DataFrame, ref_col: str, content_col: str) -> DataFrame:
+    return blobs.select(F.col(ref_col).alias("ref"),
+                        F.col(content_col).alias("content"))
+
+
+def _open_tar(raw: bytes):
+    import io
+    import tarfile
+
+    return tarfile.open(fileobj=io.BytesIO(raw), mode="r:*")
+
+
+def _members(ref, members, max_member_bytes: int | None) -> list[tuple]:
+    """(name, size, read) archive members -> member rows.  A member
+    larger than max_member_bytes (when set) is an error row and is
+    never read; a read that raises is that member's error row."""
+    rows = []
+    for name, size, read in members:
+        if max_member_bytes is not None and size > max_member_bytes:
+            rows.append((ref, name, size, None,
+                         f"member exceeds max_member_bytes ({size})"))
+            continue
+        try:
+            data = read()
+        except Exception as e:  # bad CRC / encrypted / short
+            rows.append((ref, name, size, None, error_text(e)))
+            continue
+        rows.append((ref, name, len(data), data, None))
+    return rows

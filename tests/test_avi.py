@@ -85,7 +85,8 @@ def test_avi_frame_features_distributed_sampling(spark):
         [("v1", "video", bytearray(data),
           {"n_frames": "7"}),
          ("bad", "video", bytearray(b"RIFF\x04\x00\x00\x00AVI "),
-          {"n_frames": "2"})],
+          {"n_frames": "2"}),
+         ("nul", "video", None, {"n_frames": "3"})],
         "media_ref string, media_type string, content binary, "
         "meta map<string,string>")
     got = {(r["media_ref"], r["frame_idx"]): r for r in
@@ -99,6 +100,10 @@ def test_avi_frame_features_distributed_sampling(spark):
         assert r["decode_error"] is None
     assert all(got[k]["decode_error"] is not None
                for k in got if k[0] == "bad")
+    # a NULL blob decodes as empty bytes: one decode_error per sampled frame
+    assert sorted(k for k in got if k[0] == "nul") == [("nul", 0), ("nul", 2)]
+    assert all(got[k]["decode_error"] is not None
+               for k in got if k[0] == "nul")
 
 
 def test_avi_frame_features_grouped_matches_fanout(spark):

@@ -1064,7 +1064,7 @@ def test_render_from_elements_matches_from_bytes(spark):
             for r in render_pdf_pages(
                 blobs.withColumnRenamed("ref", "doc_id"), scale=0.25
             ).filter("error IS NULL").collect()}
-    got_df = render_pdf_pages_from_elements(els, scale=0.25, partitions=4)
+    got_df = render_pdf_pages_from_elements(els, scale=0.25)
     got = {(r["doc_id"], r["p_num"]):
            (r["width"], r["height"], r["n_dark"], bytes(r["content"] or b""))
            for r in got_df.filter("error IS NULL").collect()}
