@@ -35,7 +35,6 @@ PAGE_PROFILES = {
     "commerce": ["price", "total", "invoice", "customer", "order"],
 }
 from pydoxtools_spark.pipeline import extract  # noqa: E402
-from pydoxtools_spark.schemas import DOCUMENTS_IN  # noqa: E402
 
 SF_DEFAULT = "/root/testdata/sf0.001"
 
@@ -90,23 +89,34 @@ def _html_payload_col() -> F.Column:
     )
 
 
-def _as_documents_in(df: DataFrame, payload: F.Column, kind: str) -> DataFrame:
+def _as_documents_in(df: DataFrame, kind: str,
+                     payload: F.Column | None = None,
+                     ref_prefix: str | None = None) -> DataFrame:
+    """One-span documents_in rows: a text ``payload`` column, or (the
+    blob kinds) NULL text and media_ref = ``ref_prefix`` || doc_id, the
+    key the generated blob table carries."""
+    did = F.col("doc_id").cast("string")
+    null = F.lit(None).cast("string")
     return df.select(
-        F.col("doc_id").cast("string").alias("doc_id"),
+        did.alias("doc_id"),
         F.array(
             F.struct(
                 F.lit(kind).alias("kind"),
-                payload.alias("text"),
-                F.lit(None).cast("string").alias("media_ref"),
+                (null if payload is None else payload).alias("text"),
+                (null if ref_prefix is None
+                 else F.concat(F.lit(ref_prefix), did)).alias("media_ref"),
                 F.lit(0).alias("offset"),
             )
         ).alias("spans"),
     )
 
 
-def _exploded_spans(spark: SparkSession, docs_in: DataFrame) -> DataFrame:
+def _exploded_spans(spark: SparkSession, docs_in: DataFrame,
+                    **extract_kwargs) -> DataFrame:
+    """extract() over ``docs_in`` -> one (doc_id, ord, span) row per
+    output span; ``extract_kwargs`` carry the blob tables / modes."""
     _ensure_pkg(spark)
-    out = extract(spark, docs_in, None)
+    out = extract(spark, docs_in, None, **extract_kwargs)
     return out.select(
         F.col("doc_id").cast("bigint").alias("doc_id"),
         F.posexplode("spans").alias("ord", "span"),
@@ -120,11 +130,41 @@ def _exploded_spans(spark: SparkSession, docs_in: DataFrame) -> DataFrame:
     )
 
 
+_BLOBS = "ref string, content binary"
+
+
+def _per_doc(d: DataFrame, fn: Callable[..., tuple], schema) -> DataFrame:
+    """Fixture generation: ``fn(*row)`` maps one row of ``d`` to one
+    output tuple (fields in ``schema`` order).  documents.parquet can
+    be a single file, so the rows are spread over the session's default
+    parallelism first and generation (and the kernel after it) runs at
+    full width.  No error containment: a generator bug must fail the
+    query, never become a garbage blob."""
+
+    def gen(batches):
+        import pandas as pd
+
+        for pdf in batches:
+            yield pd.DataFrame(
+                [fn(*row) for row in zip(*(pdf[c] for c in pdf.columns))])
+
+    width = d.sparkSession.sparkContext.defaultParallelism
+    return d.repartition(width).mapInPandas(gen, schema)
+
+
+def _by_media_ref(df: DataFrame, *cols) -> DataFrame:
+    """(doc_id, *cols), doc_id taken from the trailing digits of the
+    fixture media_ref."""
+    return df.select(
+        F.regexp_extract("media_ref", r"(\d+)$", 1).cast("bigint")
+        .alias("doc_id"), *cols)
+
+
 # --------------------------------------------------------------- queries
 
 
 def q_html_main_content(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs_in = _as_documents_in(_docs(spark, sf_dir), _html_payload_col(), "html")
+    docs_in = _as_documents_in(_docs(spark, sf_dir), "html", _html_payload_col())
     return _exploded_spans(spark, docs_in)
 
 
@@ -132,7 +172,7 @@ def q_text_paragraph_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
     payload = F.concat(
         F.trim("text"), F.lit("\n\npart two "), F.col("doc_id").cast("string")
     )
-    docs_in = _as_documents_in(_docs(spark, sf_dir), payload, "text")
+    docs_in = _as_documents_in(_docs(spark, sf_dir), "text", payload)
     return _exploded_spans(spark, docs_in)
 
 
@@ -153,7 +193,7 @@ def q_html_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.lit('"></head><body><p>'), F.col("text"),
         F.lit("</p></body></html>"),
     )
-    docs_in = _as_documents_in(d, payload, "html")
+    docs_in = _as_documents_in(d, "html", payload)
     return html_meta_table(docs_in).select(
         F.col("doc_id").cast("bigint").alias("doc_id"),
         "title", "short_title",
@@ -168,106 +208,75 @@ def q_pdf_bytes(spark: SparkSession, sf_dir: str) -> DataFrame:
     exercise the strict->lenient repair ladder (pdf_utils.py:81-148
     semantics).  The parse kernel + layout branch must recover the same
     (header, text) spans either way."""
-    from pydoxtools_spark.pipeline import extract as _extract
-
     d = _docs(spark, sf_dir).select("doc_id", "text")
-    docs_in = d.select(
-        F.col("doc_id").cast("string").alias("doc_id"),
-        F.array(
-            F.struct(
-                F.lit("pdf_bytes").alias("kind"),
-                F.lit(None).cast("string").alias("text"),
-                F.concat(F.lit("media://pdfb/"),
-                         F.col("doc_id").cast("string")).alias("media_ref"),
-                F.lit(0).alias("offset"),
-            )
-        ).alias("spans"),
-    )
 
-    def gen_blobs(batches):
+    def pdf_blob(doc_id, text):
         import re as _re
 
-        import pandas as pd
+        from pydoxtools_spark.functions.pdfparse import (
+            build_pdf_cid,
+            build_pdf_v15,
+            build_tiny_pdf,
+        )
 
-        from pydoxtools_spark.functions.pdfparse import build_tiny_pdf
+        # mirror the oracle's trim + \s+ collapse exactly
+        t = _re.sub(r"\s+", " ", (text or "").strip(" "))
+        pages = [{
+            "texts": [(72.0, 700.0, 18.0, f"Doc {doc_id}"),
+                      (72.0, 600.0, 10.0, t)],
+        }]
+        # real-world dialect rotation (round 4) — every variant
+        # is layout-identical by construction, so the oracle is
+        # unchanged while the parse exercises FlateDecode, TJ
+        # arrays, and (every 3rd doc) the full PDF 1.5 shape:
+        # ObjStm-packed dicts, xref STREAM trailer, /Contents
+        # arrays split mid-operator
+        if int(doc_id) % 3 == 1 and int(doc_id) % 5 != 0:
+            # (never the damaged subset: a trailer-stripped v15
+            # loses the structure its split /Contents arrays
+            # need for exact recovery — partial salvage only)
+            data = build_pdf_v15(pages)
+        elif int(doc_id) % 3 == 2 and int(doc_id) % 5 != 0:
+            # r5: Type0/Identity-H CID dialect (hex-string
+            # CIDs through a /ToUnicode CMap; /DW 500 keeps
+            # the 0.5-em layout, so the oracle is unchanged).
+            # Never damaged: the CMap lives in a stream the
+            # lenient rung cannot attribute to its font.
+            data = build_pdf_cid(pages)
+        else:
+            # r5: within the classic group, rotate the
+            # non-Flate filter dialects (LZWDecode, the
+            # [/ASCII85Decode /FlateDecode] chain) and the
+            # RC4-40 encrypted shape — layout identical,
+            # oracle unchanged; never the damaged subset
+            # (lenient can't zlib-sniff LZW/RC4 payloads)
+            sf, ec = None, False
+            if int(doc_id) % 5 != 0:
+                if int(doc_id) % 9 == 0:
+                    sf = "lzw"
+                elif int(doc_id) % 9 == 6:
+                    sf = "a85+flate"
+                elif int(doc_id) % 9 == 3:
+                    # AESV2 (R4): MD5 object keys + AES-CBC
+                    # payloads; aes256/R6 stays pytest-only
+                    # (pure-python KDF ~0.4 s/doc)
+                    ec = "aesv2"
+            data = build_tiny_pdf(
+                pages, compress=True, use_tj=True,
+                stream_filter=sf, encrypt=ec,
+                # r5: half the classic docs put the font size
+                # in the text MATRIX (Tf 1 + diagonal Tm) —
+                # layout identical, oracle unchanged
+                tm_scaled=(int(doc_id) % 2 == 0))
+        if int(doc_id) % 5 == 0:
+            # damaged: repair rung must recover (and now also
+            # zlib-sniff the compressed stream blobs)
+            data = data[: data.rfind(b"startxref")]
+        return (f"media://pdfb/{doc_id}", data)
 
-        for pdf in batches:
-            rows = []
-            from pydoxtools_spark.functions.pdfparse import build_pdf_v15
-
-            for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
-                # mirror the oracle's trim + \s+ collapse exactly
-                t = _re.sub(r"\s+", " ", (text or "").strip(" "))
-                pages = [{
-                    "texts": [(72.0, 700.0, 18.0, f"Doc {doc_id}"),
-                              (72.0, 600.0, 10.0, t)],
-                }]
-                # real-world dialect rotation (round 4) — every variant
-                # is layout-identical by construction, so the oracle is
-                # unchanged while the parse exercises FlateDecode, TJ
-                # arrays, and (every 3rd doc) the full PDF 1.5 shape:
-                # ObjStm-packed dicts, xref STREAM trailer, /Contents
-                # arrays split mid-operator
-                if int(doc_id) % 3 == 1 and int(doc_id) % 5 != 0:
-                    # (never the damaged subset: a trailer-stripped v15
-                    # loses the structure its split /Contents arrays
-                    # need for exact recovery — partial salvage only)
-                    data = build_pdf_v15(pages)
-                elif int(doc_id) % 3 == 2 and int(doc_id) % 5 != 0:
-                    # r5: Type0/Identity-H CID dialect (hex-string
-                    # CIDs through a /ToUnicode CMap; /DW 500 keeps
-                    # the 0.5-em layout, so the oracle is unchanged).
-                    # Never damaged: the CMap lives in a stream the
-                    # lenient rung cannot attribute to its font.
-                    from pydoxtools_spark.functions.pdfparse import (
-                        build_pdf_cid,
-                    )
-
-                    data = build_pdf_cid(pages)
-                else:
-                    # r5: within the classic group, rotate the
-                    # non-Flate filter dialects (LZWDecode, the
-                    # [/ASCII85Decode /FlateDecode] chain) and the
-                    # RC4-40 encrypted shape — layout identical,
-                    # oracle unchanged; never the damaged subset
-                    # (lenient can't zlib-sniff LZW/RC4 payloads)
-                    sf, ec = None, False
-                    if int(doc_id) % 5 != 0:
-                        if int(doc_id) % 9 == 0:
-                            sf = "lzw"
-                        elif int(doc_id) % 9 == 6:
-                            sf = "a85+flate"
-                        elif int(doc_id) % 9 == 3:
-                            # AESV2 (R4): MD5 object keys + AES-CBC
-                            # payloads; aes256/R6 stays pytest-only
-                            # (pure-python KDF ~0.4 s/doc)
-                            ec = "aesv2"
-                    data = build_tiny_pdf(
-                        pages, compress=True, use_tj=True,
-                        stream_filter=sf, encrypt=ec,
-                        # r5: half the classic docs put the font size
-                        # in the text MATRIX (Tf 1 + diagonal Tm) —
-                        # layout identical, oracle unchanged
-                        tm_scaled=(int(doc_id) % 2 == 0))
-                if int(doc_id) % 5 == 0:
-                    # damaged: repair rung must recover (and now also
-                    # zlib-sniff the compressed stream blobs)
-                    data = data[: data.rfind(b"startxref")]
-                rows.append((f"media://pdfb/{doc_id}", data))
-            yield pd.DataFrame(rows, columns=["ref", "content"])
-
-    blobs = d.repartition(32).mapInPandas(gen_blobs, "ref string, content binary")
-    out = _extract(spark, docs_in, None, pdf_blobs=blobs)
-    return out.select(
-        F.col("doc_id").cast("bigint").alias("doc_id"),
-        F.posexplode("spans").alias("ord", "span"),
-    ).select(
-        "doc_id", "ord",
-        F.col("span.kind").alias("kind"),
-        F.col("span.text").alias("span_text"),
-        F.col("span.media_ref").alias("media_ref"),
-        F.col("span.offset").alias("offset"),
-    )
+    docs_in = _as_documents_in(d, "pdf_bytes", ref_prefix="media://pdfb/")
+    return _exploded_spans(spark, docs_in,
+                           pdf_blobs=_per_doc(d, pdf_blob, _BLOBS))
 
 
 def q_pdf_images(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -287,62 +296,52 @@ def q_pdf_images(spark: SparkSession, sf_dir: str) -> DataFrame:
     stream bytes, and media_features must really decode BOTH subsets
     (width/height/mean luminance/n_bytes) — the oracle recomputes
     everything from the generating parameters."""
+    from pyspark import StorageLevel
+
     from pydoxtools_spark.operators.multimodal import media_features
     from pydoxtools_spark.pipeline import parse_pdf_blobs, pdf_media_blobs
 
-    d = _docs(spark, sf_dir).select("doc_id")
-
-    def gen_blobs(batches):
-        import pandas as pd
-
+    def pdf_blob(doc_id):
         from pydoxtools_spark.functions.pdfparse import build_tiny_pdf
 
-        for pdf in batches:
-            rows = []
-            for doc_id in pdf["doc_id"]:
-                i = int(doc_id)
-                x, y = 100.0 + (i % 7) * 40, 300.0 + (i % 5) * 30
-                w, h = 80.0 + (i % 3) * 20, 60.0 + (i % 2) * 20
-                if i % 3 == 0:
-                    # r6: REAL baseline JPEG payload (functions/jpeg
-                    # codec) — uniform EVEN gray round-trips exactly
-                    # (DC=8*(g-128), luma step 16), so the oracle can
-                    # state mean_level analytically for a lossy codec
-                    g = 2 * (40 + i % 60)
-                    img1 = (x, y, w, h, "dct", 8, 6, (g, g, g))
-                elif i % 3 == 2:
-                    # r6: REAL CCITT Group 4 payload (functions/ccitt
-                    # codec — the scanned-document encoding): vertical
-                    # stripes of period 4, width a multiple of 4, so
-                    # exactly half the pixels are ink regardless of
-                    # phase -> mean luminance 127 analytically, and
-                    # the BMP re-encode is 54 + 3*w*h bytes (stride
-                    # pad-free when 3w % 4 == 0)
-                    pw = 12 + 4 * ((i // 3) % 3)
-                    ph = 6 + 2 * ((i // 3) % 2)
-                    img1 = (x, y, w, h, "g4", pw, ph,
-                            ((i // 3) % 4, 0, 0))
-                else:
-                    img1 = (x, y, w, h, "rgb", 4 + i % 5, 3 + i % 3,
-                            (i % 200, 100, 50))
-                images = [img1]
-                if i % 4 == 0:
-                    images.append((420.0, 560.0, 60.0, 45.0, "rgb",
-                                   5, 4, (40, 90, i % 160)))
-                pages = [{"texts": [(72.0, 760.0, 14.0, f"Doc {i}")],
-                          "images": images}]
-                rows.append((str(i), build_tiny_pdf(
-                    pages, compress=True, use_tj=True)))
-            yield pd.DataFrame(rows, columns=["ref", "content"])
-
-    from pyspark import StorageLevel
+        i = int(doc_id)
+        x, y = 100.0 + (i % 7) * 40, 300.0 + (i % 5) * 30
+        w, h = 80.0 + (i % 3) * 20, 60.0 + (i % 2) * 20
+        if i % 3 == 0:
+            # r6: REAL baseline JPEG payload (functions/jpeg
+            # codec) — uniform EVEN gray round-trips exactly
+            # (DC=8*(g-128), luma step 16), so the oracle can
+            # state mean_level analytically for a lossy codec
+            g = 2 * (40 + i % 60)
+            img1 = (x, y, w, h, "dct", 8, 6, (g, g, g))
+        elif i % 3 == 2:
+            # r6: REAL CCITT Group 4 payload (functions/ccitt
+            # codec — the scanned-document encoding): vertical
+            # stripes of period 4, width a multiple of 4, so
+            # exactly half the pixels are ink regardless of
+            # phase -> mean luminance 127 analytically, and
+            # the BMP re-encode is 54 + 3*w*h bytes (stride
+            # pad-free when 3w % 4 == 0)
+            pw = 12 + 4 * ((i // 3) % 3)
+            ph = 6 + 2 * ((i // 3) % 2)
+            img1 = (x, y, w, h, "g4", pw, ph,
+                    ((i // 3) % 4, 0, 0))
+        else:
+            img1 = (x, y, w, h, "rgb", 4 + i % 5, 3 + i % 3,
+                    (i % 200, 100, 50))
+        images = [img1]
+        if i % 4 == 0:
+            images.append((420.0, 560.0, 60.0, 45.0, "rgb",
+                           5, 4, (40, 90, i % 160)))
+        pages = [{"texts": [(72.0, 760.0, 14.0, f"Doc {i}")],
+                  "images": images}]
+        return (str(i), build_tiny_pdf(pages, compress=True, use_tj=True))
 
     # TWO python kernels consume the generated blobs (element parse +
     # image-stream extraction); without a persist each consumer re-runs
     # the generation kernel (r7)
-    blobs = d.repartition(32).mapInPandas(
-        gen_blobs, "ref string, content binary").persist(
-        StorageLevel.MEMORY_AND_DISK)
+    blobs = _per_doc(_docs(spark, sf_dir).select("doc_id"), pdf_blob,
+                     _BLOBS).persist(StorageLevel.MEMORY_AND_DISK)
     els = parse_pdf_blobs(blobs).filter(F.col("type") == "Image").select(
         "media_ref", F.round("x0", 4).alias("x0"),
         F.round("y0", 4).alias("y0"), F.round("x1", 4).alias("x1"),
@@ -369,62 +368,32 @@ def q_pdf_table_chars(spark: SparkSession, sf_dir: str) -> DataFrame:
     -> FROZEN validity tree -> table span (reference
     extract_tables.py:351-761).  The oracle renders the analytically
     known grid through the same ' | ' / newline canonical form."""
-    from pydoxtools_spark.pipeline import extract as _extract
-
     d = _docs(spark, sf_dir).select("doc_id")
-    docs_in = d.select(
-        F.col("doc_id").cast("string").alias("doc_id"),
-        F.array(
-            F.struct(
-                F.lit("pdf_bytes").alias("kind"),
-                F.lit(None).cast("string").alias("text"),
-                F.concat(F.lit("media://pdft/"),
-                         F.col("doc_id").cast("string")).alias("media_ref"),
-                F.lit(0).alias("offset"),
-            )
-        ).alias("spans"),
-    )
+    nr, nc, cw, ch = 3, 2, 90.0, 20.0
+    tx0, ty1 = 72.0, 600.0
+    ty0 = ty1 - nr * ch
+    lines = [(tx0, ty1 - r * ch, tx0 + nc * cw, ty1 - r * ch)
+             for r in range(nr + 1)]
+    lines += [(tx0 + c * cw, ty0, tx0 + c * cw, ty1)
+              for c in range(nc + 1)]
 
-    def gen_blobs(batches):
-        import pandas as pd
-
+    def pdf_blob(doc_id):
         from pydoxtools_spark.functions.pdfparse import build_tiny_pdf
 
-        nr, nc, cw, ch = 3, 2, 90.0, 20.0
-        tx0, ty1 = 72.0, 600.0
-        ty0 = ty1 - nr * ch
-        lines = [(tx0, ty1 - r * ch, tx0 + nc * cw, ty1 - r * ch)
-                 for r in range(nr + 1)]
-        lines += [(tx0 + c * cw, ty0, tx0 + c * cw, ty1)
-                  for c in range(nc + 1)]
-        for pdf in batches:
-            rows = []
-            for doc_id in pdf["doc_id"]:
-                texts = [(72.0, 730.0, 18.0, f"Doc {doc_id}")]
-                for r in range(nr):
-                    for c in range(nc):
-                        texts.append(
-                            (tx0 + c * cw + 4.0, ty1 - (r + 1) * ch + 6.0,
-                             10.0, f"r{r}c{c} d{doc_id}"))
-                data = build_tiny_pdf([{"texts": texts, "lines": lines}],
-                                      compress=True, use_tj=True)
-                rows.append((f"media://pdft/{doc_id}", data))
-            yield pd.DataFrame(rows, columns=["ref", "content"])
+        texts = [(72.0, 730.0, 18.0, f"Doc {doc_id}")]
+        for r in range(nr):
+            for c in range(nc):
+                texts.append(
+                    (tx0 + c * cw + 4.0, ty1 - (r + 1) * ch + 6.0,
+                     10.0, f"r{r}c{c} d{doc_id}"))
+        data = build_tiny_pdf([{"texts": texts, "lines": lines}],
+                              compress=True, use_tj=True)
+        return (f"media://pdft/{doc_id}", data)
 
-    # documents.parquet can be a single file -> repartition so blob
-    # generation and the parse kernel parallelize
-    blobs = d.repartition(32).mapInPandas(gen_blobs, "ref string, content binary")
-    out = _extract(spark, docs_in, None, pdf_blobs=blobs, table_mode="chars")
-    return out.select(
-        F.col("doc_id").cast("bigint").alias("doc_id"),
-        F.posexplode("spans").alias("ord", "span"),
-    ).select(
-        "doc_id", "ord",
-        F.col("span.kind").alias("kind"),
-        F.col("span.text").alias("span_text"),
-        F.col("span.media_ref").alias("media_ref"),
-        F.col("span.offset").alias("offset"),
-    )
+    docs_in = _as_documents_in(d, "pdf_bytes", ref_prefix="media://pdft/")
+    return _exploded_spans(spark, docs_in,
+                           pdf_blobs=_per_doc(d, pdf_blob, _BLOBS),
+                           table_mode="chars")
 
 
 def q_ocr_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -433,162 +402,66 @@ def q_ocr_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
     deterministic text-BMP rasters + the batched mock model produce a
     text span AFTER the image span; the raster encodes 'scan <id>'
     analytically, so the oracle knows every recognized string."""
-    from pydoxtools_spark.pipeline import extract as _extract
-
     d = _docs(spark, sf_dir).select("doc_id")
-    docs_in = d.select(
-        F.col("doc_id").cast("string").alias("doc_id"),
-        F.array(
-            F.struct(
-                F.lit("image_ref").alias("kind"),
-                F.lit(None).cast("string").alias("text"),
-                F.concat(F.lit("media://scan/"),
-                         F.col("doc_id").cast("string")).alias("media_ref"),
-                F.lit(0).alias("offset"),
-            )
-        ).alias("spans"),
-    )
 
-    def gen_blobs(batches):
-        import pandas as pd
-
+    def scan_blob(doc_id):
         from pydoxtools_spark.functions.media import build_text_bmp
 
-        for pdf in batches:
-            rows = [(f"media://scan/{did}", build_text_bmp(f"scan {did}"))
-                    for did in pdf["doc_id"]]
-            yield pd.DataFrame(rows, columns=["ref", "content"])
+        return (f"media://scan/{doc_id}", build_text_bmp(f"scan {doc_id}"))
 
     def mock_model(images):
         from pydoxtools_spark.functions.media import read_text_bmp_pixels
 
         return [read_text_bmp_pixels(im) for im in images]
 
-    blobs = d.repartition(32).mapInPandas(gen_blobs, "ref string, content binary")
-    out = _extract(spark, docs_in, None,
-                   media_blobs=blobs, ocr_model=mock_model)
-    return out.select(
-        F.col("doc_id").cast("bigint").alias("doc_id"),
-        F.posexplode("spans").alias("ord", "span"),
-    ).select(
-        "doc_id", "ord",
-        F.col("span.kind").alias("kind"),
-        F.col("span.text").alias("span_text"),
-        F.col("span.media_ref").alias("media_ref"),
-        F.col("span.offset").alias("offset"),
-    )
+    docs_in = _as_documents_in(d, "image_ref", ref_prefix="media://scan/")
+    return _exploded_spans(spark, docs_in,
+                           media_blobs=_per_doc(d, scan_blob, _BLOBS),
+                           ocr_model=mock_model)
+
+
+def _block_doc_spans(spark: SparkSession, sf_dir: str, fmt: str) -> DataFrame:
+    """docx_spans / odt_spans body: the same analytic block structure
+    (Heading1, paragraph, 2-item list, 2x2 table, embedded image)
+    built per doc as a real ``fmt`` zip and routed via the
+    ``<fmt>_bytes`` span kind, so both formats share one oracle."""
+    d = _docs(spark, sf_dir).select("doc_id", "text")
+
+    def block_blob(doc_id, text):
+        from pydoxtools_spark.functions.docx import build_tiny_docx
+        from pydoxtools_spark.functions.odf import build_tiny_odt
+
+        did = str(doc_id)
+        build = build_tiny_docx if fmt == "docx" else build_tiny_odt
+        return (f"media://{fmt}/{did}", build([
+            ("header", f"Doc {did}", 1),
+            ("text", text or ""),
+            ("list", [f"alpha {did}", "beta"]),
+            ("table", [[f"a{did}", "b"], ["c", f"d{did}"]]),
+            ("image", "media/image1.png"),
+        ]))
+
+    docs_in = _as_documents_in(d, f"{fmt}_bytes", ref_prefix=f"media://{fmt}/")
+    return _exploded_spans(spark, docs_in,
+                           doc_blobs=_per_doc(d, block_blob, _BLOBS))
 
 
 def q_docx_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
     """OOXML (docx) extraction branch (reference PandocToPdxConverter,
-    extract_pandoc.py:98-167) under the oracle: a deterministic docx
-    (Heading1, paragraph, 2-item list, 2x2 table, embedded image) is
-    built per doc as real zip bytes, routed via the docx_bytes span
-    kind through the from-scratch ECMA-376 kernel; spans and running
+    extract_pandoc.py:98-167) under the oracle: the block document is
+    routed through the from-scratch ECMA-376 kernel; spans and running
     offsets must match the analytically-known block structure — the
     same block mapping the markdown branch pins."""
-    from pydoxtools_spark.pipeline import extract as _extract
-
-    d = _docs(spark, sf_dir).select("doc_id", "text")
-    docs_in = d.select(
-        F.col("doc_id").cast("string").alias("doc_id"),
-        F.array(
-            F.struct(
-                F.lit("docx_bytes").alias("kind"),
-                F.lit(None).cast("string").alias("text"),
-                F.concat(F.lit("media://docx/"),
-                         F.col("doc_id").cast("string")).alias("media_ref"),
-                F.lit(0).alias("offset"),
-            )
-        ).alias("spans"),
-    )
-
-    def gen_blobs(batches):
-        import pandas as pd
-
-        from pydoxtools_spark.functions.docx import build_tiny_docx
-
-        for pdf in batches:
-            rows = []
-            for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
-                did = str(doc_id)
-                data = build_tiny_docx([
-                    ("header", f"Doc {did}", 1),
-                    ("text", text or ""),
-                    ("list", [f"alpha {did}", "beta"]),
-                    ("table", [[f"a{did}", "b"], ["c", f"d{did}"]]),
-                    ("image", "media/image1.png"),
-                ])
-                rows.append((f"media://docx/{did}", data))
-            yield pd.DataFrame(rows, columns=["ref", "content"])
-
-    blobs = d.repartition(32).mapInPandas(gen_blobs, "ref string, content binary")
-    out = _extract(spark, docs_in, None, doc_blobs=blobs)
-    return out.select(
-        F.col("doc_id").cast("bigint").alias("doc_id"),
-        F.posexplode("spans").alias("ord", "span"),
-    ).select(
-        "doc_id", "ord",
-        F.col("span.kind").alias("kind"),
-        F.col("span.text").alias("span_text"),
-        F.col("span.media_ref").alias("media_ref"),
-        F.col("span.offset").alias("offset"),
-    )
+    return _block_doc_spans(spark, sf_dir, "docx")
 
 
 def q_odt_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
     """OpenDocument (odt) branch (reference pandoc coverage,
-    extract_pandoc.py:98-167): the SAME analytic block structure as
-    docx_spans built as a real ODF zip per doc, routed via odt_bytes
-    through the container kernel's format probe — so the docx oracle
-    applies verbatim (the block-mapping contract across formats)."""
-    from pydoxtools_spark.pipeline import extract as _extract
-
-    d = _docs(spark, sf_dir).select("doc_id", "text")
-    docs_in = d.select(
-        F.col("doc_id").cast("string").alias("doc_id"),
-        F.array(
-            F.struct(
-                F.lit("odt_bytes").alias("kind"),
-                F.lit(None).cast("string").alias("text"),
-                F.concat(F.lit("media://odt/"),
-                         F.col("doc_id").cast("string")).alias("media_ref"),
-                F.lit(0).alias("offset"),
-            )
-        ).alias("spans"),
-    )
-
-    def gen_blobs(batches):
-        import pandas as pd
-
-        from pydoxtools_spark.functions.odf import build_tiny_odt
-
-        for pdf in batches:
-            rows = []
-            for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
-                did = str(doc_id)
-                data = build_tiny_odt([
-                    ("header", f"Doc {did}", 1),
-                    ("text", text or ""),
-                    ("list", [f"alpha {did}", "beta"]),
-                    ("table", [[f"a{did}", "b"], ["c", f"d{did}"]]),
-                    ("image", "media/image1.png"),
-                ])
-                rows.append((f"media://odt/{did}", data))
-            yield pd.DataFrame(rows, columns=["ref", "content"])
-
-    blobs = d.repartition(32).mapInPandas(gen_blobs, "ref string, content binary")
-    out = _extract(spark, docs_in, None, doc_blobs=blobs)
-    return out.select(
-        F.col("doc_id").cast("bigint").alias("doc_id"),
-        F.posexplode("spans").alias("ord", "span"),
-    ).select(
-        "doc_id", "ord",
-        F.col("span.kind").alias("kind"),
-        F.col("span.text").alias("span_text"),
-        F.col("span.media_ref").alias("media_ref"),
-        F.col("span.offset").alias("offset"),
-    )
+    extract_pandoc.py:98-167): the SAME block document as docx_spans
+    as a real ODF zip, routed through the container kernel's format
+    probe — so the docx oracle applies verbatim (the block-mapping
+    contract across formats)."""
+    return _block_doc_spans(spark, sf_dir, "odt")
 
 
 def q_epub_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -596,55 +469,26 @@ def q_epub_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
     routed via epub_bytes; chapters ride the EXISTING html kernel, so
     spans are the html branch's — header + paragraph per chapter, with
     running offsets across the whole book."""
-    from pydoxtools_spark.pipeline import extract as _extract
-
     d = _docs(spark, sf_dir).select("doc_id", "text")
-    docs_in = d.select(
-        F.col("doc_id").cast("string").alias("doc_id"),
-        F.array(
-            F.struct(
-                F.lit("epub_bytes").alias("kind"),
-                F.lit(None).cast("string").alias("text"),
-                F.concat(F.lit("media://epub/"),
-                         F.col("doc_id").cast("string")).alias("media_ref"),
-                F.lit(0).alias("offset"),
-            )
-        ).alias("spans"),
-    )
 
-    def gen_blobs(batches):
+    def epub_blob(doc_id, text):
         import re as _re
-
-        import pandas as pd
 
         from pydoxtools_spark.functions.odf import build_tiny_epub
 
-        for pdf in batches:
-            rows = []
-            for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
-                did = str(doc_id)
-                t = _re.sub(r"\s+", " ", (text or "").strip(" "))
-                chapters = [
-                    f"<html><body><h1>Chapter 1 of {did}</h1>"
-                    f"<p>{t}</p></body></html>",
-                    f"<html><body><h1>Chapter 2 of {did}</h1>"
-                    f"<p>closing words {did}</p></body></html>",
-                ]
-                rows.append((f"media://epub/{did}", build_tiny_epub(chapters)))
-            yield pd.DataFrame(rows, columns=["ref", "content"])
+        did = str(doc_id)
+        t = _re.sub(r"\s+", " ", (text or "").strip(" "))
+        chapters = [
+            f"<html><body><h1>Chapter 1 of {did}</h1>"
+            f"<p>{t}</p></body></html>",
+            f"<html><body><h1>Chapter 2 of {did}</h1>"
+            f"<p>closing words {did}</p></body></html>",
+        ]
+        return (f"media://epub/{did}", build_tiny_epub(chapters))
 
-    blobs = d.repartition(32).mapInPandas(gen_blobs, "ref string, content binary")
-    out = _extract(spark, docs_in, None, doc_blobs=blobs)
-    return out.select(
-        F.col("doc_id").cast("bigint").alias("doc_id"),
-        F.posexplode("spans").alias("ord", "span"),
-    ).select(
-        "doc_id", "ord",
-        F.col("span.kind").alias("kind"),
-        F.col("span.text").alias("span_text"),
-        F.col("span.media_ref").alias("media_ref"),
-        F.col("span.offset").alias("offset"),
-    )
+    docs_in = _as_documents_in(d, "epub_bytes", ref_prefix="media://epub/")
+    return _exploded_spans(spark, docs_in,
+                           doc_blobs=_per_doc(d, epub_blob, _BLOBS))
 
 
 def q_pdf_render(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -657,24 +501,15 @@ def q_pdf_render(spark: SparkSession, sf_dir: str) -> DataFrame:
     'Doc ' = 2056 width units, digits 556 each; r5 verdict item 5)."""
     from pydoxtools_spark.operators.multimodal import render_pdf_pages
 
-    d = _docs(spark, sf_dir).select("doc_id")
-
-    def gen_blobs(batches):
-        import pandas as pd
-
+    def pdf_blob(doc_id):
         from pydoxtools_spark.functions.pdfparse import build_tiny_pdf
 
-        for pdf in batches:
-            rows = []
-            for doc_id in pdf["doc_id"]:
-                data = build_tiny_pdf(
-                    [{"texts": [(72.0, 700.0, 18.0, f"Doc {doc_id}")]}],
-                    compress=True)
-                rows.append((str(doc_id), data))
-            yield pd.DataFrame(rows, columns=["doc_id", "content"])
+        return (str(doc_id), build_tiny_pdf(
+            [{"texts": [(72.0, 700.0, 18.0, f"Doc {doc_id}")]}],
+            compress=True))
 
-    blobs = d.repartition(32).mapInPandas(
-        gen_blobs, "doc_id string, content binary")
+    blobs = _per_doc(_docs(spark, sf_dir).select("doc_id"), pdf_blob,
+                     "doc_id string, content binary")
     return render_pdf_pages(blobs, scale=0.25).select(
         F.col("doc_id").cast("bigint").alias("doc_id"),
         "p_num", "width", "height", "n_dark",
@@ -686,51 +521,21 @@ def q_rtf_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
     blocks as real RTF bytes (control words, hex escapes, \\trowd
     tables), routed via rtf_bytes through the container kernel's
     format probe; same canonical span forms as docx/odt."""
-    from pydoxtools_spark.pipeline import extract as _extract
-
     d = _docs(spark, sf_dir).select("doc_id", "text")
-    docs_in = d.select(
-        F.col("doc_id").cast("string").alias("doc_id"),
-        F.array(
-            F.struct(
-                F.lit("rtf_bytes").alias("kind"),
-                F.lit(None).cast("string").alias("text"),
-                F.concat(F.lit("media://rtf/"),
-                         F.col("doc_id").cast("string")).alias("media_ref"),
-                F.lit(0).alias("offset"),
-            )
-        ).alias("spans"),
-    )
 
-    def gen_blobs(batches):
-        import pandas as pd
-
+    def rtf_blob(doc_id, text):
         from pydoxtools_spark.functions.rtf import build_tiny_rtf
 
-        for pdf in batches:
-            rows = []
-            for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
-                did = str(doc_id)
-                data = build_tiny_rtf([
-                    ("header", f"Doc {did}", 1),
-                    ("text", text or ""),
-                    ("table", [[f"a{did}", "b"], ["c", f"d{did}"]]),
-                ])
-                rows.append((f"media://rtf/{did}", data))
-            yield pd.DataFrame(rows, columns=["ref", "content"])
+        did = str(doc_id)
+        return (f"media://rtf/{did}", build_tiny_rtf([
+            ("header", f"Doc {did}", 1),
+            ("text", text or ""),
+            ("table", [[f"a{did}", "b"], ["c", f"d{did}"]]),
+        ]))
 
-    blobs = d.repartition(32).mapInPandas(gen_blobs, "ref string, content binary")
-    out = _extract(spark, docs_in, None, doc_blobs=blobs)
-    return out.select(
-        F.col("doc_id").cast("bigint").alias("doc_id"),
-        F.posexplode("spans").alias("ord", "span"),
-    ).select(
-        "doc_id", "ord",
-        F.col("span.kind").alias("kind"),
-        F.col("span.text").alias("span_text"),
-        F.col("span.media_ref").alias("media_ref"),
-        F.col("span.offset").alias("offset"),
-    )
+    docs_in = _as_documents_in(d, "rtf_bytes", ref_prefix="media://rtf/")
+    return _exploded_spans(spark, docs_in,
+                           doc_blobs=_per_doc(d, rtf_blob, _BLOBS))
 
 
 def q_pdf_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -742,34 +547,24 @@ def q_pdf_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
     structure walk, not stream counting."""
     from pydoxtools_spark.operators.multimodal import pdf_meta_from_blobs
 
-    d = _docs(spark, sf_dir).select("doc_id")
-
-    def gen_blobs(batches):
-        import pandas as pd
-
+    def pdf_blob(doc_id):
         from pydoxtools_spark.functions.pdfparse import build_tiny_pdf
 
-        for pdf in batches:
-            rows = []
-            for doc_id in pdf["doc_id"]:
-                n_pages = 1 + int(doc_id) % 3
-                pages = [
-                    {"texts": [(72.0, 700.0, 12.0, f"Doc {doc_id} p{p}")]}
-                    for p in range(n_pages)
-                ]
-                data = build_tiny_pdf(
-                    pages, compress=True,
-                    producer="pydoxtools_spark 0.4",
-                    creator=f"gen-{int(doc_id) % 5}",
-                    # r5: every 4th doc RC4-encrypted — /Info strings
-                    # and the /Pages walk must decrypt (oracle
-                    # unchanged: plaintext metadata either way)
-                    encrypt=(int(doc_id) % 4 == 1))
-                rows.append((str(doc_id), data))
-            yield pd.DataFrame(rows, columns=["doc_id", "content"])
+        pages = [
+            {"texts": [(72.0, 700.0, 12.0, f"Doc {doc_id} p{p}")]}
+            for p in range(1 + int(doc_id) % 3)
+        ]
+        return (str(doc_id), build_tiny_pdf(
+            pages, compress=True,
+            producer="pydoxtools_spark 0.4",
+            creator=f"gen-{int(doc_id) % 5}",
+            # r5: every 4th doc RC4-encrypted — /Info strings
+            # and the /Pages walk must decrypt (oracle
+            # unchanged: plaintext metadata either way)
+            encrypt=(int(doc_id) % 4 == 1)))
 
-    blobs = d.repartition(32).mapInPandas(
-        gen_blobs, "doc_id string, content binary")
+    blobs = _per_doc(_docs(spark, sf_dir).select("doc_id"), pdf_blob,
+                     "doc_id string, content binary")
     return pdf_meta_from_blobs(blobs).select(
         F.col("doc_id").cast("bigint").alias("doc_id"),
         "n_pages", "producer", "creator",
@@ -795,7 +590,7 @@ def q_markdown_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.lit("| c | d"), did, F.lit(" |"), nl, nl,
         F.lit("```"), nl, F.lit("code "), did, nl, F.lit("```"),
     )
-    docs_in = _as_documents_in(d, payload, "text")
+    docs_in = _as_documents_in(d, "text", payload)
     return _exploded_spans(spark, docs_in)
 
 
@@ -812,7 +607,7 @@ def q_wiki_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.lit("]]"), nl, nl,
         F.lit("* item one "), did, nl, F.lit("* item two"),
     )
-    docs_in = _as_documents_in(d, payload, "text")
+    docs_in = _as_documents_in(d, "text", payload)
     return _exploded_spans(spark, docs_in)
 
 
@@ -828,40 +623,29 @@ def q_tiff_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     closed-form in SQL; the pytest layer pins the uncompressed ones)."""
     from pydoxtools_spark.operators.multimodal import MEDIA, media_features
 
-    d = _docs(spark, sf_dir).select("doc_id")
-
-    def gen_media(batches):
+    def tiff_media(doc_id):
         import numpy as np
-        import pandas as pd
 
         from pydoxtools_spark.functions.tiff import build_tiff, build_tiff_g4
 
-        for pdf in batches:
-            rows = []
-            for doc_id in pdf["doc_id"]:
-                i = int(doc_id)
-                if i % 4 == 1:
-                    w = 12 + 4 * ((i // 4) % 3)
-                    h = 6 + 2 * ((i // 4) % 2)
-                    col = (np.arange(w) + (i // 4)) % 4 < 2
-                    blob = build_tiff_g4(np.broadcast_to(col, (h, w)))
-                else:
-                    w, h = 5 + i % 7, 4 + i % 5
-                    px = np.zeros((h, w, 3), dtype=np.uint8)
-                    px[:, :] = (i % 200, 100, 50)
-                    comp, pred = [("none", 1), None, ("lzw", 2),
-                                  ("packbits", 1)][i % 4]
-                    blob = build_tiff(px, compression=comp, predictor=pred)
-                rows.append((f"media://tiff/{i}", "image", blob, None))
-            yield pd.DataFrame(
-                rows, columns=["media_ref", "media_type", "content", "meta"])
+        i = int(doc_id)
+        if i % 4 == 1:
+            w = 12 + 4 * ((i // 4) % 3)
+            h = 6 + 2 * ((i // 4) % 2)
+            col = (np.arange(w) + (i // 4)) % 4 < 2
+            blob = build_tiff_g4(np.broadcast_to(col, (h, w)))
+        else:
+            w, h = 5 + i % 7, 4 + i % 5
+            px = np.zeros((h, w, 3), dtype=np.uint8)
+            px[:, :] = (i % 200, 100, 50)
+            comp, pred = [("none", 1), None, ("lzw", 2),
+                          ("packbits", 1)][i % 4]
+            blob = build_tiff(px, compression=comp, predictor=pred)
+        return (f"media://tiff/{i}", "image", blob, None)
 
-    media = d.repartition(32).mapInPandas(gen_media, MEDIA)
-    feats = media_features(media)
-    return feats.select(
-        F.regexp_extract("media_ref", r"(\d+)$", 1).cast("bigint")
-        .alias("doc_id"),
-        "width", "height", "mean_level",
+    media = _per_doc(_docs(spark, sf_dir).select("doc_id"), tiff_media, MEDIA)
+    return _by_media_ref(
+        media_features(media), "width", "height", "mean_level",
         F.col("decode_error").isNotNull().alias("decode_failed"))
 
 
@@ -876,39 +660,26 @@ def q_gif_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     aren't closed-form in SQL, so n_bytes stays a pytest concern)."""
     from pydoxtools_spark.operators.multimodal import MEDIA, media_features
 
-    d = _docs(spark, sf_dir).select("doc_id")
-
-    def gen_media(batches):
+    def gif_media(doc_id):
         import numpy as np
-        import pandas as pd
 
         from pydoxtools_spark.functions.gif import build_gif
 
-        for pdf in batches:
-            rows = []
-            for doc_id in pdf["doc_id"]:
-                i = int(doc_id)
-                if i % 3 == 0:
-                    w, h = 6 + 2 * (i % 4), 5 + i % 3
-                    pal = np.array([[0, 0, 0], [200, 200, 200]],
-                                   dtype=np.uint8)
-                    idx = np.broadcast_to(
-                        np.arange(w) % 2, (h, w)).astype(np.uint8)
-                else:
-                    w, h = 5 + i % 6, 4 + i % 4
-                    pal = np.array([[i % 200, 100, 50]], dtype=np.uint8)
-                    idx = np.zeros((h, w), dtype=np.uint8)
-                blob = build_gif(idx, pal, interlace=bool(i % 2))
-                rows.append((f"media://gif/{i}", "image", blob, None))
-            yield pd.DataFrame(
-                rows, columns=["media_ref", "media_type", "content", "meta"])
+        i = int(doc_id)
+        if i % 3 == 0:
+            w, h = 6 + 2 * (i % 4), 5 + i % 3
+            pal = np.array([[0, 0, 0], [200, 200, 200]], dtype=np.uint8)
+            idx = np.broadcast_to(np.arange(w) % 2, (h, w)).astype(np.uint8)
+        else:
+            w, h = 5 + i % 6, 4 + i % 4
+            pal = np.array([[i % 200, 100, 50]], dtype=np.uint8)
+            idx = np.zeros((h, w), dtype=np.uint8)
+        return (f"media://gif/{i}", "image",
+                build_gif(idx, pal, interlace=bool(i % 2)), None)
 
-    media = d.repartition(32).mapInPandas(gen_media, MEDIA)
-    feats = media_features(media)
-    return feats.select(
-        F.regexp_extract("media_ref", r"(\d+)$", 1).cast("bigint")
-        .alias("doc_id"),
-        "width", "height", "mean_level",
+    media = _per_doc(_docs(spark, sf_dir).select("doc_id"), gif_media, MEDIA)
+    return _by_media_ref(
+        media_features(media), "width", "height", "mean_level",
         F.col("decode_error").isNotNull().alias("decode_failed"))
 
 
@@ -922,32 +693,24 @@ def q_warc_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     and body md5s purely from the generating parameters."""
     from pydoxtools_spark.sources.loaders import warc_records
 
-    d = _docs(spark, sf_dir).select("doc_id")
-
-    def gen_segments(batches):
-        import pandas as pd
-
+    def warc_segment(doc_id):
         from pydoxtools_spark.functions.warc import build_warc
 
-        for pdf in batches:
-            rows = []
-            for doc_id in pdf["doc_id"]:
-                i = int(doc_id)
-                recs = [({"WARC-Type": "warcinfo",
-                          "WARC-Record-ID": f"<urn:uuid:{i}>"},
-                         f"software: engine {i}\r\n".encode())]
-                for j in range(1, 3 + i % 3):
-                    body = f"<html><body>doc {i} rec {j}</body></html>"
-                    recs.append((
-                        {"WARC-Type": "response",
-                         "WARC-Target-URI": f"http://ex.com/{i}/{j}"},
-                        b"HTTP/1.1 200 OK\r\nContent-Type: text/html"
-                        b"\r\n\r\n" + body.encode()))
-                rows.append((str(i), build_warc(recs, gzip_members=True)))
-            yield pd.DataFrame(rows, columns=["path", "content"])
+        i = int(doc_id)
+        recs = [({"WARC-Type": "warcinfo",
+                  "WARC-Record-ID": f"<urn:uuid:{i}>"},
+                 f"software: engine {i}\r\n".encode())]
+        for j in range(1, 3 + i % 3):
+            body = f"<html><body>doc {i} rec {j}</body></html>"
+            recs.append((
+                {"WARC-Type": "response",
+                 "WARC-Target-URI": f"http://ex.com/{i}/{j}"},
+                b"HTTP/1.1 200 OK\r\nContent-Type: text/html"
+                b"\r\n\r\n" + body.encode()))
+        return (str(i), build_warc(recs, gzip_members=True))
 
-    blobs = d.repartition(32).mapInPandas(
-        gen_segments, "path string, content binary")
+    blobs = _per_doc(_docs(spark, sf_dir).select("doc_id"), warc_segment,
+                     "path string, content binary")
     recs = warc_records(blobs)
     return recs.select(
         F.col("ref").cast("bigint").alias("doc_id"),
@@ -965,33 +728,19 @@ def q_aiff_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     exact from the generating parameters."""
     from pydoxtools_spark.operators.multimodal import MEDIA, media_features
 
-    d = _docs(spark, sf_dir).select("doc_id")
-
-    def gen_media(batches):
+    def aiff_media(doc_id):
         import numpy as np
-        import pandas as pd
 
         from pydoxtools_spark.functions.media import build_aiff
 
-        for pdf in batches:
-            rows = []
-            for doc_id in pdf["doc_id"]:
-                i = int(doc_id)
-                n = 100 + i % 100
-                amp = (i * 13) % 32768
-                rate = 8000 * (1 + i % 3)
-                rows.append((f"media://aiff/{i}", "audio",
-                             build_aiff(np.full(n, amp, dtype=np.int16),
-                                        rate), None))
-            yield pd.DataFrame(
-                rows, columns=["media_ref", "media_type", "content", "meta"])
+        i = int(doc_id)
+        n, amp, rate = 100 + i % 100, (i * 13) % 32768, 8000 * (1 + i % 3)
+        return (f"media://aiff/{i}", "audio",
+                build_aiff(np.full(n, amp, dtype=np.int16), rate), None)
 
-    media = d.repartition(32).mapInPandas(gen_media, MEDIA)
-    feats = media_features(media)
-    return feats.select(
-        F.regexp_extract("media_ref", r"(\d+)$", 1).cast("bigint")
-        .alias("doc_id"),
-        "sample_rate", "duration_ms", "mean_level",
+    media = _per_doc(_docs(spark, sf_dir).select("doc_id"), aiff_media, MEDIA)
+    return _by_media_ref(
+        media_features(media), "sample_rate", "duration_ms", "mean_level",
         F.col("decode_error").isNotNull().alias("decode_failed"))
 
 
@@ -1001,38 +750,24 @@ def q_avi_frames(spark: SparkSession, sf_dir: str) -> DataFrame:
     3 + doc_id % 4 uniform-gray DIB frames; avi_frame_features samples
     every 2nd frame and decodes ONLY those.  The oracle restates the
     sampled indexes and each frame's mean from the generators."""
-    from pydoxtools_spark.operators.multimodal import avi_frame_features
+    from pydoxtools_spark.operators.multimodal import MEDIA, avi_frame_features
 
-    d = _docs(spark, sf_dir).select("doc_id")
-
-    def gen_media(batches):
+    def avi_media(doc_id):
         import numpy as np
-        import pandas as pd
 
         from pydoxtools_spark.functions.avi import build_avi
 
-        for pdf in batches:
-            rows = []
-            for doc_id in pdf["doc_id"]:
-                i = int(doc_id)
-                n, w, h = 3 + i % 4, 4 + i % 3, 3 + i % 2
-                fr = np.zeros((n, h, w, 3), dtype=np.uint8)
-                for j in range(n):
-                    fr[j] = (i * 7 + j * 40) % 256
-                rows.append((f"media://avi/{i}", "video",
-                             build_avi(fr, fps=5),
-                             {"n_frames": str(n)}))
-            yield pd.DataFrame(
-                rows, columns=["media_ref", "media_type", "content", "meta"])
+        i = int(doc_id)
+        n, w, h = 3 + i % 4, 4 + i % 3, 3 + i % 2
+        fr = np.zeros((n, h, w, 3), dtype=np.uint8)
+        for j in range(n):
+            fr[j] = (i * 7 + j * 40) % 256
+        return (f"media://avi/{i}", "video", build_avi(fr, fps=5),
+                {"n_frames": str(n)})
 
-    media = d.repartition(32).mapInPandas(
-        gen_media,
-        "media_ref string, media_type string, content binary, "
-        "meta map<string,string>")
-    out = avi_frame_features(media, every_n=2)
-    return out.select(
-        F.regexp_extract("media_ref", r"(\d+)$", 1).cast("bigint")
-        .alias("doc_id"),
+    media = _per_doc(_docs(spark, sf_dir).select("doc_id"), avi_media, MEDIA)
+    return _by_media_ref(
+        avi_frame_features(media, every_n=2),
         F.col("frame_idx").cast("bigint").alias("frame_idx"),
         "width", "height", "mean_level",
         F.col("decode_error").isNotNull().alias("failed"))
@@ -1052,23 +787,15 @@ def q_cdc_chunks(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pydoxtools_spark.operators.dedup import cdc_chunk_table
 
     marker = find_boundary_marker(16)
-    d = _docs(spark, sf_dir).select("doc_id")
 
-    def gen_blobs(batches):
-        import pandas as pd
+    def pooled_blob(doc_id):
+        i = int(doc_id)
+        return (str(i), b"".join(
+            (b"segment-%d-" % ((i + j * 3) % 7)) * 40 + marker
+            for j in range(3 + i % 3)))
 
-        for pdf in batches:
-            rows = []
-            for doc_id in pdf["doc_id"]:
-                i = int(doc_id)
-                blob = b"".join(
-                    (b"segment-%d-" % ((i + j * 3) % 7)) * 40 + marker
-                    for j in range(3 + i % 3))
-                rows.append((str(i), blob))
-            yield pd.DataFrame(rows, columns=["ref", "content"])
-
-    blobs = d.repartition(32).mapInPandas(
-        gen_blobs, "ref string, content binary")
+    blobs = _per_doc(_docs(spark, sf_dir).select("doc_id"), pooled_blob,
+                     _BLOBS)
     chunks = cdc_chunk_table(blobs, mask_bits=16, min_size=464,
                              max_size=4096)
     return chunks.select(
@@ -1089,43 +816,33 @@ def q_exif_scrub(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pydoxtools_spark.operators.multimodal import (
         media_features, scrub_image_metadata)
 
-    d = _docs(spark, sf_dir).select("doc_id")
-
-    def gen_media(batches):
+    def tagged_jpeg(doc_id):
         import numpy as np
-        import pandas as pd
 
         from pydoxtools_spark.functions.exif import (
             build_exif_app1, insert_app1)
         from pydoxtools_spark.functions.jpeg import build_jpeg
 
-        for pdf in batches:
-            rows = []
-            for doc_id in pdf["doc_id"]:
-                i = int(doc_id)
-                g = 2 * (40 + i % 60)
-                base = build_jpeg(np.full((6, 8, 3), g, np.uint8))
-                app1 = build_exif_app1(
-                    make=f"cam-{i % 5}", model="fixture",
-                    datetime="2026:08:18 01:00:00",
-                    gps=((i % 90) + 0.5, -((i % 180) + 0.25))
-                    if i % 2 == 0 else None,
-                    pad_to=400)
-                rows.append((f"media://jpg/{i}",
-                             insert_app1(base, app1)))
-            yield pd.DataFrame(rows, columns=["media_ref", "content"])
+        i = int(doc_id)
+        g = 2 * (40 + i % 60)
+        base = build_jpeg(np.full((6, 8, 3), g, np.uint8))
+        app1 = build_exif_app1(
+            make=f"cam-{i % 5}", model="fixture",
+            datetime="2026:08:18 01:00:00",
+            gps=((i % 90) + 0.5, -((i % 180) + 0.25))
+            if i % 2 == 0 else None,
+            pad_to=400)
+        return (f"media://jpg/{i}", insert_app1(base, app1))
 
-    media = d.repartition(32).mapInPandas(
-        gen_media, "media_ref string, content binary")
+    media = _per_doc(_docs(spark, sf_dir).select("doc_id"), tagged_jpeg,
+                     "media_ref string, content binary")
     scrubbed = scrub_image_metadata(media)
     feats = media_features(scrubbed.filter(F.col("error").isNull()).select(
         "media_ref", F.lit("image").alias("media_type"), "content",
         F.lit(None).cast("map<string,string>").alias("meta")))
-    return scrubbed.join(feats, "media_ref").select(
-        F.regexp_extract("media_ref", r"(\d+)$", 1).cast("bigint")
-        .alias("doc_id"),
-        "had_exif", "had_gps", "removed_bytes", "n_bytes_clean",
-        "mean_level")
+    return _by_media_ref(scrubbed.join(feats, "media_ref"),
+                         "had_exif", "had_gps", "removed_bytes",
+                         "n_bytes_clean", "mean_level")
 
 
 def q_zip_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1136,33 +853,22 @@ def q_zip_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     sizes and body md5s from the generating parameters."""
     from pydoxtools_spark.sources.loaders import zip_members
 
-    d = _docs(spark, sf_dir).select("doc_id")
-
-    def gen_archives(batches):
+    def archive(doc_id):
         import io
         import zipfile
 
-        import pandas as pd
+        i = int(doc_id)
+        buf = io.BytesIO()
+        with zipfile.ZipFile(buf, "w", zipfile.ZIP_DEFLATED) as zf:
+            zf.writestr(zipfile.ZipInfo("docs/", (2020, 1, 1, 0, 0, 0)), b"")
+            for j in range(1 + i % 3):
+                zf.writestr(
+                    zipfile.ZipInfo(f"docs/m{j}.txt", (2020, 1, 1, 0, 0, 0)),
+                    f"member {i} {j} body".encode())
+        return (str(i), buf.getvalue())
 
-        for pdf in batches:
-            rows = []
-            for doc_id in pdf["doc_id"]:
-                i = int(doc_id)
-                buf = io.BytesIO()
-                with zipfile.ZipFile(buf, "w",
-                                     zipfile.ZIP_DEFLATED) as zf:
-                    zf.writestr(zipfile.ZipInfo(
-                        "docs/", (2020, 1, 1, 0, 0, 0)), b"")
-                    for j in range(1 + i % 3):
-                        zf.writestr(
-                            zipfile.ZipInfo(f"docs/m{j}.txt",
-                                            (2020, 1, 1, 0, 0, 0)),
-                            f"member {i} {j} body".encode())
-                rows.append((str(i), buf.getvalue()))
-            yield pd.DataFrame(rows, columns=["path", "content"])
-
-    blobs = d.repartition(32).mapInPandas(
-        gen_archives, "path string, content binary")
+    blobs = _per_doc(_docs(spark, sf_dir).select("doc_id"), archive,
+                     "path string, content binary")
     out = zip_members(blobs)
     return out.select(
         F.col("ref").cast("bigint").alias("doc_id"),
@@ -1180,34 +886,26 @@ def q_wds_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     labels from the generating parameters."""
     from pydoxtools_spark.sources.loaders import webdataset_samples
 
-    d = _docs(spark, sf_dir).select("doc_id")
-
-    def gen_shards(batches):
+    def shard(doc_id):
         import io
         import tarfile
 
-        import pandas as pd
+        i = int(doc_id)
+        buf = io.BytesIO()
+        with tarfile.open(fileobj=buf, mode="w") as tf:
+            for j in range(2 + i % 2):
+                for ext, data in (
+                    ("txt", f"caption {i} {j}".encode()),
+                    ("cls", str((i + j) % 10).encode()),
+                ):
+                    info = tarfile.TarInfo(f"{i}-{j}.{ext}")
+                    info.size = len(data)
+                    info.mtime = 0
+                    tf.addfile(info, io.BytesIO(data))
+        return (str(i), buf.getvalue())
 
-        for pdf in batches:
-            rows = []
-            for doc_id in pdf["doc_id"]:
-                i = int(doc_id)
-                buf = io.BytesIO()
-                with tarfile.open(fileobj=buf, mode="w") as tf:
-                    for j in range(2 + i % 2):
-                        for ext, data in (
-                            ("txt", f"caption {i} {j}".encode()),
-                            ("cls", str((i + j) % 10).encode()),
-                        ):
-                            info = tarfile.TarInfo(f"{i}-{j}.{ext}")
-                            info.size = len(data)
-                            info.mtime = 0
-                            tf.addfile(info, io.BytesIO(data))
-                rows.append((str(i), buf.getvalue()))
-            yield pd.DataFrame(rows, columns=["path", "content"])
-
-    blobs = d.repartition(32).mapInPandas(
-        gen_shards, "path string, content binary")
+    blobs = _per_doc(_docs(spark, sf_dir).select("doc_id"), shard,
+                     "path string, content binary")
     out = webdataset_samples(blobs)
     return out.select(
         F.col("ref").cast("bigint").alias("doc_id"),
@@ -1229,37 +927,24 @@ def q_media_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     writer -> reader -> feature cross-check."""
     from pydoxtools_spark.operators.multimodal import MEDIA, media_features
 
-    d = _docs(spark, sf_dir).select("doc_id")
-
-    def gen_media(batches):
+    def bmp_or_wav(doc_id):
         import numpy as np
-        import pandas as pd
 
         from pydoxtools_spark.functions.media import build_bmp, build_wav
 
-        for pdf in batches:
-            rows = []
-            for doc_id in pdf["doc_id"]:
-                i = int(doc_id)
-                if i % 2 == 0:
-                    w, h = 16 + i % 32, 16 + (i * 7) % 32
-                    px = np.zeros((h, w, 3), dtype=np.uint8)
-                    px[:, :] = (i % 256, (i * 3) % 256, (i * 5) % 256)
-                    rows.append((f"media://img/{i}", "image",
-                                 build_bmp(px), None))
-                else:
-                    n = 100 + i % 100
-                    amp = (i * 13) % 32768
-                    rows.append((f"media://aud/{i}", "audio",
-                                 build_wav(np.full(n, amp, dtype=np.int16),
-                                           8000), None))
-            yield pd.DataFrame(
-                rows, columns=["media_ref", "media_type", "content", "meta"])
+        i = int(doc_id)
+        if i % 2 == 0:
+            w, h = 16 + i % 32, 16 + (i * 7) % 32
+            px = np.zeros((h, w, 3), dtype=np.uint8)
+            px[:, :] = (i % 256, (i * 3) % 256, (i * 5) % 256)
+            return (f"media://img/{i}", "image", build_bmp(px), None)
+        n, amp = 100 + i % 100, (i * 13) % 32768
+        return (f"media://aud/{i}", "audio",
+                build_wav(np.full(n, amp, dtype=np.int16), 8000), None)
 
-    media = d.repartition(32).mapInPandas(gen_media, MEDIA)
-    feats = media_features(media)
-    return feats.select(
-        F.regexp_extract("media_ref", r"(\d+)$", 1).cast("bigint").alias("doc_id"),
+    media = _per_doc(_docs(spark, sf_dir).select("doc_id"), bmp_or_wav, MEDIA)
+    return _by_media_ref(
+        media_features(media),
         "media_type", "n_bytes", "width", "height", "sample_rate",
         "duration_ms", "mean_level",
         (F.array_position(F.col("feature"), F.array_max("feature")) - 1)
@@ -1302,7 +987,7 @@ def q_token_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def q_full_text(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Extraction + full_text reassembly (reference document.py:227-229)."""
-    docs_in = _as_documents_in(_docs(spark, sf_dir), _html_payload_col(), "html")
+    docs_in = _as_documents_in(_docs(spark, sf_dir), "html", _html_payload_col())
     extracted = extract(spark, docs_in, None)
     return textops.full_text(extracted).select(
         F.col("doc_id").cast("bigint").alias("doc_id"), "full_text"
@@ -1883,7 +1568,7 @@ def q_page_template(spark: SparkSession, sf_dir: str) -> DataFrame:
     """PageTemplateGenerator semantics (extract_textstructure.py:398-460):
     extracted span stream rendered with {Kind_i} placeholders for
     excluded kinds."""
-    docs_in = _as_documents_in(_docs(spark, sf_dir), _html_payload_col(), "html")
+    docs_in = _as_documents_in(_docs(spark, sf_dir), "html", _html_payload_col())
     extracted = extract(spark, docs_in, None)
     return templates.span_template(extracted).select(
         F.col("doc_id").cast("bigint").alias("doc_id"), "template"
@@ -2193,42 +1878,32 @@ def q_ocr_glyphs(spark: SparkSession, sf_dir: str) -> DataFrame:
         render_pdf_pages,
     )
 
-    d = _docs(spark, sf_dir).select("doc_id", "text")
-
-    def gen_blobs(batches):
+    def pdf_blob(doc_id, text):
         import re as _re
-
-        import pandas as pd
 
         from pydoxtools_spark.functions.pdfparse import build_tiny_pdf
 
-        for pdf in batches:
-            rows = []
-            for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
-                # EXACTLY the oracle's normalization chain: trim,
-                # \s+ collapse, printable-ASCII filter, re-collapse,
-                # trim, first 40 chars, rtrim.  re.ASCII pins \s to
-                # RE2's ASCII-only class — python's unicode-aware \s
-                # would collapse U+00A0/U+3000 to ' ' while the
-                # DuckDB oracle deletes them via [^ -~] (r5 advisor)
-                t = _re.sub(r"\s+", " ", (text or "").strip(), flags=_re.ASCII)
-                t = _re.sub(r"[^ -~]", "", t)
-                t = _re.sub(r" +", " ", t).strip()
-                body = t[:40].rstrip()
-                texts = [(72.0, 760.0, 12.0, f"Doc {doc_id}")]
-                if body:
-                    texts.append((72.0, 736.0, 12.0, body))
-                # widths='halfem' pins the frozen 0.5-em advance model
-                # the glyph decoder's pitch contract requires (r6:
-                # bare Helvetica now parses with real AFM widths)
-                rows.append((str(doc_id),
-                             build_tiny_pdf([{"texts": texts}],
-                                            compress=True, use_tj=True,
-                                            widths="halfem")))
-            yield pd.DataFrame(rows, columns=["doc_id", "content"])
+        # EXACTLY the oracle's normalization chain: trim,
+        # \s+ collapse, printable-ASCII filter, re-collapse,
+        # trim, first 40 chars, rtrim.  re.ASCII pins \s to
+        # RE2's ASCII-only class — python's unicode-aware \s
+        # would collapse U+00A0/U+3000 to ' ' while the
+        # DuckDB oracle deletes them via [^ -~] (r5 advisor)
+        t = _re.sub(r"\s+", " ", (text or "").strip(), flags=_re.ASCII)
+        t = _re.sub(r"[^ -~]", "", t)
+        t = _re.sub(r" +", " ", t).strip()
+        body = t[:40].rstrip()
+        texts = [(72.0, 760.0, 12.0, f"Doc {doc_id}")]
+        if body:
+            texts.append((72.0, 736.0, 12.0, body))
+        # widths='halfem' pins the frozen 0.5-em advance model
+        # the glyph decoder's pitch contract requires (r6:
+        # bare Helvetica now parses with real AFM widths)
+        return (str(doc_id), build_tiny_pdf([{"texts": texts}], compress=True,
+                                            use_tj=True, widths="halfem"))
 
-    blobs = d.repartition(32).mapInPandas(
-        gen_blobs, "doc_id string, content binary")
+    blobs = _per_doc(_docs(spark, sf_dir).select("doc_id", "text"), pdf_blob,
+                     "doc_id string, content binary")
     # scale 1.0 is the smallest exact glyph geometry for 12 pt text
     # (6x12 cells, even height, shared-rounding block edges verified
     # down to 1px blocks) — quarter the raster bytes of scale 2.0
@@ -2251,42 +1926,29 @@ def q_blob_routing(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle is the analytically known CASE over doc_id."""
     from pydoxtools_spark.pipeline import ingest_blobs
 
-    d = _docs(spark, sf_dir).select("doc_id")
-
-    def gen_blobs(batches):
-        import pandas as pd
-
+    def raw_blob(doc_id):
         from pydoxtools_spark.functions.docx import build_tiny_docx
         from pydoxtools_spark.functions.pdfparse import build_tiny_pdf
         from pydoxtools_spark.functions.rtf import build_tiny_rtf
 
-        for pdf in batches:
-            rows = []
-            for doc_id in pdf["doc_id"]:
-                i = int(doc_id)
-                m = i % 5
-                if m == 0:
-                    data = build_tiny_pdf(
-                        [{"texts": [(72.0, 700.0, 12.0, f"pdf {i}")]}],
-                        compress=True)
-                elif m == 1:
-                    data = build_tiny_rtf([("text", f"rtf body {i}")])
-                elif m == 2:
-                    data = build_tiny_docx(
-                        [("text", f"docx body {i}")])
-                elif m == 3:
-                    data = (b"\x89PNG\r\n\x1a\n"
-                            + i.to_bytes(8, "big") + b"\x00" * 16)
-                elif i % 2 == 0:
-                    data = (f"<html><body><p>doc {i}</p></body>"
-                            "</html>").encode()
-                else:
-                    data = f"plain text payload {i}".encode()
-                rows.append((str(i), data))
-            yield pd.DataFrame(rows, columns=["ref", "content"])
+        i = int(doc_id)
+        m = i % 5
+        if m == 0:
+            data = build_tiny_pdf(
+                [{"texts": [(72.0, 700.0, 12.0, f"pdf {i}")]}], compress=True)
+        elif m == 1:
+            data = build_tiny_rtf([("text", f"rtf body {i}")])
+        elif m == 2:
+            data = build_tiny_docx([("text", f"docx body {i}")])
+        elif m == 3:
+            data = b"\x89PNG\r\n\x1a\n" + i.to_bytes(8, "big") + b"\x00" * 16
+        elif i % 2 == 0:
+            data = f"<html><body><p>doc {i}</p></body></html>".encode()
+        else:
+            data = f"plain text payload {i}".encode()
+        return (str(i), data)
 
-    blobs = d.repartition(32).mapInPandas(
-        gen_blobs, "ref string, content binary")
+    blobs = _per_doc(_docs(spark, sf_dir).select("doc_id"), raw_blob, _BLOBS)
     parts = ingest_blobs(spark, blobs)
     return parts["documents_in"].select(
         F.col("doc_id").cast("bigint").alias("doc_id"),
@@ -2309,45 +1971,36 @@ def q_container_media(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pydoxtools_spark.operators.multimodal import media_features
     from pydoxtools_spark.pipeline import container_media_blobs
 
-    d = _docs(spark, sf_dir).select("doc_id")
-
-    def gen_blobs(batches):
+    def container_blob(doc_id):
         import numpy as np
-        import pandas as pd
 
         from pydoxtools_spark.functions.docx import build_tiny_docx
         from pydoxtools_spark.functions.media import build_bmp
         from pydoxtools_spark.functions.png import build_png
         from pydoxtools_spark.functions.rtf import build_tiny_rtf
 
-        for pdf in batches:
-            rows = []
-            for doc_id in pdf["doc_id"]:
-                i = int(doc_id)
-                w, h = 4 + i % 5, 3 + i % 3
-                px = np.empty((h, w, 3), dtype=np.uint8)
-                px[:, :] = (i % 200, 100, 50)
-                if i % 4 != 3 and i % 5 == 2:
-                    # r6: PNG media part (stored-block zlib -> the
-                    # oracle states len = 68 + h*(3w+1) analytically)
-                    part = ("media/img1.png",
-                            build_png(px, compress_level=0))
-                else:
-                    part = ("media/img1.bmp", build_bmp(px))
-                blocks = [
-                    ("header", f"Doc {i}", 1),
-                    ("image", part[0], part[1]),
-                    ("text", f"body {i}"),
-                ]
-                # every 4th doc is an rtf \pict container (r5 verdict
-                # item 6): same media path, positional pict1 target
-                blob = (build_tiny_rtf(blocks) if i % 4 == 3
-                        else build_tiny_docx(blocks))
-                rows.append((str(i), blob))
-            yield pd.DataFrame(rows, columns=["ref", "content"])
+        i = int(doc_id)
+        w, h = 4 + i % 5, 3 + i % 3
+        px = np.empty((h, w, 3), dtype=np.uint8)
+        px[:, :] = (i % 200, 100, 50)
+        if i % 4 != 3 and i % 5 == 2:
+            # r6: PNG media part (stored-block zlib -> the
+            # oracle states len = 68 + h*(3w+1) analytically)
+            part = ("media/img1.png", build_png(px, compress_level=0))
+        else:
+            part = ("media/img1.bmp", build_bmp(px))
+        blocks = [
+            ("header", f"Doc {i}", 1),
+            ("image", part[0], part[1]),
+            ("text", f"body {i}"),
+        ]
+        # every 4th doc is an rtf \pict container (r5 verdict
+        # item 6): same media path, positional pict1 target
+        return (str(i), build_tiny_rtf(blocks) if i % 4 == 3
+                else build_tiny_docx(blocks))
 
-    blobs = d.repartition(32).mapInPandas(
-        gen_blobs, "ref string, content binary")
+    blobs = _per_doc(_docs(spark, sf_dir).select("doc_id"), container_blob,
+                     _BLOBS)
     media = container_media_blobs(blobs)
     feats = media_features(media.filter(F.col("error").isNull()).select(
         "media_ref", F.lit("image").alias("media_type"), "content",

@@ -84,6 +84,7 @@ TITLE_SIZE_RATIO = 1.15
 # Vertical text exclusion (extract_textstructure.py:412).
 VERTICAL_ORIENTATION = 90.0
 MIN_BOX_TEXT_CHARS = 2  # 1-char boxes dropped (extract_textstructure.py:410)
+PAGES_PER_BUCKET = 8  # pages per (doc, page_bucket) table-kernel run
 
 # ------------------------------------------------------------ table kernel
 # Single-linkage clustering threshold for table-area merging

@@ -902,6 +902,16 @@ _INFOSTR_RE = {
 }
 
 
+def _flat_objects(data: bytes) -> tuple[dict[int, bytes], dict[int, int]]:
+    """Flat `N 0 obj ... endobj` scan: {num: body}, {num: body offset}."""
+    objs: dict[int, bytes] = {}
+    objstart: dict[int, int] = {}
+    for m in _OBJ_RE.finditer(data):
+        objs[int(m.group(1))] = m.group(2)
+        objstart[int(m.group(1))] = m.start(2)
+    return objs, objstart
+
+
 # direct /Length only: '/Length 8 0 R' is an INDIRECT reference whose
 # value lives in object 8 — capturing the 8 as a byte count silently
 # truncates the payload (r4 advisor finding).  The lookahead rejects
@@ -1385,12 +1395,7 @@ def _content_streams_strict(
                 "startxref points at neither an xref table nor an"
                 " /XRef stream")
 
-    objs: dict[int, bytes] = {}
-    objstart: dict[int, int] = {}
-    for m in _OBJ_RE.finditer(data):
-        num = int(m.group(1))
-        objs[num] = m.group(2)
-        objstart[num] = m.start(2)
+    objs, objstart = _flat_objects(data)
     # standard security handler: derive the empty-user-password key
     # (raises for password-protected files — the caller surfaces an
     # error row rather than falling into garbage-salvage)
@@ -1458,11 +1463,7 @@ def _lenient_fonts(data: bytes) -> dict[bytes, dict]:
     the rung dropped fonts wholesale and every damaged file regressed
     to 0.5-em advances — invisible while bare Helvetica ALSO meant
     0.5-em, wrong once it resolves through the real AFM table."""
-    objs: dict[int, bytes] = {}
-    objstart: dict[int, int] = {}
-    for m in _OBJ_RE.finditer(data):
-        objs[int(m.group(1))] = m.group(2)
-        objstart[int(m.group(1))] = m.start(2)
+    objs, objstart = _flat_objects(data)
     fonts: dict[bytes, dict] = {}
     for fr in _FONTRES_RE.finditer(data):
         for m in _FONTREF_RE.finditer(fr.group(1)):
@@ -1487,12 +1488,10 @@ def parse_pdf_info(data: bytes) -> dict:
     """Document metadata (reference meta_infos: document.py page counts
     + pdfminer doc.info): n_pages from the /Pages /Count (falling back
     to recovered stream count on the repair rung), producer/creator
-    from the trailer /Info dictionary when present."""
-    objs: dict[int, bytes] = {}
-    objstart: dict[int, int] = {}
-    for m in _OBJ_RE.finditer(data):
-        objs[int(m.group(1))] = m.group(2)
-        objstart[int(m.group(1))] = m.start(2)
+    from the trailer /Info dict; PdfParseError if no `N 0 obj` at all."""
+    objs, objstart = _flat_objects(data)
+    if not objs:
+        raise PdfParseError("no PDF objects found")
     # PDF 1.5 packs the /Pages dict inside a compressed /ObjStm — the
     # flat scan alone would miss it and the stream-count fallback would
     # count content halves + ObjStm + XRef streams (a 3-page v1.5 doc
@@ -2032,12 +2031,10 @@ def extract_pdf_images(data: bytes) -> list[tuple[str, str, int | None,
     (JPX/JBIG2/CCITT) pass through undecoded with their media_type —
     the element and its bytes must not vanish just because the codec
     is external (r5 verdict item 3).  Raises PdfEncryptedError for
-    undecryptable files (caller contains it as an error row)."""
-    objs: dict[int, bytes] = {}
-    objstart: dict[int, int] = {}
-    for m in _OBJ_RE.finditer(data):
-        objs[int(m.group(1))] = m.group(2)
-        objstart[int(m.group(1))] = m.start(2)
+    undecryptable files, PdfParseError if no `N 0 obj` at all."""
+    objs, objstart = _flat_objects(data)
+    if not objs:
+        raise PdfParseError("no PDF objects found")
     dec = _build_decryptor(data, objs)
     out: list[tuple[str, str, int | None, int | None, bytes]] = []
     for num in sorted(objs):

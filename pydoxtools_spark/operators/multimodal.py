@@ -165,7 +165,7 @@ def decode_media(media_type: str, content: bytes) -> dict:
         "(plug a real decoder into decode_media)")
 
 
-def media_features(media: DataFrame, batch_size_hint: int = 256) -> DataFrame:
+def media_features(media: DataFrame) -> DataFrame:
     """Decode + featurize media blobs via Arrow-batched mapInPandas.
 
     Real Spark plumbing: binary travels through Arrow; one output row

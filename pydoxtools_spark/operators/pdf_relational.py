@@ -44,6 +44,7 @@ from ..constants import (
     KIND_TABLE,
     KIND_TEXT,
     MIN_BOX_TEXT_CHARS,
+    PAGES_PER_BUCKET,
     TITLE_MAX_WORDS,
     TITLE_SIZE_RATIO,
     VERTICAL_ORIENTATION,
@@ -264,9 +265,7 @@ def _grid_tables(areas, lines):
     ).select("doc_id", "p_num", "ax0", "ay0", "ax1", "ay1")
     return tables, valid_areas
 
-def pdf_layout_items(pdf_elements: DataFrame,
-                     pages_per_bucket: int = 8,
-                     table_mode: str = "grid") -> DataFrame:
+def pdf_layout_items(pdf_elements: DataFrame) -> DataFrame:
     """pdf_elements -> unordered item rows (ITEM schema).  The caller
     (pipeline._pdf_branch) attaches reading-order sort keys.
 
@@ -278,12 +277,9 @@ def pdf_layout_items(pdf_elements: DataFrame,
     (whole-stage codegen).  On a mixed corpus both engines therefore
     select identically per page — a global mode switch would silently
     diverge (ignore Char rows, or drop char-less ruled pages).
-
-    table_mode is kept for API compatibility but no longer switches the
-    layout path; its only effect is upstream (pipeline.extract passes
-    emit_chars to the blob parser when table_mode='chars').
+    (extract(table_mode='chars') only asks the blob parser for Char
+    rows; it does not switch the layout path.)
     """
-    del table_mode  # routing is per-page; see docstring
     from pyspark import StorageLevel
 
     # five consumers below (text lines x2, graphics, size_cuts, images)
@@ -326,7 +322,7 @@ def pdf_layout_items(pdf_elements: DataFrame,
     # anti-join) and each would re-run the python kernel otherwise.
     gc = el.filter(F.col("type").isin("Graphic", "Char")).select(
         "doc_id", "p_num", "type", "x0", "y0", "x1", "y1", "rawtext",
-        (F.col("p_num") / pages_per_bucket).cast("int").alias("page_bucket"),
+        (F.col("p_num") / PAGES_PER_BUCKET).cast("int").alias("page_bucket"),
     )
     # explicit repartition on the group keys: the kernel stage is
     # COMPUTE-heavy but byte-light (tens of small rows per page), so
@@ -490,8 +486,7 @@ def _textonly_kernel(pdf: pd.DataFrame) -> list[tuple]:
     return rows
 
 
-def textonly_tables_from_elements(pdf_elements: DataFrame,
-                                  pages_per_bucket: int = 8) -> DataFrame:
+def textonly_tables_from_elements(pdf_elements: DataFrame) -> DataFrame:
     """Opt-in unruled-table extraction — reference
     convert_cells_to_df_text_only (extract_tables.py:610-662): infer a
     cell grid from text-line alignment on pages that carry NO graphic
@@ -518,6 +513,6 @@ def textonly_tables_from_elements(pdf_elements: DataFrame,
         )
     ).select(
         "doc_id", "p_num", "type", "x0", "y0", "x1", "y1", "rawtext",
-        (F.col("p_num") / pages_per_bucket).cast("int").alias("page_bucket"),
+        (F.col("p_num") / PAGES_PER_BUCKET).cast("int").alias("page_bucket"),
     )
     return walk_runs(el, _BUCKET, _textonly_kernel, TEXTONLY)

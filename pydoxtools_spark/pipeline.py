@@ -70,8 +70,6 @@ from .constants import (
 )
 from .kernels import error_text, map_rows
 
-PAGES_PER_BUCKET = 8
-
 # mid-pipeline row shape: one output span + its reading-order sort keys
 _OUT_SPAN = StructType(
     [
@@ -293,8 +291,7 @@ def html_meta_table(documents_in: DataFrame) -> DataFrame:
         v[0], v[1], None, None, [], None, None, None))
 
 
-def _pdf_branch(spans: DataFrame, pdf_elements: DataFrame,
-                table_mode: str = "grid") -> DataFrame:
+def _pdf_branch(spans: DataFrame, pdf_elements: DataFrame) -> DataFrame:
     """PDF layout branch: relational implementation (pure Spark SQL for
     grouping/cells/ordering; numpy only for page-local graphics
     clustering) — see operators/pdf_relational.py.  Serves both
@@ -305,8 +302,7 @@ def _pdf_branch(spans: DataFrame, pdf_elements: DataFrame,
     refs = spans.filter(
         F.col("in_kind").isin(IN_KIND_PDF_REF, IN_KIND_PDF_BYTES)
     ).select("doc_id", "span_idx", "in_ref")
-    items = pdf_layout_items(pdf_elements, pages_per_bucket=PAGES_PER_BUCKET,
-                             table_mode=table_mode)
+    items = pdf_layout_items(pdf_elements)
 
     return refs.join(items, refs.in_ref == items.ref).select(
         "doc_id",
@@ -542,7 +538,7 @@ def extract(
         .unionByName(_sentinel_branch(documents_in))
     )
     if has_pdf:
-        out = out.unionByName(_pdf_branch(ref_spans, pdf_elements, table_mode))
+        out = out.unionByName(_pdf_branch(ref_spans, pdf_elements))
     if doc_blobs is not None:
         out = out.unionByName(_docx_branch(ref_spans, doc_blobs))
     if media_blobs is not None and ocr_model is not None:

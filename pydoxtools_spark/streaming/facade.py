@@ -23,7 +23,7 @@ def incremental_extract(
     pdf_elements: DataFrame | None,
     out_dir: str,
     checkpoint_dir: str,
-    parallelism: int = 32,
+    parallelism: int | None = None,
     available_now: bool = True,
     **extract_kwargs,
 ):
@@ -32,7 +32,8 @@ def incremental_extract(
     readStream(parquet) -> foreachBatch(batch extract) -> append parquet;
     exactly-once via the streaming checkpoint (file-source offsets).
     With available_now=True this processes the backlog and stops — a
-    resumable batch job driven by the streaming engine.
+    resumable batch job driven by the streaming engine.  parallelism
+    is extract()'s span width; None = the session's defaultParallelism.
     """
     stream = (
         spark.readStream.schema(

@@ -287,12 +287,10 @@ CASES = {
         _one_error("error")),
     "pdf_media_blobs": (
         _case_pdf_media_blobs, "ref", _pdf, b"%PDF-1.4 garbage",
-        _errors_only("error")),
-    # the lenient info scan reads a hopeless blob as 0 pages
+        _one_error("error")),
     "pdf_meta_from_blobs": (
         _case_pdf_meta_from_blobs, "doc_id", _pdf, b"%PDF-1.4 garbage",
-        lambda rows: len(rows) == 1 and (rows[0]["error"] is not None
-                                         or rows[0]["n_pages"] == 0)),
+        _one_error("error")),
     "render_pdf_pages": (
         _case_render_pdf_pages, "doc_id", _pdf, b"%PDF-1.4 garbage",
         _one_error("error")),

@@ -75,3 +75,12 @@ def test_rows_only_queries_run(spark):
 def test_entry_smoke(spark):
     df = entrymod.entry(spark)
     assert df.count() > 0
+
+
+def test_queries_share_one_generator_and_span_reader():
+    """Every fixture blob generator goes through _per_doc and every
+    span query through _exploded_spans: one batch loop, one explode."""
+    with open(entrymod.__file__, encoding="utf-8") as f:
+        src = f.read()
+    assert src.count(".mapInPandas(") == 1
+    assert src.count('posexplode("spans")') == 1

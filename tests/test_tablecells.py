@@ -377,7 +377,7 @@ def test_damaged_blob_chars_table_recovered(spark):
 
 
 def test_multipage_chars_doc_page_buckets(spark):
-    """A chars doc spanning 20 pages (> pages_per_bucket=8, so >=3
+    """A chars doc spanning 20 pages (> PAGES_PER_BUCKET=8, so >=3
     buckets) keeps per-page tables and cross-page reading order."""
     import pandas as pd
 
