@@ -188,3 +188,9 @@ SIMHASH_BITS = 64
 # dedicated giant-doc pass (SURVEY.md §4 skew defusal).
 GIANT_DOC_QUANTILE = 0.99
 DEFAULT_SHUFFLE_PARTITIONS = 32
+
+# ---------------------------------------------------------------- budgets
+# Output cap of one decoded PDF stream: a Flate bomb (199 KiB -> 200 MiB)
+# becomes a typed pdf_parse_error row instead of an OOM'd python worker.
+# 64 MiB is far above any content stream and a 20-megapixel RGB image.
+MAX_INFLATE_BYTES = 64 * 1024 * 1024

@@ -23,7 +23,7 @@ Mediawiki aliases onto the same extractor via a line-level pre-pass
 {{templates}}, ''' bold '''.
 
 Everything here is per-document python executed inside an
-Arrow-batched mapInPandas kernel (pipeline._markdown_branch through
+Arrow-batched mapInPandas kernel (pipeline._payload_branch through
 kernels.map_rows) — no per-row Python at the Spark level.
 """
 

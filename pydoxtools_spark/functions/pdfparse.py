@@ -63,6 +63,8 @@ from __future__ import annotations
 import re
 import zlib
 
+from ..constants import MAX_INFLATE_BYTES
+
 PAGE_W, PAGE_H = 612.0, 792.0
 CHAR_EM = 0.5  # average glyph advance as a fraction of font size
 
@@ -133,6 +135,17 @@ class PdfEncryptedError(PdfParseError):
     ladder can contain it by type — substring-matching the message let
     decrypt-time AES failures fall through to the lenient rung, which
     emits ciphertext as garbage text rows (r5 advisor finding)."""
+
+
+class PdfBombError(PdfParseError):
+    """A stream decodes to more than constants.MAX_INFLATE_BYTES — a
+    decompression bomb (199 KiB of Flate inflates to 200 MiB).  Typed
+    like PdfEncryptedError so the repair ladder re-raises it instead of
+    letting the lenient rung inflate the same stream again."""
+
+
+# errors no repair rung can mend: the ladder surfaces them as the error
+_NO_REPAIR = (PdfEncryptedError, PdfBombError)
 
 
 # ------------------------------------------------------------------ writer
@@ -934,10 +947,14 @@ def _resolve_length_ref(data: bytes, num: int, gen: int) -> int | None:
 
 def _inflate(payload: bytes) -> bytes:
     """zlib-inflate tolerating trailing bytes (a stray \\r/\\n the
-    stream delimiters left behind) but NOT truncation."""
+    stream delimiters left behind) but NOT truncation, and at most
+    MAX_INFLATE_BYTES of output (PdfBombError past it)."""
     d = zlib.decompressobj()
-    out = d.decompress(payload)
+    out = d.decompress(payload, MAX_INFLATE_BYTES)
     if not d.eof:
+        if len(out) >= MAX_INFLATE_BYTES:
+            raise PdfBombError(
+                f"FlateDecode output exceeds {MAX_INFLATE_BYTES} bytes")
         raise zlib.error("incomplete deflate stream")
     return out
 
@@ -1332,8 +1349,8 @@ def _expand_object_streams(data: bytes, objs: dict[int, bytes],
             if dec is not None:
                 payload = dec(num, 0, payload)
             decoded = _maybe_flate(h, payload)
-        except PdfEncryptedError:
-            raise  # decrypt failure must reach the typed containment
+        except _NO_REPAIR:
+            raise  # decrypt failure / bomb must reach the typed containment
         except PdfParseError:
             continue  # damaged ObjStm: skip, lenient may still salvage
         first = int(fm.group(1))
@@ -1876,12 +1893,13 @@ def pdf_elements_from_bytes(data: bytes, doc_id: str,
     tree)."""
     try:
         streams = _content_streams_strict(data)
-    except PdfEncryptedError:
+    except _NO_REPAIR:
         # encrypted-but-unreadable (password-protected, unsupported
         # handler, OR a decrypt-time AES failure): lenient 'recovery'
         # would emit ciphertext as garbage rows — an error row is
         # honest.  Typed containment (r5 advisor): message matching
-        # missed 'bad AES padding'/'bad AES stream length'.
+        # missed 'bad AES padding'/'bad AES stream length'.  A bomb
+        # stream would only be inflated again by the lenient rung.
         raise
     except PdfParseError:
         streams = _content_streams_lenient(data)  # may raise: caller contains

@@ -38,3 +38,20 @@ def split_paragraphs(text: str) -> list[str]:
     """Blank-line paragraph split (extract_textstructure.py:72-82)."""
     parts = re.split(PARAGRAPH_SPLIT_REGEX, text.strip())
     return [p for p in (p.strip() for p in parts) if p]
+
+
+# Java's \s (no UNICODE_CHARACTER_CLASS): the JVM regex dialect the
+# split was first defined in, where a no-break space or U+2028 is text
+_SQL_PARAGRAPH_SPLIT = re.compile(
+    PARAGRAPH_SPLIT_REGEX.replace(r"\s", r"[ \t\n\x0b\f\r]"))
+
+
+def sql_paragraphs(text: str | None) -> list[tuple[int, str]]:
+    """(position, paragraph) pairs of Spark SQL's
+    posexplode(split(trim(text), PARAGRAPH_SPLIT_REGEX)), each part
+    trimmed and empty ones dropped: trim strips spaces only, and the
+    regex's \\s is Java's [ \\t\\n\\x0b\\f\\r].  NULL -> no paragraphs."""
+    if text is None:
+        return []
+    parts = _SQL_PARAGRAPH_SPLIT.split(text.strip(" "))
+    return [(i, p.strip(" ")) for i, p in enumerate(parts) if p.strip(" ")]

@@ -4,22 +4,22 @@ The original all-Python kernel (functions/pdflayout.extract_pdf_spans,
 kept as the single-process oracle) spent ~18 ms of pandas overhead per
 34-row group — the classic UDF-in-the-hot-path anti-pattern.  Here the
 90% that is relational runs as whole-stage-codegen Spark SQL, and ONLY
-the geometric clustering of graphics (a per-page numpy kernel over ~10
-rows) stays in Python:
+the page-local table work (graphics clustering and the cells of the
+page's tables, a numpy kernel over one page's rows) stays in Python:
 
   stage                          | engine | reference
   -------------------------------|--------|----------------------------
   text-box grouping (min/max/agg)| SQL    | extract_textstructure.py:99-158
   title rule (median font join)  | SQL    | extract_textstructure.py:172-256
   graphics -> table areas+borders| numpy  | extract_tables.py:893-1210
-  cell assignment (border search)| SQL    | extract_tables.py:400-553
-  grid render + validity         | SQL    | extract_tables.py:555-608,714-761
+  cell assignment (border search)| numpy  | extract_tables.py:400-553
+  grid render + validity         | numpy  | extract_tables.py:555-608,714-761
   covered-text anti-join         | SQL    | extract_textstructure.py:368-372
   reading order                  | SQL    | extract_textstructure.py:418
 
-Scale: every aggregate is map-side combinable; the graphics kernel
-sees only Graphic rows (a few per page); giant docs parallelize by
-page bucket; no stage holds more than a page of data in Python.
+Scale: every aggregate is map-side combinable; the table kernel sees
+only Graphic, Char and text-line rows; giant docs parallelize by page
+bucket; no stage holds more than a page bucket of data in Python.
 """
 
 from __future__ import annotations
@@ -28,7 +28,6 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
-    ArrayType,
     DoubleType,
     IntegerType,
     StringType,
@@ -70,45 +69,82 @@ ITEM = StructType(
 )
 
 
-# per-page routed kernel output: ruled-grid candidate areas (borders,
-# cell assignment continues relationally) OR finished full-fidelity
-# tables (chars pages), discriminated by `kind`
+# per-page routed kernel output: one finished table (ruled grid or
+# chars pipeline) with its area bbox
 ROUTED = StructType(
     [
         StructField("doc_id", StringType(), False),
         StructField("p_num", IntegerType(), False),
-        StructField("kind", StringType(), False),  # 'area' | 'table'
-        StructField("area_id", IntegerType(), False),
         StructField("x0", DoubleType(), False),
         StructField("y0", DoubleType(), False),
         StructField("x1", DoubleType(), False),
         StructField("y1", DoubleType(), False),
-        StructField("row_b", ArrayType(DoubleType()), True),
-        StructField("col_b", ArrayType(DoubleType()), True),
         StructField("text", StringType(), True),
     ]
 )
 
 
-def _page_router_kernel(pdf: pd.DataFrame) -> list[tuple]:
-    """kernels.walk_runs kernel over one (doc_id, page_bucket) group of
-    GRAPHIC + CHAR rows, routing PER PAGE exactly like the canonical
-    oracle (functions/pdflayout.extract_pdf_items:383-407):
-
-      page has Char rows  -> full reference table pipeline (word
-                             rebuild -> sweep-line -> spanning grid ->
-                             frozen validity tree) -> finished 'table'
-                             rows
-      page has none       -> numpy area clustering only -> 'area' rows
-                             (cell assignment / render / validity stay
-                             relational, whole-stage codegen)
-
-    One kernel pass, same group count as a graphics-only kernel — the
-    routing adds NO joins or extra shuffles; Char rows add shuffle
-    volume only on corpora that carry them."""
+def _grid_page_tables(graphics, lines, texts) -> list[tuple]:
+    """Ruled-grid tables of ONE char-less page: graphics (n,4) -> areas
+    + borders (functions/pdflayout.detect_table_areas); text lines
+    (m,4) with their raw texts -> cells.  A line belongs to the area
+    holding its centre; its cell index counts the borders STRICTLY
+    below the centre (np.searchsorted side='left', constants.py
+    CELL_BORDER_STRICT), so a centre exactly on a border lands in the
+    cell before it.  Within a cell, lines join with ' ' in (x0 -
+    CELL_SORT_Y_WEIGHT*y0, text) order (extract_tables.py:115-123).
+    Valid iff >=2 rows, >=2 columns and at least half the cells filled
+    (detect_table_areas only guarantees >=2 borders).  Rendered raw:
+    cells ' | '-joined, rows '\\n'-joined, empty cells '' — no
+    whitespace normalisation.  -> [((x0, y0, x1, y1), text)]"""
     import numpy as np
 
     from ..functions.pdflayout import detect_table_areas
+
+    out = []
+    cx = (lines[:, 0] + lines[:, 2]) / 2.0
+    cy = (lines[:, 1] + lines[:, 3]) / 2.0
+    sort_key = lines[:, 0] - CELL_SORT_Y_WEIGHT * lines[:, 1]
+    for ax0, ay0, ax1, ay1, row_b, col_b in detect_table_areas(graphics):
+        nrows, ncols = len(row_b) - 1, len(col_b) - 1
+        if nrows < 2 or ncols < 2:
+            continue
+        ci = np.searchsorted(col_b, cx) - 1
+        ri = np.searchsorted(row_b, cy) - 1
+        inside = np.flatnonzero(
+            (cx >= ax0) & (cx <= ax1) & (cy >= ay0) & (cy <= ay1)
+            & (ci >= 0) & (ci < ncols) & (ri >= 0) & (ri < nrows))
+        cells: dict[tuple[int, int], list[tuple[float, str]]] = {}
+        for i in inside:
+            cells.setdefault((nrows - 1 - int(ri[i]), int(ci[i])), []).append(
+                (float(sort_key[i]), texts[i]))
+        if len(cells) * 2 < nrows * ncols:
+            continue
+        text = "\n".join(
+            CELL_SEP.join(" ".join(t for _k, t in sorted(cells.get((r, c), ())))
+                          for c in range(ncols))
+            for r in range(nrows))
+        out.append(((ax0, ay0, ax1, ay1), text))
+    return out
+
+
+def _page_router_kernel(pdf: pd.DataFrame) -> list[tuple]:
+    """kernels.walk_runs kernel over one (doc_id, page_bucket) group of
+    GRAPHIC + CHAR + text-line rows, routing PER PAGE exactly like the
+    canonical oracle (functions/pdflayout.extract_pdf_items:383-407):
+
+      page has Char rows  -> full reference table pipeline (word
+                             rebuild -> sweep-line -> spanning grid ->
+                             frozen validity tree)
+      page has none       -> ruled grid: area clustering, cell
+                             assignment of the page's text lines,
+                             validity and render (_grid_page_tables)
+
+    Both paths emit finished tables: one kernel pass, no routing joins
+    and no cell-level aggregation after it.  Text lines and Char rows
+    add shuffle volume, not jobs."""
+    import numpy as np
+
     from ..functions.spantext import table_to_text
     from ..functions.tablecells import extract_page_tables_full
 
@@ -127,6 +163,7 @@ def _page_router_kernel(pdf: pd.DataFrame) -> list[tuple]:
     raw = pdf["rawtext"].to_numpy(object)
     is_g = typ == "Graphic"
     is_ch = typ == "Char"
+    is_line = typ == "Text"
     for p in np.unique(p_arr):
         on_page = p_arr == p
         g = on_page & is_g
@@ -134,136 +171,16 @@ def _page_router_kernel(pdf: pd.DataFrame) -> list[tuple]:
             continue
         ch = on_page & is_ch
         if ch.any():
-            full = extract_page_tables_full(
-                coords[g], coords[ch],
-                [raw[i] for i in np.flatnonzero(ch)],
-            )
-            for aid, ((bx0, by0, bx1, by1), grid) in enumerate(full):
-                rows.append((doc_id, int(p), "table", aid, bx0, by0, bx1, by1,
-                             None, None, table_to_text(grid)))
+            tables = [(bbox, table_to_text(grid))
+                      for bbox, grid in extract_page_tables_full(
+                          coords[g], coords[ch], list(raw[ch]))]
         else:
-            areas = detect_table_areas(coords[g])
-            for aid, (ax0, ay0, ax1, ay1, row_b, col_b) in enumerate(areas):
-                rows.append(
-                    (doc_id, int(p), "area", aid, ax0, ay0, ax1, ay1,
-                     [float(v) for v in row_b], [float(v) for v in col_b],
-                     None)
-                )
+            ln = on_page & is_line
+            tables = _grid_page_tables(coords[g], coords[ln], list(raw[ln]))
+        for (bx0, by0, bx1, by1), text in tables:
+            rows.append((doc_id, int(p), bx0, by0, bx1, by1, text))
     return rows
 
-
-def _grid_tables(areas, lines):
-    """Ruled-grid table path (relational): candidate areas+borders come
-    from the routed kernel; cell assignment, grid render and validity
-    run as whole-stage-codegen Spark SQL.  `areas` carries (doc_id,
-    p_num, area_id, ax0..ay1, row_b, col_b) of the pages routed to this
-    path (already persisted upstream — consumed three times: cell
-    assignment, grid metadata, covered-box anti-join).  Returns
-    (tables ITEM rows, valid_areas for the covered-box anti-join)."""
-    # ---------------- cell assignment: equi-join on (doc, page) then
-    # containment filter; cell index by counting borders <= center
-    # (the relational form of np.searchsorted)
-    cx = (F.col("x0") + F.col("x1")) / 2.0
-    cy = (F.col("y0") + F.col("y1")) / 2.0
-    la = (
-        lines.join(areas, ["doc_id", "p_num"])
-        .withColumn("cx", cx)
-        .withColumn("cy", cy)
-        .filter(
-            (F.col("cx") >= F.col("ax0")) & (F.col("cx") <= F.col("ax1"))
-            & (F.col("cy") >= F.col("ay0")) & (F.col("cy") <= F.col("ay1"))
-        )
-        .withColumn("ncols", F.size("col_b") - 1)
-        .withColumn("nrows", F.size("row_b") - 1)
-        # STRICT < : the oracle's np.searchsorted(side='left') - 1 counts
-        # borders strictly below the center; a center exactly on a border
-        # must land in the same cell on both paths (frozen convention,
-        # see constants.py CELL_BORDER_STRICT note)
-        .withColumn(
-            "ci",
-            F.size(F.filter("col_b", lambda b: b < F.col("cx"))) - 1,
-        )
-        .withColumn(
-            "ri",
-            F.size(F.filter("row_b", lambda b: b < F.col("cy"))) - 1,
-        )
-        .filter(
-            (F.col("ci") >= 0) & (F.col("ci") < F.col("ncols"))
-            & (F.col("ri") >= 0) & (F.col("ri") < F.col("nrows"))
-        )
-        .withColumn("r_top", F.col("nrows") - 1 - F.col("ri"))
-    )
-
-    # within-cell ordering: x0 - 40*y0 ascending (extract_tables.py:115-123)
-    cell_sort_key = F.col("x0") - F.lit(CELL_SORT_Y_WEIGHT) * F.col("y0")
-    cells = (
-        la.groupBy("doc_id", "p_num", "area_id", "r_top", "ci")
-        .agg(
-            F.array_join(
-                F.transform(
-                    F.array_sort(
-                        F.collect_list(F.struct(cell_sort_key.alias("sk"),
-                                                F.col("rawtext").alias("t")))
-                    ),
-                    lambda x: x["t"],
-                ),
-                " ",
-            ).alias("cell_txt")
-        )
-    )
-
-    # ---------------- grid render + validity, per area (pure SQL)
-    grids = (
-        cells.join(
-            areas.select("doc_id", "p_num", "area_id", "ax0", "ay0",
-                         (F.size("row_b") - 1).alias("nrows"),
-                         (F.size("col_b") - 1).alias("ncols")),
-            ["doc_id", "p_num", "area_id"],
-        )
-        .groupBy("doc_id", "p_num", "area_id", "ax0", "ay0", "nrows", "ncols")
-        .agg(
-            F.map_from_arrays(
-                F.collect_list(F.col("r_top") * 10000 + F.col("ci")),
-                F.collect_list("cell_txt"),
-            ).alias("cellmap"),
-            F.count("*").alias("filled"),
-        )
-        # full is_valid_table lockstep: >=2 rows AND >=2 cols AND
-        # half-filled (detect_table_areas only guarantees >=2 borders,
-        # i.e. nrows/ncols >= 1 — without this a 1-row ruled area is
-        # emitted here but rejected by the oracle, flipping the
-        # covered-text anti-join)
-        .filter(
-            (F.col("filled") * 2 >= F.col("nrows") * F.col("ncols"))
-            & (F.col("nrows") >= 2)
-            & (F.col("ncols") >= 2)
-        )
-    ).persist()  # reused by table render AND valid-area anti-join
-    row_expr = (
-        "array_join(transform(sequence(0, ncols - 1), "
-        "c -> coalesce(element_at(cellmap, r * 10000 + c), '')), '{cell}')"
-    ).format(cell=CELL_SEP)
-    tbl_text = F.expr(
-        "array_join(transform(sequence(0, nrows - 1), r -> {row}), '{rs}')".format(
-            row=row_expr, rs="\\n"
-        )
-    )
-    tables = grids.select(
-        F.col("doc_id").alias("ref"),
-        "p_num",
-        F.col("ay0").alias("y0"),
-        F.col("ax0").alias("x0"),
-        F.lit(KIND_TABLE).alias("kind"),
-        tbl_text.alias("text"),
-        F.lit(None).cast("string").alias("media_ref"),
-    )
-
-    # valid areas (those that produced a table) for the covered-box
-    # anti-join
-    valid_areas = grids.select("doc_id", "p_num", "area_id").join(
-        areas, ["doc_id", "p_num", "area_id"]
-    ).select("doc_id", "p_num", "ax0", "ay0", "ax1", "ay1")
-    return tables, valid_areas
 
 def pdf_layout_items(pdf_elements: DataFrame) -> DataFrame:
     """pdf_elements -> unordered item rows (ITEM schema).  The caller
@@ -273,17 +190,17 @@ def pdf_layout_items(pdf_elements: DataFrame) -> DataFrame:
     single-process oracle (functions/pdflayout.extract_pdf_items:383-407):
     pages carrying type='Char' rows take the full-fidelity chars kernel
     (word rebuild, sweep-line cells, spanning grid, frozen validity
-    tree), every other page runs the relational ruled-grid path
-    (whole-stage codegen).  On a mixed corpus both engines therefore
-    select identically per page — a global mode switch would silently
+    tree), every other page with graphics runs the ruled-grid path;
+    both finish inside the one routed kernel.  On a mixed corpus both
+    engines therefore select identically per page — a global mode switch would silently
     diverge (ignore Char rows, or drop char-less ruled pages).
     (extract(table_mode='chars') only asks the blob parser for Char
     rows; it does not switch the layout path.)
     """
     from pyspark import StorageLevel
 
-    # five consumers below (text lines x2, graphics, size_cuts, images)
-    # would each rescan the parquet source; one narrow projection is
+    # five consumers below (text lines, table kernel, size_cuts, images,
+    # parse errors) would each rescan the parquet source; one narrow projection is
     # persisted instead — five low-utilization scan stages collapse
     # into one (MEMORY_AND_DISK: spills, never fails, per-job lifetime)
     el = pdf_elements.select(
@@ -293,7 +210,7 @@ def pdf_layout_items(pdf_elements: DataFrame) -> DataFrame:
     ).persist(StorageLevel.MEMORY_AND_DISK)
 
     # ---------------- text lines (vertical + empty excluded)
-    lines = el.filter(
+    is_line = (
         (F.col("type") == "Text")
         & F.col("rawtext").isNotNull()
         & (F.length(F.trim("rawtext")) > 0)
@@ -301,7 +218,8 @@ def pdf_layout_items(pdf_elements: DataFrame) -> DataFrame:
         # 270° labels too); VERTICAL_ORIENTATION stays the canonical 90
         & (F.coalesce(F.col("mean_char_orientation"), F.lit(0.0))
            % F.lit(180.0) == F.lit(0.0))
-    ).select(
+    )
+    lines = el.filter(is_line).select(
         "doc_id", "p_num", "boxnum", "linenum", "x0", "y0", "x1", "y1",
         "rawtext", "font_size",
     )
@@ -313,14 +231,13 @@ def pdf_layout_items(pdf_elements: DataFrame) -> DataFrame:
         .agg((F.median("font_size") * F.lit(TITLE_SIZE_RATIO)).alias("size_cut"))
     )
 
-    # ---------------- per-page routed table kernel: ONE applyInPandas
-    # pass over Graphic+Char rows decides per page (inside the kernel,
-    # mirroring the oracle) between the finished chars pipeline and
-    # grid candidate areas — no routing joins, no extra shuffles; the
-    # routed output is persisted because it feeds four consumers
-    # (chars tables, grid cell assignment, grid metadata, covered-box
-    # anti-join) and each would re-run the python kernel otherwise.
-    gc = el.filter(F.col("type").isin("Graphic", "Char")).select(
+    # ---------------- per-page routed table kernel: ONE walk over the
+    # Graphic + Char + text-line rows decides per page (inside the
+    # kernel, mirroring the oracle) between the chars pipeline and the
+    # ruled grid, and finishes the tables of both — no routing joins,
+    # no cell aggregation; the output is persisted because it feeds the
+    # table items AND the covered-box anti-join.
+    gc = el.filter(F.col("type").isin("Graphic", "Char") | is_line).select(
         "doc_id", "p_num", "type", "x0", "y0", "x1", "y1", "rawtext",
         (F.col("p_num") / PAGES_PER_BUCKET).cast("int").alias("page_bucket"),
     )
@@ -334,8 +251,7 @@ def pdf_layout_items(pdf_elements: DataFrame) -> DataFrame:
     # ~18 ms/group pandas fixed cost (88 vs ~8 task-seconds on the
     # 5000-doc sf0.1 chars corpus).
     routed = walk_runs(gc, _BUCKET, _page_router_kernel, ROUTED).persist()
-
-    tables_chars = routed.filter(F.col("kind") == "table").select(
+    tables = routed.select(
         F.col("doc_id").alias("ref"),
         "p_num",
         "y0",
@@ -344,21 +260,6 @@ def pdf_layout_items(pdf_elements: DataFrame) -> DataFrame:
         "text",
         F.lit(None).cast("string").alias("media_ref"),
     )
-    valid_chars = routed.filter(F.col("kind") == "table").select(
-        "doc_id", "p_num",
-        F.col("x0").alias("ax0"), F.col("y0").alias("ay0"),
-        F.col("x1").alias("ax1"), F.col("y1").alias("ay1"),
-    )
-    areas = routed.filter(F.col("kind") == "area").select(
-        "doc_id", "p_num", "area_id",
-        F.col("x0").alias("ax0"), F.col("y0").alias("ay0"),
-        F.col("x1").alias("ax1"), F.col("y1").alias("ay1"),
-        "row_b", "col_b",
-    )
-    tables_grid, valid_grid = _grid_tables(areas, lines)
-    tables = tables_chars.unionByName(tables_grid)
-    valid_areas = valid_chars.unionByName(valid_grid)
-
 
     # ---------------- text boxes: hash-agg grouping, JVM only
     boxes = (
@@ -382,11 +283,13 @@ def pdf_layout_items(pdf_elements: DataFrame) -> DataFrame:
         )
         .filter(F.length("btext") >= MIN_BOX_TEXT_CHARS)
     )
-    # covered-text anti-join (±1 tolerance, matching the oracle);
-    # explicit renames keep the equi-keys unambiguous for the analyzer
-    va = valid_areas.select(
+    # covered-text anti-join against the tables' areas (±1 tolerance,
+    # matching the oracle); explicit renames keep the equi-keys
+    # unambiguous for the analyzer
+    va = routed.select(
         F.col("doc_id").alias("va_doc_id"), F.col("p_num").alias("va_p_num"),
-        "ax0", "ay0", "ax1", "ay1")
+        F.col("x0").alias("ax0"), F.col("y0").alias("ay0"),
+        F.col("x1").alias("ax1"), F.col("y1").alias("ay1"))
     boxes = boxes.join(
         va,
         on=[

@@ -2,20 +2,23 @@
 
 Logical plan (all relational steps are JVM-side / whole-stage-codegen;
 Python runs only in Arrow-batched kernels, all of them through
-kernels.py — the markdown, html, container, blob-parse, OCR and
-routed-table kernels):
+kernels.py — the payload, blob-parse, OCR and routed-table kernels):
 
   documents_in (doc_id, spans)
-    └─ posexplode(spans) ────────────────────────────┐ single pass
-         ├─ kind='text' + plain      → split/posexplode (pure Spark SQL)
-         ├─ kind='text' + md/wiki    → mapInPandas markdown kernel
-         │                             (MARKUP_GUARD-routed dispatch)
-         ├─ kind='html'              → mapInPandas html kernel
-         ├─ kind='pdf_ref'/'pdf_bytes' → join pdf_elements →
-         │     per-(doc,page-bucket) routed table kernel (per-page
-         │     chars/grid decision) → relational assembly → join back
-         ├─ kind='image_ref'         → projection
-         └─ union → window(offset) → array_sort → collect per doc
+    ├─ posexplode(spans) kind in (text, html) ──┐
+    ├─ ref explode ─┬─ kind=docx/odt/epub/rtf_bytes ⋈ doc_blobs
+    │               │                           └─ union → repartition
+    │               │      (doc_id, span_idx) → ONE payload kernel:
+    │               │      html parse | markdown/wiki parse (doc_type,
+    │               │      MARKUP_GUARD-routed in the JVM) | container
+    │               │      parse | plain-text paragraph split
+    │               ├─ kind='pdf_ref'/'pdf_bytes' → join pdf_elements →
+    │               │     per-(doc,page-bucket) routed table kernel
+    │               │     (per-page chars/grid tables, both finished in
+    │               │     the kernel) → relational assembly → join back
+    │               ├─ kind='image_ref' → projection (+ OCR kernel)
+    │               └─ unknown kind → contained error row
+    └─ union → window(offset) → array_sort → collect per doc
 
 Scale properties (SURVEY.md §4):
   * giant PDFs are split into page buckets BEFORE the kernel, so a
@@ -25,8 +28,8 @@ Scale properties (SURVEY.md §4):
   * the doc-level title threshold (median font size) is computed with
     F.median in a hash aggregate, not inside the kernel, keeping the
     kernel page-local;
-  * html spans are hash-repartitioned for balance; AQE handles residual
-    skew;
+  * payload spans are hash-repartitioned for balance; AQE handles
+    residual skew;
   * failures never kill a task: kernels.map_rows turns a raising
     per-span parse into a KIND_ERROR row that surfaces as the `error`
     column + parse_failures metrics (reference semantics:
@@ -66,8 +69,9 @@ from .constants import (
     KIND_IMAGE,
     KIND_SENTINEL,
     KIND_TEXT,
-    PARAGRAPH_SPLIT_REGEX,
 )
+from .dispatch import TYPE_MARKDOWN, TYPE_MEDIAWIKI
+from .functions.spantext import sql_paragraphs
 from .kernels import error_text, map_rows
 
 # mid-pipeline row shape: one output span + its reading-order sort keys
@@ -127,100 +131,131 @@ def explode_input_refs(documents_in: DataFrame) -> DataFrame:
 # ------------------------------------------------------------- branches
 
 
-def _is_markup_text() -> F.Column:
-    """Text spans whose content dispatch detects as markdown/mediawiki
-    route to the markdown branch (reference: a .md payload gets the
-    pandoc pipeline, document.py:66-113 + extract_pandoc.py:98-167);
-    everything else keeps the pure-SQL paragraph split.  The cheap
-    MARKUP_GUARD regex short-circuits in front of the 14-regex
-    detection ladder (And codegen skips the right side when the left
-    is false), so plain prose pays one payload scan per branch, not
-    fourteen — measured ~20% of the text-path time at sf0.1."""
-    from .dispatch import (
-        MARKUP_GUARD,
-        TYPE_MARKDOWN,
-        TYPE_MEDIAWIKI,
-        doc_type_col,
+_CONTAINER_IN_KINDS = (IN_KIND_DOCX_BYTES, IN_KIND_ODT_BYTES,
+                       IN_KIND_EPUB_BYTES, IN_KIND_RTF_BYTES)
+
+
+def _markup_type() -> F.Column:
+    """doc_type of a text span whose content dispatch detects as
+    markdown/mediawiki (reference: a .md payload gets the pandoc
+    pipeline, document.py:66-113 + extract_pandoc.py:98-167); NULL for
+    html and container spans and for text the MARKUP_GUARD regex
+    rejects.  The cheap guard short-circuits in front of the 14-regex
+    detection ladder (CaseWhen skips the ladder when the guard is
+    false), so plain prose pays one regex, not fifteen — measured ~20%
+    of the text-path time at sf0.1."""
+    from .dispatch import MARKUP_GUARD, doc_type_col
+
+    return F.when(
+        (F.col("in_kind") == IN_KIND_TEXT)
+        & F.col("in_text").rlike(MARKUP_GUARD),
+        doc_type_col(F.col("in_text")),
     )
-
-    return F.col("in_text").rlike(MARKUP_GUARD) & doc_type_col(
-        F.col("in_text")
-    ).isin(TYPE_MARKDOWN, TYPE_MEDIAWIKI)
-
-
-def _text_branch(spans: DataFrame) -> DataFrame:
-    """Plain text -> paragraph spans, entirely in Spark SQL
-    (reference extract_textstructure.py:72-82: blank-line split)."""
-    paras = spans.filter(
-        (F.col("in_kind") == IN_KIND_TEXT) & ~_is_markup_text()
-    ).select(
-        "doc_id",
-        "span_idx",
-        F.posexplode(
-            F.split(F.trim(F.col("in_text")), PARAGRAPH_SPLIT_REGEX)
-        ).alias("pos", "para"),
-    )
-    return paras.filter(F.length(F.trim("para")) > 0).select(
-        "doc_id",
-        "span_idx",
-        F.col("pos").cast("double").alias("ord1"),
-        F.lit(0.0).alias("ord2"),
-        F.lit(0.0).alias("ord3"),
-        F.lit(KIND_TEXT).alias("kind"),
-        F.trim("para").alias("text"),
-        F.lit(None).cast("string").alias("media_ref"),
-    )
-
-
-def _span_rows(rows: DataFrame, parse, error_label: str) -> DataFrame:
-    """(doc_id, span_idx, *payload) rows -> output span rows, one per
-    `parse(*payload)` item in order (ord1 = item index).  A raising
-    parse emits ONE contained `error_label` error row for its span."""
-
-    def spans(doc_id, span_idx, *payload):
-        return [(doc_id, span_idx, float(i), 0.0, 0.0, k, t, r)
-                for i, (k, t, r) in enumerate(parse(*payload))]
-
-    def on_error(values, e):
-        return (values[0], values[1], 0.0, 0.0, 0.0, KIND_ERROR,
-                f"{error_label}: {error_text(e)}", None)
-
-    return map_rows(rows, spans, _OUT_SPAN, on_error)
-
-
-def _parse_html(raw):
-    from .functions.htmlparse import extract_html_spans
-
-    return extract_html_spans(raw or "")
 
 
 def _parse_markup(raw, doc_type):
     """markdown/mediawiki payload -> spans (functions/markdown.py;
     reference extract_pandoc.py:98-167 block mapping)."""
-    from .dispatch import TYPE_MEDIAWIKI
     from .functions.markdown import extract_markdown_spans, extract_wiki_spans
 
     fn = extract_wiki_spans if doc_type == TYPE_MEDIAWIKI else extract_markdown_spans
     return fn(raw or "")
 
 
-def _html_branch(spans: DataFrame) -> DataFrame:
-    html = spans.filter(F.col("in_kind") == IN_KIND_HTML).select(
-        "doc_id", "span_idx", "in_text"
+def _parse_container(content):
+    """Zip-container / rtf document bytes -> spans.  Self-describing
+    dispatch per blob (magic + part probes, NOT the declared in_kind —
+    a mislabeled blob still parses, and a hopeless one errors): docx
+    (functions/docx.py, ECMA-376), odt (functions/odf.py, OASIS ODF),
+    epub (functions/odf.py, XHTML chapters through the html kernel in
+    spine order) — the reference's pandoc coverage
+    (extract_pandoc.py:98-167) rebuilt from the container specs."""
+    from .functions.docx import extract_docx_spans, is_docx
+    from .functions.odf import (
+        extract_epub_spans,
+        extract_odt_spans,
+        is_epub,
+        is_odt,
     )
-    return _span_rows(html, _parse_html, "html_parse_error")
+    from .functions.rtf import extract_rtf_spans, is_rtf
+
+    if is_rtf(content):
+        return extract_rtf_spans(content)
+    if is_docx(content):
+        return extract_docx_spans(content)
+    if is_epub(content):
+        return extract_epub_spans(content)
+    if is_odt(content):
+        return extract_odt_spans(content)
+    raise ValueError(
+        "unrecognized container (rtf/docx/odt/epub probes all negative)")
 
 
-def _markdown_branch(spans: DataFrame) -> DataFrame:
-    from .dispatch import doc_type_col
+def _parse_payload(in_kind, text, doc_type, content):
+    """One payload span -> [(ord1, (kind, text, media_ref))]: html
+    parse, markdown/wiki parse, container parse, or the blank-line
+    paragraph split of plain text (reference
+    extract_textstructure.py:72-82), whose ord1 is the paragraph's
+    position in the split, empty parts included."""
+    if in_kind == IN_KIND_HTML:
+        from .functions.htmlparse import extract_html_spans
 
-    md = spans.filter(
-        (F.col("in_kind") == IN_KIND_TEXT) & _is_markup_text()
-    ).select(
-        "doc_id", "span_idx", "in_text",
-        doc_type_col(F.col("in_text")).alias("doc_type"),
-    )
-    return _span_rows(md, _parse_markup, "markdown_parse_error")
+        return enumerate(extract_html_spans(text or ""))
+    if in_kind in _CONTAINER_IN_KINDS:
+        return enumerate(_parse_container(content))
+    if doc_type in (TYPE_MARKDOWN, TYPE_MEDIAWIKI):
+        return enumerate(_parse_markup(text, doc_type))
+    return [(pos, (KIND_TEXT, para, None))
+            for pos, para in sql_paragraphs(text)]
+
+
+def _payload_error(in_kind) -> str:
+    if in_kind == IN_KIND_HTML:
+        return "html_parse_error"
+    if in_kind in _CONTAINER_IN_KINDS:
+        return "docx_parse_error"
+    return "markdown_parse_error"
+
+
+def _payload_branch(spark: SparkSession, documents_in: DataFrame,
+                    ref_spans: DataFrame, doc_blobs: DataFrame | None,
+                    parallelism: int | None) -> DataFrame:
+    """Every span whose parse runs in python, through ONE kernel: text
+    and html spans with their payload, plus container spans
+    (docx/odt/epub/rtf_bytes) joined to their doc_blobs(ref, content)
+    bytes.  A container span whose ref has no blob row yields no spans
+    (the doc still appears with an empty array via the sentinel),
+    mirroring the pdf_ref convention.  One hash repartition on
+    (doc_id, span_idx) spreads giant docs' spans evenly across tasks
+    (skew defusal — the corpus writer clusters giants within files);
+    a raising parse emits ONE contained error row for its span, under
+    its kind's prefix."""
+    payload = explode_input_spans(documents_in).filter(
+        F.col("in_kind").isin(IN_KIND_TEXT, IN_KIND_HTML)
+    ).select("doc_id", "span_idx", "in_kind", "in_text",
+             _markup_type().alias("doc_type"),
+             F.lit(None).cast("binary").alias("content"))
+    if doc_blobs is not None:
+        refs = ref_spans.filter(F.col("in_kind").isin(*_CONTAINER_IN_KINDS))
+        payload = payload.unionByName(
+            refs.join(doc_blobs, refs.in_ref == doc_blobs.ref).select(
+                "doc_id", "span_idx", "in_kind",
+                F.lit(None).cast("string").alias("in_text"),
+                F.lit(None).cast("string").alias("doc_type"), "content"))
+    payload = payload.repartition(
+        parallelism or spark.sparkContext.defaultParallelism,
+        "doc_id", "span_idx")
+
+    def spans(doc_id, span_idx, in_kind, text, doc_type, content):
+        return [(doc_id, span_idx, float(i), 0.0, 0.0, k, t, r)
+                for i, (k, t, r) in _parse_payload(in_kind, text, doc_type,
+                                                   content)]
+
+    def on_error(values, e):
+        return (values[0], values[1], 0.0, 0.0, 0.0, KIND_ERROR,
+                f"{_payload_error(values[2])}: {error_text(e)}", None)
+
+    return map_rows(payload, spans, _OUT_SPAN, on_error)
 
 
 def parse_pdf_blobs(pdf_blobs: DataFrame, emit_chars: bool = False) -> DataFrame:
@@ -314,55 +349,6 @@ def _pdf_branch(spans: DataFrame, pdf_elements: DataFrame) -> DataFrame:
         "text",
         items.media_ref.alias("media_ref"),
     )
-
-
-def _parse_container(content):
-    """Zip-container / rtf document bytes -> spans.  Self-describing
-    dispatch per blob (magic + part probes, NOT the declared in_kind —
-    a mislabeled blob still parses, and a hopeless one errors): docx
-    (functions/docx.py, ECMA-376), odt (functions/odf.py, OASIS ODF),
-    epub (functions/odf.py, XHTML chapters through the html kernel in
-    spine order) — the reference's pandoc coverage
-    (extract_pandoc.py:98-167) rebuilt from the container specs."""
-    from .functions.docx import extract_docx_spans, is_docx
-    from .functions.odf import (
-        extract_epub_spans,
-        extract_odt_spans,
-        is_epub,
-        is_odt,
-    )
-    from .functions.rtf import extract_rtf_spans, is_rtf
-
-    if is_rtf(content):
-        return extract_rtf_spans(content)
-    if is_docx(content):
-        return extract_docx_spans(content)
-    if is_epub(content):
-        return extract_epub_spans(content)
-    if is_odt(content):
-        return extract_odt_spans(content)
-    raise ValueError(
-        "unrecognized container (rtf/docx/odt/epub probes all negative)")
-
-
-_CONTAINER_IN_KINDS = (IN_KIND_DOCX_BYTES, IN_KIND_ODT_BYTES,
-                       IN_KIND_EPUB_BYTES, IN_KIND_RTF_BYTES)
-
-
-def _docx_branch(spans: DataFrame, doc_blobs: DataFrame) -> DataFrame:
-    """Container-document branch: docx/odt/epub_bytes spans join their
-    binary payloads from doc_blobs(ref, content) — same side-table
-    shape as pdf_blobs — and run the container kernel (which probes
-    the actual format per blob).  A span whose ref has no blob row
-    yields no spans (the doc still appears with an empty array via the
-    sentinel), mirroring the pdf_ref convention."""
-    refs = spans.filter(F.col("in_kind").isin(*_CONTAINER_IN_KINDS)).select(
-        "doc_id", "span_idx", "in_ref"
-    )
-    joined = refs.join(doc_blobs, refs.in_ref == doc_blobs.ref).select(
-        "doc_id", "span_idx", "content"
-    )
-    return _span_rows(joined, _parse_container, "docx_parse_error")
 
 
 def _ocr_branch(spans: DataFrame, media_blobs: DataFrame,
@@ -481,10 +467,12 @@ def extract(
     1025-1029; pdf_utils.py:306-309) as a JVM-side partition-prunable
     filter on the elements scan.
 
-    table_mode: "grid" (element tables, relational cell assignment) or
-    "chars" (full-fidelity word-rebuild/sweep-line/spanning-cell path —
-    requires type='Char' rows; see operators/pdf_relational.py).
-    parallelism: span repartition width; None = defaultParallelism."""
+    table_mode: "chars" asks the blob parser for type='Char' rows, which
+    send their pages down the full-fidelity word-rebuild/sweep-line/
+    spanning-cell table path; the routed table kernel picks the path
+    per page either way (see operators/pdf_relational.py).
+    parallelism: payload-kernel repartition width; None =
+    defaultParallelism."""
     # Statically-absent PDF input -> the pdf branch is skipped outright
     # (r7).  With the old empty-DataFrame default the branch still built
     # the FULL pdf_layout_items machinery over zero rows — its persist()
@@ -512,35 +500,21 @@ def extract(
     if max_pages is not None:
         pdf_elements = pdf_elements.filter(F.col("p_num") < max_pages)
 
-    # Explode + hash-repartition up front: spreads giant docs' spans
-    # evenly across tasks (skew defusal — the corpus writer clusters
-    # giants within files, so file-split partitioning straggles).
-    # Known trade-off (measured, acceptable): branch kind-filters get
-    # pushed below this exchange, so the branches keep separate scans
-    # (ReuseExchange needs identical subtrees), and Spark 4.1's nested
-    # schema pruning does not prune span.text through posexplode.  At
-    # 100 TB the mitigation is an explicit schema-subset read for the
-    # ref-only branches (Iceberg column projection), not a plan change.
-    spans = explode_input_spans(documents_in).repartition(
-        parallelism or spark.sparkContext.defaultParallelism, "doc_id", "span_idx"
-    )
-    # Ref-only branches (pdf/image/docx/ocr) never touch span.text:
-    # they read through the column-pruned ref explode (scan carries
-    # kind+media_ref only — the r2-named 100x mitigation, now code;
-    # A/B at the 96k corpus in BASELINE.md).
+    # Ref-only branches (pdf/image/ocr/container refs) never touch
+    # span.text: they read through the column-pruned ref explode (scan
+    # carries kind+media_ref only — the r2-named 100x mitigation; A/B at
+    # the 96k corpus in BASELINE.md).  The text payload is scanned once,
+    # by the payload branch.
     ref_spans = explode_input_refs(documents_in)
     out = (
-        _text_branch(spans)
-        .unionByName(_markdown_branch(spans))
-        .unionByName(_html_branch(spans))
+        _payload_branch(spark, documents_in, ref_spans, doc_blobs,
+                        parallelism)
         .unionByName(_image_branch(ref_spans))
         .unionByName(_unknown_kind_branch(ref_spans))
         .unionByName(_sentinel_branch(documents_in))
     )
     if has_pdf:
         out = out.unionByName(_pdf_branch(ref_spans, pdf_elements))
-    if doc_blobs is not None:
-        out = out.unionByName(_docx_branch(ref_spans, doc_blobs))
     if media_blobs is not None and ocr_model is not None:
         out = out.unionByName(_ocr_branch(ref_spans, media_blobs, ocr_model))
 
@@ -693,8 +667,9 @@ def run_resumable(
     the marker is written strictly after the data write succeeds, so a
     run killed mid-write leaves an unmanifested directory that the next
     run's anti-join IGNORES (its docs are re-extracted rather than
-    silently lost).  With Iceberg this would be `MERGE INTO` + the
-    snapshot log.
+    silently lost), and a retry under the same run_id overwrites that
+    directory rather than appending to it.  With Iceberg this would be
+    `MERGE INTO` + the snapshot log.
 
     **extract_kwargs forward to extract(): pdf_blobs / doc_blobs
     (docx/odt/epub/rtf containers) / media_blobs + ocr_model /
@@ -740,7 +715,10 @@ def run_resumable(
         .withColumn("partition_id", F.spark_partition_id())
         .observe(obs, *_run_counters())
     )
-    extracted.write.mode("append").parquet(run_path)
+    # overwrite: an unmanifested run_path is a crashed attempt's
+    # leftover (a manifested run_id returned above), so a retry under
+    # the same run_id replaces it instead of committing it twice
+    extracted.write.mode("overwrite").parquet(run_path)
     elapsed_ms = int((time.monotonic() - t0) * 1000)
     stats = obs.get
     n_done = int(stats["docs_processed"] or 0)

@@ -52,6 +52,15 @@ def width(spark: SparkSession) -> int:
     return int(spark.conf.get("spark.sql.shuffle.partitions"))
 
 
+# Entries of the JVM-wide generated-class cache (Spark's default: 100;
+# a static conf, so it is set here, at session build).  A warm extract
+# pass generates ~130 classes (~210 before its kernels were fused), so
+# at 100 every pass evicted its own classes and recompiled them in
+# Janino, and the JIT then spent 4-5 CPU-s a pass on 4 cores.  The 83
+# driver queries generate ~990 more (sf0.001); the cache holds both.
+CODEGEN_CACHE_ENTRIES = 2048
+
+
 def get_spark(
     app_name: str = "pydoxtools-spark",
     cores: int | None = None,
@@ -74,6 +83,8 @@ def get_spark(
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
+        .config("spark.sql.codegen.cache.maxEntries",
+                str(CODEGEN_CACHE_ENTRIES))
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "2048")
         .config("spark.sql.files.maxPartitionBytes", "134217728")

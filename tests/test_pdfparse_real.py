@@ -844,3 +844,52 @@ def test_corrupt_aes_stream_contained_as_encrypted_error():
     except PdfParseError as e:
         assert isinstance(e, PdfEncryptedError) or "Flate" in str(e) \
             or "stream" in str(e)
+
+
+def _flate_bomb_pdf() -> bytes:
+    """A one-page PDF whose content stream inflates past the output
+    budget: ~70 KiB of Flate that decodes to MAX_INFLATE_BYTES + 4 MiB
+    of zeros (built chunk-wise, never materialised)."""
+    from pydoxtools_spark.constants import MAX_INFLATE_BYTES
+
+    z = zlib.compressobj(9)
+    mib = bytes(1 << 20)
+    bomb = b"".join(z.compress(mib)
+                    for _ in range((MAX_INFLATE_BYTES >> 20) + 4)) + z.flush()
+    return _one_page_pdf(bomb, b" /Filter /FlateDecode")
+
+
+def test_flate_bomb_raises_typed_error_without_lenient_retry(monkeypatch):
+    """A Flate bomb stops at the output budget with PdfBombError, and
+    the ladder re-raises it (like PdfEncryptedError): the lenient rung,
+    which inflates every stream again, never runs."""
+    from pydoxtools_spark.functions import pdfparse
+
+    def lenient(data):
+        raise AssertionError("lenient rung ran on a bomb")
+
+    monkeypatch.setattr(pdfparse, "_content_streams_lenient", lenient)
+    with pytest.raises(pdfparse.PdfBombError):
+        pdf_elements_from_bytes(_flate_bomb_pdf(), "d")
+
+
+def test_flate_bomb_is_one_error_row_in_extract(spark):
+    """Through extract(pdf_blobs=...), a bomb is one pdf_parse_error row
+    next to a clean doc.  The job finishing proves no task failed: a
+    local-mode task is not retried, so a failed one fails the job."""
+    from pydoxtools_spark.pipeline import extract
+    from pydoxtools_spark.schemas import DOCUMENTS_IN
+
+    blobs = spark.createDataFrame(
+        [("bomb", _flate_bomb_pdf()), ("ok", build_tiny_pdf(PAGES))],
+        "ref string, content binary")
+    docs = spark.createDataFrame(
+        [{"doc_id": r, "spans": [{"kind": "pdf_bytes", "text": None,
+                                  "media_ref": r, "offset": 0}]}
+         for r in ("bomb", "ok")], schema=DOCUMENTS_IN)
+    out = {r["doc_id"]: r for r in
+           extract(spark, docs, None, parallelism=2, pdf_blobs=blobs).collect()}
+    assert out["bomb"]["error"].startswith("pdf_parse_error: FlateDecode "
+                                           "output exceeds")
+    assert out["bomb"]["spans"] == []
+    assert out["ok"]["error"] is None and out["ok"]["spans"]

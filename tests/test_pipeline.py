@@ -230,3 +230,115 @@ def test_ref_explode_prunes_span_text_from_scan(spark, tmp_path):
         .executedPlan().toString()
     eschemas = re.findall(r"ReadSchema: (\S+)", eplan)
     assert any("text" not in s for s in eschemas), eschemas
+
+
+def _text_html_docx_input(spark):
+    from pydoxtools_spark.functions.docx import build_tiny_docx
+
+    docs = spark.createDataFrame([
+        {"doc_id": "t", "spans": [
+            {"kind": "text", "text": "a\n\nb", "media_ref": None, "offset": 0},
+            {"kind": "text", "text": "# Title\n\n- one\n- two\n\n**x** `y`",
+             "media_ref": None, "offset": 0}]},
+        {"doc_id": "h", "spans": [
+            {"kind": "html", "text": "<html><body><p>hi</p></body></html>",
+             "media_ref": None, "offset": 0}]},
+        {"doc_id": "d", "spans": [
+            {"kind": "docx_bytes", "text": None, "media_ref": "blob://d",
+             "offset": 0}]},
+    ], schema=DOCUMENTS_IN)
+    blobs = spark.createDataFrame(
+        [("blob://d", build_tiny_docx([("text", "body")]))],
+        "ref string, content binary")
+    return docs, blobs
+
+
+def test_extract_plans_one_payload_kernel_and_one_span_exchange(spark):
+    """Text, markdown, html and container spans share ONE python
+    kernel behind ONE hash repartition of the exploded spans: a kernel
+    per branch re-scanned, re-exploded and re-shuffled the payload for
+    each (Catalyst pushes each branch's kind filter below the
+    repartition, so the branches never share an exchange)."""
+    docs, blobs = _text_html_docx_input(spark)
+    df = extract(spark, docs, None, parallelism=2, doc_blobs=blobs)
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    assert plan.count("MapInPandas") == 1, plan
+    assert plan.count("REPARTITION_BY_NUM") == 1, plan
+    out = {r["doc_id"]: [(s["kind"], s["text"]) for s in r["spans"]]
+           for r in df.collect()}
+    assert out["t"][:2] == [("text", "a"), ("text", "b")]
+    assert ("header", "Title") in out["t"]
+    assert out["h"] == [("text", "hi")]
+    assert out["d"] == [("text", "body")]
+
+
+def test_second_extract_write_hits_codegen_cache(spark, corpus, tmp_path):
+    """A pass generates more classes than Spark's default 100-entry
+    codegen cache holds, so with it every pass recompiled ~200 classes
+    in Janino.  session.get_spark sizes the cache to hold a pass: a
+    repeated identical write compiles (almost) nothing.  The first
+    write also fills the layout's persisted tables, and later writes
+    plan reads of them instead, so the check compares the two after
+    it."""
+    docs_df, pdf_df, _ = corpus
+    docs, blobs = _text_html_docx_input(spark)
+    compiles = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics \
+        .METRIC_COMPILATION_TIME()
+
+    def write(name):
+        extract(spark, docs_df.unionByName(docs), pdf_df, parallelism=4,
+                doc_blobs=blobs).write.parquet(str(tmp_path / name))
+        return compiles.getCount()
+
+    write("warm")
+    first = write("first")
+    assert write("second") - first <= 5
+
+
+def test_retried_run_id_after_lost_marker_commits_once(spark, corpus,
+                                                       tmp_path):
+    """A run whose data write landed but whose marker was lost (a crash
+    between the two) and is retried under the same run_id must commit
+    each doc once: the retry overwrites the unmanifested run dir
+    instead of appending a second copy to it."""
+    import os
+
+    from pydoxtools_spark.pipeline import read_extracted, run_resumable
+
+    docs_df, pdf_df, _ = corpus
+    five = docs_df.limit(5)
+    out = str(tmp_path / "retry_out")
+    run_resumable(spark, five, pdf_df, out, run_id="r1", parallelism=2)
+    os.remove(f"{out}/_snapshots/r1.json")
+    r = run_resumable(spark, five, pdf_df, out, run_id="r1", parallelism=2)
+    assert r["docs_processed"] == 5
+    got = read_extracted(spark, out)
+    assert got.count() == 5
+    assert got.select("doc_id").distinct().count() == 5
+
+
+@pytest.mark.parametrize("text", [
+    "a\tb\n\n\tc\t",            # tab: not stripped by trim
+    "a\r\n\r\nb\r\n \r\nc",     # CRLF blank lines
+    "a\n\u00a0\nb",            # no-break space: not Java \s
+    "a\n\u2028\nb\n\n\u2028",  # line separator: not Java \s
+    "  lead\n\n\n trail  ",     # leading/trailing spaces
+    "a\n\x0b\x0c\nb\n\x85\nc",  # VT/FF are Java \s, NEL is not
+    " \n\n \t\n\n ",            # whitespace only
+    "",
+    None,
+])
+def test_sql_paragraphs_match_spark_split(spark, text):
+    """The payload kernel's paragraph split equals the Spark SQL
+    expression it replaced, position included:
+    posexplode(split(trim(x), PARAGRAPH_SPLIT_REGEX)), trimmed, empty
+    parts dropped."""
+    from pydoxtools_spark.constants import PARAGRAPH_SPLIT_REGEX
+    from pydoxtools_spark.functions.spantext import sql_paragraphs
+
+    rows = spark.createDataFrame([(text,)], "x string").select(
+        F.posexplode(F.split(F.trim("x"), PARAGRAPH_SPLIT_REGEX))
+        .alias("pos", "para")
+    ).filter(F.length(F.trim("para")) > 0).select(
+        "pos", F.trim("para").alias("para")).collect()
+    assert sql_paragraphs(text) == [(r["pos"], r["para"]) for r in rows]

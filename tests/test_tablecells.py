@@ -422,3 +422,104 @@ def test_multipage_chars_doc_page_buckets(spark):
     (out,) = extract(spark, docs, pdf_df, parallelism=4).collect()
     got = [(s["kind"], s["text"], s["media_ref"]) for s in out["spans"]]
     assert got == list(want)
+
+
+def _grid_edge_elements(ref):
+    """Element-only ruled pages (the grid path) that hit its edge
+    cases: a line centre exactly on a column and on a row border,
+    doubled inner spaces, tab-only and space-only lines, two lines
+    tying on the within-cell sort key, a 1-row ruled area, an exactly
+    half-filled grid and a less-than-half-filled one."""
+    rows = []
+
+    def el(**kw):
+        base = dict(doc_id=ref, p_num=0, boxnum=len(rows), linenum=0,
+                    type="Text", x0=0.0, y0=0.0, x1=0.0, y1=0.0,
+                    rawtext=None, font_name="Helv", font_size=10.0,
+                    font_color="#000", mean_char_orientation=0.0,
+                    linewidth=None, media_ref=None)
+        base.update(kw)
+        rows.append(base)
+
+    def grid(p, tx0, ty1, nr, nc, cw, ch):
+        for r in range(nr + 1):
+            el(p_num=p, type="Graphic", x0=tx0, y0=ty1 - r * ch,
+               x1=tx0 + nc * cw, y1=ty1 - r * ch, linewidth=1.0)
+        for c in range(nc + 1):
+            el(p_num=p, type="Graphic", x0=tx0 + c * cw, y0=ty1 - nr * ch,
+               x1=tx0 + c * cw, y1=ty1, linewidth=1.0)
+
+    def line(p, x0, y0, x1, y1, t):
+        el(p_num=p, x0=x0, y0=y0, x1=x1, y1=y1, rawtext=t)
+
+    # page 0: 3x3 grid, columns at x 100/190/280/370, rows at y 600/570/540/510
+    grid(0, 100.0, 600.0, 3, 3, 90.0, 30.0)
+    line(0, 104.0, 577.0, 180.0, 587.0, "alpha")
+    line(0, 194.0, 577.0, 280.0, 587.0, "two  spaces")
+    line(0, 150.0, 577.0, 230.0, 587.0, "on border")     # cx == 190.0
+    line(0, 284.0, 560.0, 360.0, 580.0, "cy on border")  # cy == 570.0
+    line(0, 104.0, 547.0, 180.0, 557.0, "\t")
+    line(0, 194.0, 547.0, 280.0, 557.0, "   ")
+    line(0, 284.0, 547.0, 360.0, 557.0, "zeta")          # same sort key
+    line(0, 284.0, 547.0, 360.0, 557.0, "eta")
+    line(0, 104.0, 517.0, 180.0, 527.0, "lower left")
+    line(0, 100.0, 700.0, 300.0, 712.0, "page zero intro")
+    # page 1: a 1-row ruled area
+    grid(1, 100.0, 600.0, 1, 3, 90.0, 60.0)
+    line(1, 104.0, 560.0, 180.0, 570.0, "one row a")
+    line(1, 194.0, 560.0, 280.0, 570.0, "one row b")
+    # page 2: 2 of 4 cells filled (valid), 2 of 6 (not)
+    grid(2, 100.0, 600.0, 2, 2, 90.0, 30.0)
+    line(2, 104.0, 577.0, 180.0, 587.0, "half one")
+    line(2, 194.0, 547.0, 280.0, 557.0, "half two")
+    grid(2, 100.0, 400.0, 2, 3, 90.0, 30.0)
+    line(2, 104.0, 377.0, 180.0, 387.0, "sparse one")
+    line(2, 194.0, 347.0, 280.0, 357.0, "sparse two")
+    return rows
+
+
+def test_grid_edge_pages_render_like_the_relational_path(spark):
+    """The routed kernel finishes ruled-grid tables in numpy; these
+    expected spans are what the Spark SQL cell assignment, render and
+    validity (the relational grid path it replaced) produced for the
+    same pages.  They differ from the single-process oracle on purpose:
+    cells render raw (doubled spaces and a tab cell kept), not through
+    norm_ws."""
+    from pydoxtools_spark.pipeline import extract
+    from pydoxtools_spark.schemas import DOCUMENTS_IN, PDF_ELEMENT
+
+    ref = "media://pdf/grid_edges"
+    docs = spark.createDataFrame(
+        [{"doc_id": "edges", "spans": [
+            {"kind": "pdf_ref", "text": None, "media_ref": ref, "offset": 0}]}],
+        schema=DOCUMENTS_IN)
+    pdf_df = spark.createDataFrame(_grid_edge_elements(ref),
+                                   schema=PDF_ELEMENT)
+    (out,) = extract(spark, docs, pdf_df, parallelism=2).collect()
+    got = [(s["kind"], s["text"], s["offset"]) for s in out["spans"]]
+    assert got == [
+        ("text", "page zero intro", 0),
+        ("table", "alpha on border | two  spaces | \n"
+                  "\t |  | cy on border eta zeta\n"
+                  "lower left |  | ", 15),
+        ("text", "one row a", 93),
+        ("text", "one row b", 102),
+        ("table", "half one | \n | half two", 111),
+        ("text", "sparse one", 134),
+        ("text", "sparse two", 144),
+    ]
+
+
+def test_layout_plan_has_no_grid_aggregation(spark):
+    """Grid tables finish inside the routed kernel: no plan of the
+    layout query, analyzed through executed, carries the cell-level
+    aggregation (the map_from_arrays grid render of the relational
+    path)."""
+    from pydoxtools_spark.operators.pdf_relational import pdf_layout_items
+    from pydoxtools_spark.schemas import PDF_ELEMENT
+
+    df = pdf_layout_items(spark.createDataFrame(
+        _grid_edge_elements("media://pdf/grid_edges"), schema=PDF_ELEMENT))
+    assert sum(1 for r in df.collect() if r["kind"] == "table") == 2
+    plans = df._jdf.queryExecution().toString()
+    assert "map_from_arrays" not in plans, plans
