@@ -120,9 +120,10 @@ def _grid_page_tables(graphics, lines, texts) -> list[tuple]:
                 (float(sort_key[i]), texts[i]))
         if len(cells) * 2 < nrows * ncols:
             continue
+        joined = {rc: " ".join(t for _k, t in sorted(v))
+                  for rc, v in cells.items()}
         text = "\n".join(
-            CELL_SEP.join(" ".join(t for _k, t in sorted(cells.get((r, c), ())))
-                          for c in range(ncols))
+            CELL_SEP.join(joined.get((r, c), "") for c in range(ncols))
             for r in range(nrows))
         out.append(((ax0, ay0, ax1, ay1), text))
     return out
@@ -192,17 +193,19 @@ def pdf_layout_items(pdf_elements: DataFrame) -> DataFrame:
     (word rebuild, sweep-line cells, spanning grid, frozen validity
     tree), every other page with graphics runs the ruled-grid path;
     both finish inside the one routed kernel.  On a mixed corpus both
-    engines therefore select identically per page — a global mode switch would silently
-    diverge (ignore Char rows, or drop char-less ruled pages).
+    engines therefore select identically per page — a global mode
+    switch would silently diverge (ignore Char rows, or drop char-less
+    ruled pages).
     (extract(table_mode='chars') only asks the blob parser for Char
     rows; it does not switch the layout path.)
     """
     from pyspark import StorageLevel
 
-    # five consumers below (text lines, table kernel, size_cuts, images,
-    # parse errors) would each rescan the parquet source; one narrow projection is
-    # persisted instead — five low-utilization scan stages collapse
-    # into one (MEMORY_AND_DISK: spills, never fails, per-job lifetime)
+    # five consumers below (text lines, table kernel, size_cuts,
+    # images, parse errors) would each rescan the parquet source; one
+    # narrow projection is persisted instead — five low-utilization
+    # scan stages collapse into one (MEMORY_AND_DISK: spills, never
+    # fails, per-job lifetime)
     el = pdf_elements.select(
         "doc_id", "p_num", "boxnum", "linenum", "type", "x0", "y0",
         "x1", "y1", "rawtext", "font_size", "mean_char_orientation",

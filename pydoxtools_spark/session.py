@@ -54,9 +54,8 @@ def width(spark: SparkSession) -> int:
 
 # Entries of the JVM-wide generated-class cache (Spark's default: 100;
 # a static conf, so it is set here, at session build).  A warm extract
-# pass generates ~130 classes (~210 before its kernels were fused), so
-# at 100 every pass evicted its own classes and recompiled them in
-# Janino, and the JIT then spent 4-5 CPU-s a pass on 4 cores.  The 83
+# pass generates ~130 classes, so at 100 every pass evicted its own
+# classes and recompiled them in Janino (CLAUDE.md trap 22).  The 83
 # driver queries generate ~990 more (sf0.001); the cache holds both.
 CODEGEN_CACHE_ENTRIES = 2048
 
