@@ -296,10 +296,9 @@ def q_pdf_images(spark: SparkSession, sf_dir: str) -> DataFrame:
     stream bytes, and media_features must really decode BOTH subsets
     (width/height/mean luminance/n_bytes) — the oracle recomputes
     everything from the generating parameters."""
-    from pyspark import StorageLevel
-
     from pydoxtools_spark.operators.multimodal import media_features
     from pydoxtools_spark.pipeline import parse_pdf_blobs, pdf_media_blobs
+    from pydoxtools_spark.session import pin
 
     def pdf_blob(doc_id):
         from pydoxtools_spark.functions.pdfparse import build_tiny_pdf
@@ -338,10 +337,10 @@ def q_pdf_images(spark: SparkSession, sf_dir: str) -> DataFrame:
         return (str(i), build_tiny_pdf(pages, compress=True, use_tj=True))
 
     # TWO python kernels consume the generated blobs (element parse +
-    # image-stream extraction); without a persist each consumer re-runs
+    # image-stream extraction); without a pin each consumer re-runs
     # the generation kernel (r7)
-    blobs = _per_doc(_docs(spark, sf_dir).select("doc_id"), pdf_blob,
-                     _BLOBS).persist(StorageLevel.MEMORY_AND_DISK)
+    blobs = pin(_per_doc(_docs(spark, sf_dir).select("doc_id"), pdf_blob,
+                         _BLOBS))
     els = parse_pdf_blobs(blobs).filter(F.col("type") == "Image").select(
         "media_ref", F.round("x0", 4).alias("x0"),
         F.round("y0", 4).alias("y0"), F.round("x1", 4).alias("x1"),
@@ -1531,6 +1530,7 @@ def q_textrank_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
     The DuckDB twin unrolls the identical chain; a sentinel-replace
     split emulates the lookbehind RE2 lacks."""
     from pydoxtools_spark.operators.similarity import textrank_sentences
+    from pydoxtools_spark.session import width
 
     # even-doc subset: the chain's cost is row volume x 6 checkpointed
     # pagerank rounds; half the docs keeps the full operator exercised
@@ -1541,7 +1541,7 @@ def q_textrank_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
     # reason the pdf queries repartition before blob generation;
     # r7 stage audit: 1.8 s single-task CPU here at sf0.1)
     d = _docs(spark, sf_dir).filter(F.col("doc_id") % 2 == 0).repartition(
-        32).select(
+        width(spark)).select(
         "doc_id",
         F.regexp_replace(
             F.trim("text"), r"((\S+\s+){7}\S+)\s+", "$1. "

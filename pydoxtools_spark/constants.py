@@ -190,7 +190,8 @@ GIANT_DOC_QUANTILE = 0.99
 DEFAULT_SHUFFLE_PARTITIONS = 32
 
 # ---------------------------------------------------------------- budgets
-# Output cap of one decoded PDF stream: a Flate bomb (199 KiB -> 200 MiB)
-# becomes a typed pdf_parse_error row instead of an OOM'd python worker.
-# 64 MiB is far above any content stream and a 20-megapixel RGB image.
+# Output cap of one inflated PDF stream, PNG IDAT or gzip WARC segment: a
+# Flate bomb (199 KiB -> 200 MiB) becomes a typed error row instead of an
+# OOM'd python worker.  64 MiB is far above any content stream and a
+# 20-megapixel RGB image; a larger WARC segment must be pre-split.
 MAX_INFLATE_BYTES = 64 * 1024 * 1024

@@ -84,19 +84,6 @@ def _union_find_cluster(connect: np.ndarray) -> np.ndarray:
     return np.array([find(i) for i in range(n)])
 
 
-def _pairwise_gap_distance(boxes: np.ndarray) -> np.ndarray:
-    """Chebyshev gap distance between bboxes (negative -> overlap treated
-    as 0).  boxes: (n,4) [x0,y0,x1,y1]."""
-    x0, y0, x1, y1 = boxes[:, 0], boxes[:, 1], boxes[:, 2], boxes[:, 3]
-    dx = np.maximum(
-        np.maximum(x0[:, None], x0[None, :]) - np.minimum(x1[:, None], x1[None, :]), 0.0
-    )
-    dy = np.maximum(
-        np.maximum(y0[:, None], y0[None, :]) - np.minimum(y1[:, None], y1[None, :]), 0.0
-    )
-    return np.maximum(dx, dy)
-
-
 def _axis_gap(boxes: np.ndarray, axis: int) -> np.ndarray:
     """Pairwise gap along one axis, clipped at 0 (reference
     pairwise_box_gap_distance_along_axis_func, cluster_utils.py:154-191:

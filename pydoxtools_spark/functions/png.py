@@ -27,6 +27,7 @@ import zlib
 
 import numpy as np
 
+from ..constants import MAX_INFLATE_BYTES
 from .media import MediaDecodeError
 
 _SIG = b"\x89PNG\r\n\x1a\n"
@@ -112,14 +113,19 @@ def parse_png(data: bytes) -> tuple[int, int, np.ndarray]:
         raise MediaDecodeError("no IDAT")
     w, h, ctype = ihdr
     nch = _CHANNELS[ctype]
+    stride = w * nch
+    # inflate only the scanline bytes the IHDR asks for: whatever the
+    # stream holds past them (a padding bomb) is never decoded (a
+    # max_length of 0 would mean "no limit", hence the `or 1`)
+    need = h * (stride + 1)
     try:
-        raw = zlib.decompress(bytes(idat))
+        raw = zlib.decompressobj().decompress(
+            bytes(idat), min(need, MAX_INFLATE_BYTES) or 1)
     except zlib.error as e:
         raise MediaDecodeError(f"PNG IDAT inflate failed: {e}")
-    stride = w * nch
-    if len(raw) < h * (stride + 1):
+    if len(raw) < need:
         raise MediaDecodeError("PNG scanline data short")
-    rows = np.frombuffer(raw[:h * (stride + 1)], dtype=np.uint8)
+    rows = np.frombuffer(raw[:need], dtype=np.uint8)
     rows = rows.reshape(h, stride + 1)
     out = _unfilter(rows, nch)
 

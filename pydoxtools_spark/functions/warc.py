@@ -31,21 +31,29 @@ from __future__ import annotations
 
 import zlib
 
+from ..constants import MAX_INFLATE_BYTES
+
 
 class WarcError(ValueError):
     """Malformed WARC framing (caller contains it per file)."""
 
 
 def _gunzip_members(data: bytes) -> bytes:
-    """Concatenated gzip members -> concatenated payloads."""
+    """Concatenated gzip members -> concatenated payloads, at most
+    MAX_INFLATE_BYTES in total (WarcError past it: a gzip bomb is a
+    contained error row, not an OOM'd worker)."""
     out = bytearray()
     pos = 0
     while pos < len(data):
         d = zlib.decompressobj(wbits=31)
+        room = MAX_INFLATE_BYTES - len(out)
         try:
-            out += d.decompress(data[pos:])
+            out += d.decompress(data[pos:], room + 1)
         except zlib.error as ex:
             raise WarcError(f"bad gzip member at {pos}: {ex}") from ex
+        if len(out) > MAX_INFLATE_BYTES:
+            raise WarcError(
+                f"gzip output exceeds {MAX_INFLATE_BYTES} bytes")
         if not d.eof:
             raise WarcError("truncated gzip member")
         consumed = len(data) - pos - len(d.unused_data)

@@ -1,42 +1,17 @@
 """DocumentBag-equivalent relational operators (SURVEY.md §2.7).
 
 The reference distributes documents as dask bags; each bag primitive
-maps to a stock DataFrame operation — listed here as thin, named
-functions so the operator inventory is explicit and testable
+maps to a stock DataFrame operation.  Map, filter, property projection
+and generalized apply ARE that operation (withColumns, filter, select,
+fn(df)); the two with a shape of their own are kept here
 (citations: /root/reference/pydoxtools/dask_operators.py:16-173,
 document.py:1277-1371, 1509-1511).
 """
 
 from __future__ import annotations
 
-from collections.abc import Callable
-
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-
-
-def bag_map(df: DataFrame, **named_cols: Column) -> DataFrame:
-    """BagMapOperator (dask_operators.py:16-24): row-wise derivation ->
-    withColumns (Catalyst expression, not bag.map)."""
-    return df.withColumns(dict(named_cols))
-
-
-def bag_filter(df: DataFrame, predicate: Column) -> DataFrame:
-    """BagFilterOperator (dask_operators.py:27-36)."""
-    return df.filter(predicate)
-
-
-def get_dicts(df: DataFrame, *cols: str) -> DataFrame:
-    """BagPropertyExtractor / get_dicts (dask_operators.py:39-78):
-    projection of named pipeline outputs.  Errors surface as columns,
-    not exceptions (forgiving mode)."""
-    return df.select(*cols)
-
-
-def bag_apply(df: DataFrame, fn: Callable[[DataFrame], DataFrame]) -> DataFrame:
-    """DocumentBagMap (dask_operators.py:121-173): generalized
-    transformation keeping lineage columns."""
-    return fn(df)
 
 
 def exploded(df: DataFrame, list_col: str, keep: list[str] | None = None) -> DataFrame:

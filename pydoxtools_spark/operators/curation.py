@@ -13,6 +13,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from ..session import pin
+
 # Patterns are written to the common Java-regex/RE2 subset (no
 # backreferences, no lookaround) so the DuckDB twin matches bit-exactly.
 PII_PATTERNS: list[tuple[str, str]] = [
@@ -353,11 +355,9 @@ def unigram_logprob(
     word, however often "the" repeats) and AQE skew-split handles the
     rest.  `total` rides along as a 1-row broadcast cross join, not a
     driver collect.  The (doc, word) pair table feeds three consumers
-    (scoring join, vocab agg, total agg) — persisted so the explode +
+    (scoring join, vocab agg, total agg) — pinned so the explode +
     pair-agg subtree runs once, not three times (plan-audited: the
-    unpersisted form carried three full scans)."""
-    from pyspark import StorageLevel
-
+    unpinned form carried three full scans)."""
     words = df.select(
         F.col(id_col).alias("id"),
         F.explode(
@@ -368,8 +368,7 @@ def unigram_logprob(
             )
         ).alias("w"),
     ).filter(F.col("w") != "")
-    pairs = words.groupBy("id", "w").agg(F.count("*").alias("k")).persist(
-        StorageLevel.MEMORY_AND_DISK)
+    pairs = pin(words.groupBy("id", "w").agg(F.count("*").alias("k")))
     vocab = pairs.groupBy("w").agg(F.sum("k").alias("cnt"))
     total = pairs.agg(F.sum("k").alias("total"))
     scored = pairs.join(vocab, "w").groupBy("id").agg(

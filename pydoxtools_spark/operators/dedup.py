@@ -39,7 +39,7 @@ from ..constants import (
     SIMHASH_BITS,
 )
 from ..kernels import map_rows
-from ..session import checkpoint, width
+from ..session import checkpoint, pin, width
 
 
 def _norm(col: Column) -> Column:
@@ -614,28 +614,27 @@ def drop_duplicated_windows(
     sorted collect_list as drop_repeated_lines.  Unlike the detection
     op (whose double compute is cheaper than caching), this one fans
     the token and hash streams out to FIVE consumers — plan-audited at
-    8 source scans unpersisted — so both narrow streams are persisted
-    (MEMORY_AND_DISK: a corpus-rewriting op already pays corpus-sized
-    I/O; one cached copy beats 8 re-derivations).
+    8 source scans unpinned — so both narrow streams are pinned
+    (session.pin: a corpus-rewriting op already pays corpus-sized I/O;
+    one materialized copy beats 8 re-derivations).
     """
-    from pyspark import StorageLevel
     from pyspark.sql import Window
 
-    w = docs.select(
+    w = pin(docs.select(
         F.col(id_col).alias("id"),
         F.split(_norm(F.col(text_col)), " ").alias("w"),
-    ).persist(StorageLevel.MEMORY_AND_DISK)
+    ))
     long_enough = w.filter(F.size("w") >= n)
     pos = long_enough.select(
         "id", "w",
         F.posexplode(F.sequence(F.lit(1), F.size("w") - (n - 1))).alias(
             "_p", "s"),
     )
-    hashed = pos.select(
+    hashed = pin(pos.select(
         "id", "s",
         F.md5(F.array_join(F.slice(F.col("w"), F.col("s"), n), " ")).alias(
             "h"),
-    ).persist(StorageLevel.MEMORY_AND_DISK)
+    ))
     per_doc = hashed.select("h", "id").distinct()
     counts = per_doc.groupBy("h").agg(
         F.count("*").alias("n_docs"), F.min("id").alias("canonical"))

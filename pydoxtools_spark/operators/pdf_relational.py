@@ -50,6 +50,7 @@ from ..constants import (
 )
 from ..functions.spantext import CELL_SEP
 from ..kernels import walk_runs
+from ..session import pin
 
 # the routed kernels' group: one (doc, page bucket) per kernel call
 _BUCKET = ("doc_id", "page_bucket")
@@ -198,19 +199,22 @@ def pdf_layout_items(pdf_elements: DataFrame) -> DataFrame:
     ruled pages).
     (extract(table_mode='chars') only asks the blob parser for Char
     rows; it does not switch the layout path.)
-    """
-    from pyspark import StorageLevel
 
+    Two tables have several consumers and are pinned (session.pin):
+    the narrow element projection and the routed kernel's output.  A
+    pin is new on every call, so a later call over a grown input
+    re-reads it; under AQE, constructing this plan runs the stages
+    below any exchange in the input (CLAUDE.md trap 23).
+    """
     # five consumers below (text lines, table kernel, size_cuts,
     # images, parse errors) would each rescan the parquet source; one
-    # narrow projection is persisted instead — five low-utilization
-    # scan stages collapse into one (MEMORY_AND_DISK: spills, never
-    # fails, per-job lifetime)
-    el = pdf_elements.select(
+    # narrow projection is pinned instead — five low-utilization scan
+    # stages collapse into one
+    el = pin(pdf_elements.select(
         "doc_id", "p_num", "boxnum", "linenum", "type", "x0", "y0",
         "x1", "y1", "rawtext", "font_size", "mean_char_orientation",
         "media_ref",
-    ).persist(StorageLevel.MEMORY_AND_DISK)
+    ))
 
     # ---------------- text lines (vertical + empty excluded)
     is_line = (
@@ -238,7 +242,7 @@ def pdf_layout_items(pdf_elements: DataFrame) -> DataFrame:
     # Graphic + Char + text-line rows decides per page (inside the
     # kernel, mirroring the oracle) between the chars pipeline and the
     # ruled grid, and finishes the tables of both — no routing joins,
-    # no cell aggregation; the output is persisted because it feeds the
+    # no cell aggregation; the output is pinned because it feeds the
     # table items AND the covered-box anti-join.
     gc = el.filter(F.col("type").isin("Graphic", "Char") | is_line).select(
         "doc_id", "p_num", "type", "x0", "y0", "x1", "y1", "rawtext",
@@ -253,7 +257,7 @@ def pdf_layout_items(pdf_elements: DataFrame) -> DataFrame:
     # of groupBy.applyInPandas — identical per-group inputs without the
     # ~18 ms/group pandas fixed cost (88 vs ~8 task-seconds on the
     # 5000-doc sf0.1 chars corpus).
-    routed = walk_runs(gc, _BUCKET, _page_router_kernel, ROUTED).persist()
+    routed = pin(walk_runs(gc, _BUCKET, _page_router_kernel, ROUTED))
     tables = routed.select(
         F.col("doc_id").alias("ref"),
         "p_num",

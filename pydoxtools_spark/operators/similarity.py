@@ -418,7 +418,7 @@ def pagerank(
         .withColumn("dang", F.col("_out").isNull())
         .drop("_out")
     )
-    # One cheap isEmpty probe on the persisted inputs decides whether
+    # One cheap isEmpty probe on the pinned inputs decides whether
     # the per-round dangling aggregation exists at all — graphs built
     # by doc_knn_edges may have none, and dropping the extra stages per
     # round roughly halves the per-iteration fixed cost.
@@ -526,16 +526,14 @@ def textrank_keywords(
     order identically on every engine regardless of float summation
     order.  Pass `edges` to rank an externally built graph (e.g.
     knn_graph_lsh output joined back to docs)."""
-    from pyspark import StorageLevel
-
     # tokens fan out to three consumers (edge build, node set, label
     # join) — when they carry an expensive upstream (the sentence
-    # hash-embedding chain), each materialization re-runs it; persist
-    # the narrow projection once.
-    tokens = tokens.select(
+    # hash-embedding chain), each materialization re-runs it; pin the
+    # narrow projection once.
+    tokens = pin(tokens.select(
         doc_col, id_col, label_col,
         *([vec_col] if vec_col in tokens.columns else []),
-    ).persist(StorageLevel.MEMORY_AND_DISK)
+    ))
     if edges is None:
         edges = doc_knn_edges(tokens, k=k, max_dist=max_dist,
                               doc_col=doc_col, id_col=id_col, vec_col=vec_col)
@@ -583,8 +581,6 @@ def textrank_sentences(
     pagerank -> top_k by round(rank,6) with sent_idx tie-break ->
     re-sorted by position.  Every stage is an existing oracle-checked
     operator; scale properties are theirs."""
-    from pyspark import StorageLevel
-
     # consumed by the embedding chain AND the final document-order join
     sents = df.select(
         F.col(id_col).alias("doc_id"),
@@ -594,7 +590,7 @@ def textrank_sentences(
     ).filter(F.length(F.trim("sentence")) > 0)
     # The sentence split + explode runs BEFORE the first exchange, so
     # its parallelism is the input scan's — a single-file doc table
-    # materializes the persist in ONE task (r7 stage audit: 1.8 s
+    # materializes the pin in ONE task (r7 stage audit: 1.8 s
     # single-task CPU at sf0.1).  `min_parallelism` opts into a
     # repartition of the narrow sentence rows; it stays None by default
     # because an already-wide corpus (the 100 TB case) must not pay a
@@ -603,7 +599,7 @@ def textrank_sentences(
     # upstream AQE stages (the package keeps construction action-free).
     if min_parallelism:
         sents = sents.repartition(min_parallelism)
-    sents = sents.persist(StorageLevel.MEMORY_AND_DISK)
+    sents = pin(sents)
     # unique token id per (doc, sentence) for the embedding helper
     emb = hash_embeddings(
         sents.select(

@@ -73,6 +73,7 @@ from .constants import (
 from .dispatch import TYPE_MARKDOWN, TYPE_MEDIAWIKI
 from .functions.spantext import sql_paragraphs
 from .kernels import error_text, map_rows
+from .session import pin
 
 # mid-pipeline row shape: one output span + its reading-order sort keys
 _OUT_SPAN = StructType(
@@ -475,9 +476,9 @@ def extract(
     defaultParallelism."""
     # Statically-absent PDF input -> the pdf branch is skipped outright
     # (r7).  With the old empty-DataFrame default the branch still built
-    # the FULL pdf_layout_items machinery over zero rows — its persist()
-    # calls wrap the empties in InMemoryRelations that
-    # PropagateEmptyRelation cannot see through, so every no-PDF
+    # the FULL pdf_layout_items machinery over zero rows — its pins
+    # wrap the empties in plan leaves that PropagateEmptyRelation
+    # cannot see through, so every no-PDF
     # extract() planned and ran ~60 empty operators, ~10 empty
     # exchanges and an empty python router-kernel stage (plan-audited
     # on q_docx_spans).  Output is identical: pdf_ref/pdf_bytes spans
@@ -834,14 +835,14 @@ def ingest_blobs(spark: SparkSession, blobs: DataFrame,
     the Arrow probe kernel, and only their (ref, kind) pairs join
     back, so the corpus-sized binary column never re-shuffles.
 
-    The routed (ref, content, in_kind) frame is cached
-    (MEMORY_AND_DISK): the three returned outputs feed 4-5 extract()
-    branches, and WITHOUT the cache every branch re-scans and re-probes
-    the raw source — 29.3 -> 22.3 s on the 3000-file mixed-directory
-    bench (BASELINE.md).  It is returned as "routed": release it with
-    `parts["routed"].unpersist()` once the consuming extract() has
-    materialized.  At cluster scale prefer materializing the routed
-    frame to parquet once and running extract() from that (the
+    The routed (ref, content, in_kind) frame is pinned (session.pin):
+    the three returned outputs feed 4-5 extract() branches, and
+    without it every branch re-scans and re-probes the raw source —
+    29.3 -> 22.3 s on the 3000-file mixed-directory bench (BASELINE.md).
+    The pin is new on every call (a second call over a grown directory
+    sees the new files) and is freed once the outputs are unreachable;
+    nothing needs releasing.  At cluster scale prefer materializing the
+    routed frame to parquet once and running extract() from that (the
     spark-submit job's two-step shape)."""
     from .dispatch import TYPE_HTML, doc_type_col
 
@@ -894,7 +895,7 @@ def ingest_blobs(spark: SparkSession, blobs: DataFrame,
     zips = b.filter(F.col("in_kind") == "_zip")
     zip_kinds = map_rows(zips.select("ref", "content"), probe_zip,
                          "ref string, zip_kind string")
-    routed = b.filter(F.col("in_kind") != "_zip").unionByName(
+    routed = pin(b.filter(F.col("in_kind") != "_zip").unionByName(
         # only the zip SUBSET joins its probe results — the rest of the
         # corpus-sized binary column never enters a shuffle
         zips.join(zip_kinds, "ref").select(
@@ -903,10 +904,7 @@ def ingest_blobs(spark: SparkSession, blobs: DataFrame,
             # zip archive — binary, not latin-1-decodable text
             F.col("zip_kind").alias("in_kind"),
         )
-    )
-    from pyspark import StorageLevel
-
-    routed = routed.persist(StorageLevel.MEMORY_AND_DISK)
+    ))
 
     # 'binary' is deliberately NOT in _KNOWN_IN_KINDS: those spans
     # fall through to _unknown_kind_branch's contained error row
@@ -934,10 +932,6 @@ def ingest_blobs(spark: SparkSession, blobs: DataFrame,
             F.lit(0).alias("offset"),
         )).alias("spans"),
     )
-    # "routed" is returned so long-lived sessions can release the
-    # cache (routed.unpersist()) once the consuming extract() has
-    # materialized — without a handle, repeated ingest_blobs calls
-    # accumulate blob-sized cached frames (r5 advisor finding)
     return {
         "documents_in": textual_docs.unionByName(binary_docs),
         "pdf_blobs": routed.filter(
@@ -945,7 +939,6 @@ def ingest_blobs(spark: SparkSession, blobs: DataFrame,
         "doc_blobs": routed.filter(
             F.col("in_kind").isin(*_CONTAINER_IN_KINDS)).select(
                 "ref", "content"),
-        "routed": routed,
     }
 
 

@@ -5,12 +5,13 @@ sandbox we run local[N].  All settings that matter at 100 TB — AQE,
 Arrow batching, shuffle sizing, skew-join splitting — are on by default.
 
 Materialization policy: `checkpoint` and `pin` are the engine's only
-lineage-truncating materializers.  The session's checkpoint directory
-decides the mode — set it (`sparkContext.setCheckpointDir`) for
-loss-safe execution, where materialized tables live on reliable
-storage and survive executor loss; leave it unset for the single-job
-form, where an executor loss restarts the job (the committed snapshot
-of run_resumable is the resume point either way).
+materializers (no persist()/cache() anywhere else).  The session's
+checkpoint directory decides the mode — set it
+(`sparkContext.setCheckpointDir`) for loss-safe execution, where
+materialized tables live on reliable storage and survive executor
+loss; leave it unset for the single-job form, where an executor loss
+restarts the job (the committed snapshot of run_resumable is the
+resume point either way).
 """
 
 from __future__ import annotations
@@ -35,15 +36,24 @@ def checkpoint(df: DataFrame) -> DataFrame:
 
 
 def pin(df: DataFrame) -> DataFrame:
-    """Pin a table that every round of an iterative loop re-reads.
-    Single-job mode uses a LAZY localCheckpoint rather than persist():
-    both cache the rows, but the checkpoint also truncates the lineage,
-    so each round's plan carries (and Catalyst re-analyzes) an RDD leaf
-    instead of the whole upstream subtree — measured ~1.5-2 s off a
-    cold sf0.1 textrank_summary.  Loss-safe mode keeps persist(): the
-    lineage must stay recomputable for executor-loss recovery."""
+    """Materialize a table with several consumers (a fan-out, or the
+    rounds of an iterative loop) so its plan runs once.  The engine's
+    only cache: no operator calls persist()/cache().
+
+    Single-job mode: a LAZY localCheckpoint — the rows are computed and
+    kept by the first action that reads them, and the lineage is cut,
+    so every consumer's plan carries an RDD leaf instead of the whole
+    upstream subtree (measured ~1.5-2 s off a cold sf0.1
+    textrank_summary).  Loss-safe mode: `checkpoint` (eager, reliable
+    storage).  Neither form registers a CacheManager entry: the leaf is
+    new on each call, so no later read of the same input path can
+    plan-match it and be served the earlier call's rows (a persist()
+    did exactly that, CLAUDE.md trap 23), and Spark's ContextCleaner
+    frees the blocks once the frame is unreachable.  Under AQE the
+    lazy form still runs the stages below the plan's exchanges when
+    pin() is called; the action then does that much less."""
     if _reliable(df):
-        return df.persist()
+        return checkpoint(df)
     return df.localCheckpoint(eager=False)
 
 
@@ -84,6 +94,13 @@ def get_spark(
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.codegen.cache.maxEntries",
                 str(CODEGEN_CACHE_ENTRIES))
+        # The cache is keyed by the generated source, and by default the
+        # class name carries the whole-stage codegen stage id, which
+        # varies between runs of one plan under AQE: a repeated
+        # identical extract write recompiled 20-36 classes whenever the
+        # ids moved (CLAUDE.md trap 22).  Off, the same stage compiles
+        # once.
+        .config("spark.sql.codegen.useIdInClassName", "false")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "2048")
         .config("spark.sql.files.maxPartitionBytes", "134217728")

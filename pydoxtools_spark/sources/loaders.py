@@ -229,24 +229,6 @@ def query_vector_sink(spark: SparkSession, path: str, queries: DataFrame,
              "document", "metadata")
 
 
-# ------------------------------------------------------------------ sinks
-
-
-def to_json_sink(df: DataFrame, path: str, mode: str = "overwrite") -> None:
-    """to_json/to_dict sink (document_base.py:413-494): line-delimited
-    JSON, partition-parallel."""
-    df.write.mode(mode).json(path)
-
-
-def to_parquet_sink(df: DataFrame, path: str, mode: str = "overwrite") -> None:
-    df.write.mode(mode).parquet(path)
-
-
-def to_csv_sink(df: DataFrame, path: str, mode: str = "overwrite") -> None:
-    """to_dataframe-style tabular export."""
-    df.write.mode(mode).option("header", "true").csv(path)
-
-
 def warc_records(blobs: DataFrame, ref_col: str = "path",
                  content_col: str = "content") -> DataFrame:
     """(ref, content) WARC segment blobs -> one row per record:

@@ -84,6 +84,42 @@ def test_incremental_streaming_facade(spark, tmp_path):
     assert spark.read.parquet(f"{out_dir}/extracted").count() == 4
 
 
+def test_replayed_stream_batch_commits_each_doc_once(spark, tmp_path):
+    """A crash between foreachBatch's write and the streaming commit
+    log (commits/0 deleted) replays batch 0 on restart; the replay
+    finds its run already committed, so each doc is committed once.
+    The streamed output is the batch snapshot set: read_extracted sees
+    it and a later run_resumable has nothing to do."""
+    import os
+
+    from pydoxtools_spark.pipeline import read_extracted, run_resumable
+    from pydoxtools_spark.schemas import DOCUMENTS_IN
+    from pydoxtools_spark.streaming.facade import incremental_extract
+
+    in_dir = str(tmp_path / "in")
+    out_dir = str(tmp_path / "out")
+    ckpt = str(tmp_path / "ckpt")
+    rows = [{"doc_id": f"r{i}", "spans": [
+        {"kind": "text", "text": f"x{i}\n\ny{i}", "media_ref": None,
+         "offset": 0}]} for i in range(5)]
+    docs = spark.createDataFrame(rows, schema=DOCUMENTS_IN)
+    docs.write.parquet(in_dir)
+
+    incremental_extract(spark, in_dir, None, out_dir, ckpt,
+                        parallelism=2).awaitTermination(120)
+    for name in ("0", ".0.crc"):
+        os.remove(os.path.join(ckpt, "commits", name))
+    incremental_extract(spark, in_dir, None, out_dir, ckpt,
+                        parallelism=2).awaitTermination(120)
+
+    got = read_extracted(spark, out_dir)
+    assert sorted(r["doc_id"] for r in got.collect()) == [
+        f"r{i}" for i in range(5)]
+    assert spark.read.parquet(f"{out_dir}/extracted").count() == 5
+    r = run_resumable(spark, docs, None, out_dir, parallelism=2)
+    assert r["docs_processed"] == 0
+
+
 def test_decode_ladder_non_utf8(spark):
     """Latin-1 bytes garble under utf-8 -> ladder falls back and
     preserves every byte; clean utf-8 (incl. multibyte) stays utf-8."""

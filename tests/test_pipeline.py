@@ -277,9 +277,7 @@ def test_second_extract_write_hits_codegen_cache(spark, corpus, tmp_path):
     codegen cache holds, so with it every pass recompiled ~200 classes
     in Janino.  session.get_spark sizes the cache to hold a pass: a
     repeated identical write compiles (almost) nothing.  The first
-    write also fills the layout's persisted tables, and later writes
-    plan reads of them instead, so the check compares the two after
-    it."""
+    write fills the cache, so the check compares the two after it."""
     docs_df, pdf_df, _ = corpus
     docs, blobs = _text_html_docx_input(spark)
     compiles = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics \

@@ -139,6 +139,32 @@ def test_containment():
         parse_png(data)
 
 
+def test_idat_padding_bomb_inflates_only_the_scanlines():
+    """A 1x1 PNG whose IDAT stream continues with 256 MiB of deflated
+    zeros decodes to its one pixel: only the h*(w*nch+1) bytes the IHDR
+    asks for are inflated."""
+    import tracemalloc
+
+    c = zlib.compressobj(9)
+    idat = c.compress(b"\x00" + bytes((10, 20, 30)))
+    zeros = bytes(1 << 20)
+    for _ in range(256):
+        idat += c.compress(zeros)
+    idat += c.flush()
+    data = (b"\x89PNG\r\n\x1a\n"
+            + _chunk(b"IHDR", struct.pack(">IIBBBBB", 1, 1, 8, 2, 0, 0, 0))
+            + _chunk(b"IDAT", idat) + _chunk(b"IEND", b""))
+    tracemalloc.start()
+    try:
+        w, h, px = parse_png(data)
+        peak = tracemalloc.get_traced_memory()[1]
+    finally:
+        tracemalloc.stop()
+    assert (w, h) == (1, 1)
+    assert tuple(px[0, 0]) == (10, 20, 30)
+    assert peak < 16 * 1024 * 1024
+
+
 def test_media_features_decodes_png_blobs(spark):
     from pydoxtools_spark.operators.multimodal import media_features
 

@@ -142,7 +142,6 @@ def test_ingest_routes_tiff_blobs_to_binary(spark):
     parts = ingest_blobs(spark, blobs)
     spans = {r["doc_id"]: r["spans"] for r in
              parts["documents_in"].collect()}
-    parts["routed"].unpersist()
     assert [s["kind"] for s in spans["t.tif"]] == ["binary"]
     assert [s["kind"] for s in spans["m.tif"]] == ["binary"]
     assert [s["kind"] for s in spans["a.txt"]] == ["text"]

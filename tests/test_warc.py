@@ -104,6 +104,26 @@ def test_warc_records_spark_exploder(spark):
     assert bad[0]["rec_idx"] is None
 
 
+def test_gzip_bomb_is_one_error_row(spark):
+    """A gzip member inflating past constants.MAX_INFLATE_BYTES raises
+    WarcError, which warc_records contains as one error row."""
+    from pydoxtools_spark.constants import MAX_INFLATE_BYTES
+    from pydoxtools_spark.sources.loaders import warc_records
+
+    c = zlib.compressobj(9, zlib.DEFLATED, 31)
+    zeros = bytes(1 << 20)
+    bomb = b"".join(c.compress(zeros)
+                    for _ in range(MAX_INFLATE_BYTES // len(zeros) + 1))
+    bomb += c.flush()
+    with pytest.raises(WarcError, match="exceeds"):
+        parse_warc(bomb)
+    blobs = spark.createDataFrame([("bomb.warc.gz", bytearray(bomb))],
+                                  "path string, content binary")
+    (row,) = warc_records(blobs).collect()
+    assert "exceeds" in row["error"]
+    assert row["rec_idx"] is None
+
+
 def test_wet_style_segment_through_ingest(spark):
     """The C4/CCNet entry move: WET conversion records -> warc_records
     -> ingest_blobs -> text spans, end to end."""
@@ -123,7 +143,6 @@ def test_wet_style_segment_through_ingest(spark):
     parts = ingest_blobs(spark, docs)
     spans = {r["doc_id"]: r["spans"] for r in
              parts["documents_in"].collect()}
-    parts["routed"].unpersist()
     assert len(spans) == 5
     for i in range(5):
         s = spans[f"http://ex.com/{i}"]

@@ -82,7 +82,6 @@ def test_zip_archive_through_ingest(spark):
     parts = ingest_blobs(spark, docs)
     spans = {r["doc_id"]: r["spans"] for r in
              parts["documents_in"].collect()}
-    parts["routed"].unpersist()
     assert [s["kind"] for s in spans["arc.zip#doc1.txt"]] == ["text"]
     assert spans["arc.zip#doc1.txt"][0]["text"] == "plain body one"
     kinds = {s["kind"] for s in spans["arc.zip#doc2.html"]}
