@@ -29,6 +29,7 @@ import struct
 
 import numpy as np
 
+from ..constants import MAX_INFLATE_BYTES
 from .media import MediaDecodeError
 
 _MAX_CODE = 4096
@@ -228,6 +229,9 @@ def _parse_body(data: bytes) -> tuple[int, int, np.ndarray]:
     pos += 9
     if w < 1 or h < 1:
         raise MediaDecodeError(f"bad GIF dimensions {w}x{h}")
+    if w * h * 3 > MAX_INFLATE_BYTES:  # the RGB frame parse_gif builds
+        raise MediaDecodeError(
+            f"GIF frame {w}x{h} exceeds {MAX_INFLATE_BYTES} decoded bytes")
     pal = gct
     if iflags & 0x80:  # local color table wins
         size = 2 << (iflags & 7)

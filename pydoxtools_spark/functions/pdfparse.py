@@ -996,7 +996,8 @@ def _stream_payload_at(data: bytes, body_start: int) -> tuple[bytes, bytes]:
 def _lzw_decode(data: bytes, early: int = 1) -> bytes:
     """LZWDecode (ISO 32000 §7.4.4 — the TIFF variant): 9..12-bit
     variable-width codes, 256 = clear table, 257 = EOD, EarlyChange
-    (default 1) bumps the width one code early."""
+    (default 1) bumps the width one code early.  PdfBombError past
+    MAX_INFLATE_BYTES of output (one 12-bit code can stand for 4 KiB)."""
     out = bytearray()
     table: dict[int, bytes] = {i: bytes([i]) for i in range(256)}
     next_code, width = 258, 9
@@ -1030,6 +1031,9 @@ def _lzw_decode(data: bytes, early: int = 1) -> bytes:
             else:
                 raise PdfParseError("bad LZW code")
             out += entry
+            if len(out) > MAX_INFLATE_BYTES:
+                raise PdfBombError(
+                    f"LZWDecode output exceeds {MAX_INFLATE_BYTES} bytes")
             prev = entry
             if next_code + early - 1 >= (1 << width) - 1 and width < 12:
                 width += 1

@@ -499,6 +499,56 @@ def decontaminate(
 # ----------------------------------------------- substring-level dedup
 
 
+def _words(docs: DataFrame, text_col: str, id_col: str) -> DataFrame:
+    """(id, w): each doc's whitespace-normalized word array."""
+    return docs.select(
+        F.col(id_col).alias("id"),
+        F.split(_norm(F.col(text_col)), " ").alias("w"),
+    )
+
+
+def _window_hashes(words: DataFrame, n: int) -> DataFrame:
+    """(id, w) -> (id, s, h): the md5 of every n-word window, s its
+    1-based start word, for docs of at least n words."""
+    pos = words.filter(F.size("w") >= n).select(
+        "id", "w",
+        F.posexplode(F.sequence(F.lit(1), F.size("w") - (n - 1))).alias(
+            "_p", "s"),
+    )
+    return pos.select(
+        "id", "s",
+        F.md5(F.array_join(F.slice(F.col("w"), F.col("s"), n), " ")).alias(
+            "h"),
+    )
+
+
+def _merged_runs(windows: DataFrame, n: int) -> DataFrame:
+    """(id, s, ...) n-word windows -> (id, start_word, end_word): the
+    maximal word intervals they cover per doc.  Overlapping and
+    ADJACENT windows merge — a per-doc prefix-max window, one shuffle
+    on id."""
+    from pyspark.sql import Window
+
+    prev = (
+        Window.partitionBy("id").orderBy("s")
+        .rowsBetween(Window.unboundedPreceding, -1)
+    )
+    run = (
+        Window.partitionBy("id").orderBy("s")
+        .rowsBetween(Window.unboundedPreceding, 0)
+    )
+    iv = windows.select(
+        "id", "s", (F.col("s") + (n - 1)).alias("e")
+    ).withColumn("pmax", F.max("e").over(prev)).withColumn(
+        "brk",
+        F.when(
+            F.col("pmax").isNull() | (F.col("s") > F.col("pmax") + 1), 1
+        ).otherwise(0),
+    ).withColumn("grp", F.sum("brk").over(run))
+    return iv.groupBy("id", "grp").agg(
+        F.min("s").alias("start_word"), F.max("e").alias("end_word"))
+
+
 def duplicated_window_spans(
     docs: DataFrame,
     n: int = 50,
@@ -537,50 +587,16 @@ def duplicated_window_spans(
     checkpointed rows are ~40 B each, the same order as the shuffle
     blocks the aggregation writes anyway).
     """
-    w = docs.select(
-        F.col(id_col).alias("id"),
-        F.split(_norm(F.col(text_col)), " ").alias("w"),
-    ).filter(F.size("w") >= n)
-    pos = w.select(
-        "id", "w",
-        F.posexplode(F.sequence(F.lit(1), F.size("w") - (n - 1))).alias(
-            "_p", "s"),
-    )
-    hashed = checkpoint(pos.select(
-        "id", "s",
-        F.md5(F.array_join(F.slice(F.col("w"), F.col("s"), n), " ")).alias(
-            "h"),
-    ))
+    hashed = checkpoint(_window_hashes(_words(docs, text_col, id_col), n))
     flagged = (
         hashed.select("h", "id").distinct()
         .groupBy("h").agg(F.count("*").alias("n_docs"))
         .filter(F.col("n_docs") >= min_docs)
         .select("h")
     )
-    hits = hashed.join(flagged, "h", "semi").select(
-        "id", F.col("s"), (F.col("s") + (n - 1)).alias("e"))
-
-    from pyspark.sql import Window
-
-    prev = (
-        Window.partitionBy("id").orderBy("s")
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    run = (
-        Window.partitionBy("id").orderBy("s")
-        .rowsBetween(Window.unboundedPreceding, 0)
-    )
-    iv = hits.withColumn("pmax", F.max("e").over(prev)).withColumn(
-        "brk",
-        F.when(
-            F.col("pmax").isNull() | (F.col("s") > F.col("pmax") + 1), 1
-        ).otherwise(0),
-    ).withColumn("grp", F.sum("brk").over(run))
-    return (
-        iv.groupBy("id", "grp")
-        .agg(F.min("s").alias("start_word"), F.max("e").alias("end_word"))
-        .select(F.col("id").alias(id_col), "start_word", "end_word")
-    )
+    hits = hashed.join(flagged, "h", "semi")
+    return _merged_runs(hits, n).select(
+        F.col("id").alias(id_col), "start_word", "end_word")
 
 
 def drop_duplicated_windows(
@@ -618,54 +634,23 @@ def drop_duplicated_windows(
     (session.pin: a corpus-rewriting op already pays corpus-sized I/O;
     one materialized copy beats 8 re-derivations).
     """
-    from pyspark.sql import Window
-
-    w = pin(docs.select(
-        F.col(id_col).alias("id"),
-        F.split(_norm(F.col(text_col)), " ").alias("w"),
-    ))
-    long_enough = w.filter(F.size("w") >= n)
-    pos = long_enough.select(
-        "id", "w",
-        F.posexplode(F.sequence(F.lit(1), F.size("w") - (n - 1))).alias(
-            "_p", "s"),
-    )
-    hashed = pin(pos.select(
-        "id", "s",
-        F.md5(F.array_join(F.slice(F.col("w"), F.col("s"), n), " ")).alias(
-            "h"),
-    ))
+    w = pin(_words(docs, text_col, id_col))
+    hashed = pin(_window_hashes(w, n))
     per_doc = hashed.select("h", "id").distinct()
     counts = per_doc.groupBy("h").agg(
         F.count("*").alias("n_docs"), F.min("id").alias("canonical"))
     flagged = counts.filter(F.col("n_docs") >= min_docs)
     # non-canonical occurrences only
     cuts = hashed.join(flagged.select("h", "canonical"), "h").filter(
-        F.col("id") != F.col("canonical")
-    ).select("id", F.col("s"), (F.col("s") + (n - 1)).alias("e"))
-
-    prev = (
-        Window.partitionBy("id").orderBy("s")
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    run = (
-        Window.partitionBy("id").orderBy("s")
-        .rowsBetween(Window.unboundedPreceding, 0)
-    )
-    iv = cuts.withColumn("pmax", F.max("e").over(prev)).withColumn(
-        "brk",
-        F.when(
-            F.col("pmax").isNull() | (F.col("s") > F.col("pmax") + 1), 1
-        ).otherwise(0),
-    ).withColumn("grp", F.sum("brk").over(run))
-    merged = iv.groupBy("id", "grp").agg(
-        F.min("s").alias("cs"), F.max("e").alias("ce"))
+        F.col("id") != F.col("canonical"))
+    merged = _merged_runs(cuts, n)
 
     words = w.select(
         "id", F.posexplode("w").alias("p0", "word")
     ).select("id", (F.col("p0") + 1).alias("p"), "word")
     hit = words.join(merged, "id").filter(
-        (F.col("p") >= F.col("cs")) & (F.col("p") <= F.col("ce"))
+        (F.col("p") >= F.col("start_word"))
+        & (F.col("p") <= F.col("end_word"))
     ).select("id", "p").distinct()
     kept = words.join(hit, ["id", "p"], "left_anti")
     rebuilt = kept.groupBy("id").agg(

@@ -39,8 +39,10 @@ Scale properties (SURVEY.md §4):
 
 from __future__ import annotations
 
+import glob
 import json as _json
 import os as _os
+import shutil
 import time
 import uuid
 
@@ -582,7 +584,7 @@ def extract(
 
 def _run_counters() -> list[F.Column]:
     """The run-level counters, as aggregate columns over extracted
-    rows: the run's Observation and its per-partition metrics rows
+    rows: the run's Observation and read_metrics' per-partition rows
     both aggregate these."""
     return [
         F.count(F.lit(1)).alias("docs_processed"),
@@ -595,36 +597,40 @@ def _run_counters() -> list[F.Column]:
 # ------------------------------------------------------------ resumable
 
 
-def list_snapshots(out_dir: str) -> list[str]:
-    """Committed run directories, from the `_snapshots/*.json` markers.
-    Only manifested directories participate in the resume anti-join and
-    in read_extracted — unmanifested (crashed-mid-write) run dirs are
-    invisible, exactly like an uncommitted Iceberg snapshot."""
-    import glob
-    import json as _json
+def _read_marker(path: str) -> dict | None:
+    """A `_snapshots/<run_id>.json` marker, or None when it is absent or
+    torn (unparseable, or naming no run dir): an uncommitted run."""
+    try:
+        with open(path) as fh:
+            marker = _json.load(fh)
+    except (OSError, ValueError):
+        return None
+    return marker if isinstance(marker, dict) and "path" in marker else None
 
-    paths = []
-    for m in sorted(glob.glob(f"{out_dir}/_snapshots/*.json")):
-        try:
-            with open(m) as fh:
-                paths.append(_json.load(fh)["path"])
-        except (OSError, ValueError, KeyError):
-            continue  # torn marker: treat as uncommitted
-    return paths
+
+def _markers(out_dir: str) -> list[dict]:
+    """The committed runs' markers, in run_id order."""
+    paths = sorted(glob.glob(f"{out_dir}/_snapshots/*.json"))
+    return [m for m in map(_read_marker, paths) if m is not None]
+
+
+def list_snapshots(out_dir: str) -> list[str]:
+    """Committed run directories, from the `_snapshots/*.json` markers:
+    an unmanifested (crashed-mid-write) run dir is invisible to the
+    resume anti-join and the readers, like an uncommitted snapshot."""
+    return [m["path"] for m in _markers(out_dir)]
 
 
 def _commit_snapshot(out_dir: str, run_id: str, run_path: str,
-                     docs: int) -> None:
+                     docs: int, elapsed_ms: int) -> None:
     """Atomic-enough snapshot commit: the marker file is created (via
     tmp + rename) strictly AFTER the data write succeeded."""
-    import json as _json
-    import os as _os
-
     snap_dir = f"{out_dir}/_snapshots"
     _os.makedirs(snap_dir, exist_ok=True)
     tmp = f"{snap_dir}/.{run_id}.json.tmp"
     with open(tmp, "w") as fh:
         _json.dump({"run_id": run_id, "path": run_path, "docs": docs,
+                    "elapsed_ms": elapsed_ms,
                     "committed_at": time.time()}, fh)
     _os.replace(tmp, f"{snap_dir}/{run_id}.json")
 
@@ -640,27 +646,51 @@ def read_extracted(spark: SparkSession, out_dir: str) -> DataFrame:
     return spark.read.parquet(*paths)
 
 
+def read_metrics(spark: SparkSession, out_dir: str) -> DataFrame:
+    """Per-partition lineage metrics (schemas.METRICS) of every
+    committed run, the twin of read_extracted: each run dir, read with
+    its known schema (no inference job), aggregated by the write-time
+    `partition_id`; run_id, elapsed_ms and input_snapshot come from its
+    marker.  So they cannot disagree with the committed set, and only a
+    reader pays the scan; a filter on run_id folds the other runs'
+    union branches away."""
+    from functools import reduce
+
+    from .schemas import EXTRACTED, METRICS
+
+    run_dir = StructType(EXTRACTED.fields
+                         + [StructField("partition_id", IntegerType())])
+    runs = [
+        spark.read.schema(run_dir).parquet(m["path"])
+        .groupBy("partition_id").agg(*_run_counters())
+        .select(F.lit(m["run_id"]).alias("run_id"), "partition_id",
+                "docs_processed", "parse_failures", "span_count",
+                F.lit(m.get("elapsed_ms")).cast("long").alias("elapsed_ms"),
+                F.lit(m["path"]).alias("input_snapshot"))
+        for m in _markers(out_dir)
+    ]
+    if not runs:
+        return spark.createDataFrame([], schema=METRICS)
+    return reduce(DataFrame.unionByName, runs)
+
+
 def run_resumable(
     spark: SparkSession,
     documents_in: DataFrame,
     pdf_elements: DataFrame | None,
     out_dir: str,
     run_id: str | None = None,
-    parallelism: int | None = None,
-    max_pages: int | None = None,
     **extract_kwargs,
 ) -> dict:
     """Resumable batch run: anti-join already-committed doc_ids (the
     parquet/Iceberg output snapshot IS the checkpoint — SURVEY.md §2.10),
-    extract the remainder, append output + metrics.
+    extract the remainder, write it as one run dir and commit it.
 
     Single extraction pass: run-level counters come from an Observation
     attached to the write action (no pre-count job, kernels run exactly
-    once), the write lands in a hive-partitioned `run_id=<id>/` subdir,
-    and per-partition lineage metrics re-read ONLY that subdir (columns
-    partition_id/error/size(spans)) — never the full output table.  The
-    partition_id captured at write time is persisted in the output as
-    the lineage column.
+    once), and the write lands in a hive-partitioned `run_id=<id>/`
+    subdir with the write-time partition_id as the lineage column
+    (read_metrics aggregates it on demand).
 
     Snapshot commit protocol (the parquet stand-in for Iceberg
     snapshots, SURVEY.md §7.3 risk 6): a run directory COUNTS as
@@ -669,13 +699,14 @@ def run_resumable(
     run killed mid-write leaves an unmanifested directory that the next
     run's anti-join IGNORES (its docs are re-extracted rather than
     silently lost), and a retry under the same run_id overwrites that
-    directory rather than appending to it.  With Iceberg this would be
-    `MERGE INTO` + the snapshot log.
+    directory rather than appending to it.  The marker (doc count,
+    elapsed_ms) is the run's only commit record and nothing runs after
+    it.  With Iceberg this would be `MERGE INTO` + the snapshot log.
 
     **extract_kwargs forward to extract(): pdf_blobs / doc_blobs
     (docx/odt/epub/rtf containers) / media_blobs + ocr_model /
-    table_mode — resumability covers every branch, not just the
-    text/html/pdf core.
+    table_mode / parallelism / max_pages — resumability covers every
+    branch, not just the text/html/pdf core.
 
     Loss safety: the committed snapshot is the resume point.  Inside a
     run, operator materializations follow the session policy
@@ -686,17 +717,12 @@ def run_resumable(
 
     run_id = run_id or uuid.uuid4().hex[:12]
     spans_path = f"{out_dir}/extracted"
-    metrics_path = f"{out_dir}/metrics"
     run_path = f"{spans_path}/run_id={run_id}"
 
-    manifest = f"{out_dir}/_snapshots/{run_id}.json"
-    if _os.path.exists(manifest):
-        # run_id already committed: re-running would anti-join to an
-        # empty todo, see n_done=0 and (pre-guard) rmtree the committed
-        # run dir out from under its manifest.  Short-circuit instead —
-        # a committed run is immutable.
-        with open(manifest) as fh:
-            snap = _json.load(fh)
+    snap = _read_marker(f"{out_dir}/_snapshots/{run_id}.json")
+    if snap is not None:
+        # run_id already committed, and a committed run is immutable:
+        # a re-run would anti-join to nothing and remove its run dir
         return {"run_id": run_id, "docs_processed": 0,
                 "parse_failures": 0, "span_count": 0, "elapsed_ms": 0,
                 "output": spans_path, "already_committed": True,
@@ -711,8 +737,7 @@ def run_resumable(
     t0 = time.monotonic()
     obs = Observation(f"extract_{run_id}")
     extracted = (
-        extract(spark, todo, pdf_elements, parallelism, max_pages=max_pages,
-                **extract_kwargs)
+        extract(spark, todo, pdf_elements, **extract_kwargs)
         .withColumn("partition_id", F.spark_partition_id())
         .observe(obs, *_run_counters())
     )
@@ -726,33 +751,14 @@ def run_resumable(
     if n_done:
         # commit strictly after a successful non-empty data write (an
         # empty run dir has no parquet footers and must stay invisible)
-        _commit_snapshot(out_dir, run_id, run_path, n_done)
-        m = (
-            spark.read.parquet(run_path)
-            .groupBy("partition_id")
-            .agg(*_run_counters())
-            .select(
-                F.lit(run_id).alias("run_id"),
-                "partition_id",
-                "docs_processed",
-                "parse_failures",
-                "span_count",
-                F.lit(elapsed_ms).cast("long").alias("elapsed_ms"),
-                F.lit(run_path).alias("input_snapshot"),
-            )
-        )
-        m.write.mode("append").parquet(metrics_path)
+        _commit_snapshot(out_dir, run_id, run_path, n_done, elapsed_ms)
     else:
         # no-op resume: the run dir is empty and uncommitted by
         # construction — remove it so repeated resumes don't litter
         # extracted/ with unmanifested dirs (direct parent-dir reads of
-        # the output tree stay clean).  Never touch a manifested dir:
-        # the manifest is the commit marker, and a committed run's data
-        # must survive any number of replays.
-        if not _os.path.exists(f"{out_dir}/_snapshots/{run_id}.json"):
-            import shutil
-
-            shutil.rmtree(run_path, ignore_errors=True)
+        # the output tree stay clean).  A committed run_id returned
+        # above, so this never removes a manifested run's data.
+        shutil.rmtree(run_path, ignore_errors=True)
     return {"run_id": run_id, "docs_processed": n_done,
             "parse_failures": int(stats["parse_failures"] or 0),
             "span_count": int(stats["span_count"] or 0),

@@ -68,7 +68,8 @@ PDF_ELEMENT = StructType(
     ]
 )
 
-# Metrics table (FIXTURES.md §5 / north rule lineage+metrics).
+# Per-partition run metrics, as pipeline.read_metrics derives them
+# from the committed snapshots (FIXTURES.md §5).
 METRICS = StructType(
     [
         StructField("run_id", StringType(), False),

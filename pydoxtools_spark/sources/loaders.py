@@ -7,7 +7,7 @@
 | load_raw_file_content (:25-38)    | binaryFile `content` column        |
 | force_decode (:13-22)             | decode_text_col                    |
 | SQLTableLoader (dask_operators.py:81-108)  | load_sql_table (partitioned JDBC) |
-| dict/list/yaml loaders (document.py:756-802) | docs_from_json / docs_from_records |
+| dict/list/yaml loaders (document.py:756-802) | docs_from_json / docs_from_yaml |
 | DocumentBag path sources (document.py:1461-1472) | same binaryFile scan |
 """
 
@@ -16,6 +16,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..constants import MAX_INFLATE_BYTES
 from ..kernels import error_text, map_rows
 
 
@@ -99,11 +100,6 @@ def docs_from_json(df: DataFrame, json_col: str = "json") -> DataFrame:
     )
 
 
-def docs_from_records(spark: SparkSession, records: list[dict]) -> DataFrame:
-    """List-of-dicts documents (reference list loader) -> DataFrame."""
-    return spark.createDataFrame(records)
-
-
 def docs_from_yaml(df: DataFrame, yaml_col: str = "yaml",
                    id_col: str = "doc_id") -> DataFrame:
     """YAML documents -> flattened (key, value) rows — the reference's
@@ -112,7 +108,7 @@ def docs_from_yaml(df: DataFrame, yaml_col: str = "yaml",
     mappings flatten to dotted keys, list items to key.<index>.
 
     Gated on pyyaml: raises ImportError at CALL time when the lib is
-    absent (the json/records loaders cover the shape without it).
+    absent (docs_from_json and createDataFrame cover the shape).
     safe_load, not the reference's unsafe_load — arbitrary-object
     construction from corpus bytes is a non-goal.  Parse failures emit
     a (doc_id, NULL, NULL) row, mirroring docs_from_json's
@@ -121,8 +117,8 @@ def docs_from_yaml(df: DataFrame, yaml_col: str = "yaml",
         import yaml  # noqa: F401
     except ImportError as e:  # pragma: no cover - env without pyyaml
         raise ImportError(
-            "docs_from_yaml requires pyyaml; use docs_from_json/"
-            "docs_from_records otherwise") from e
+            "docs_from_yaml requires pyyaml; use docs_from_json or "
+            "spark.createDataFrame(records) otherwise") from e
 
     def flat(prefix, v, out):
         if isinstance(v, dict):
@@ -271,7 +267,7 @@ def warc_records(blobs: DataFrame, ref_col: str = "path",
 
 def zip_members(blobs: DataFrame, ref_col: str = "path",
                 content_col: str = "content",
-                max_member_bytes: int | None = None) -> DataFrame:
+                max_member_bytes: int = MAX_INFLATE_BYTES) -> DataFrame:
     """(ref, content) zip-archive blobs -> one row per member file:
     (ref, member, n_bytes, content, error).  The archive-of-documents
     ingest shape (a tarball-less world ships zips): ingest_blobs
@@ -281,10 +277,10 @@ def zip_members(blobs: DataFrame, ref_col: str = "path",
 
     Per-member containment: an unreadable member (bad CRC, encrypted,
     truncated) is its own error row with the member name; a blob that
-    is not a zip at all is one file-level error row.  Members larger
-    than `max_member_bytes` (when set) are skipped as error rows
-    instead of materializing — the zip-bomb guard; directories are
-    skipped silently.
+    is not a zip at all is one file-level error row.  Members declaring
+    more than `max_member_bytes` are error rows, never inflated — the
+    zip-bomb guard (zipfile stops at the declared size); directories
+    are skipped silently.
 
     Scale shape: stateless Arrow-batched mapInPandas, members stay in
     their archive's scan partition (no shuffle); like warc_records,
@@ -305,7 +301,7 @@ def zip_members(blobs: DataFrame, ref_col: str = "path",
 
 def tar_members(blobs: DataFrame, ref_col: str = "path",
                 content_col: str = "content",
-                max_member_bytes: int | None = None) -> DataFrame:
+                max_member_bytes: int = MAX_INFLATE_BYTES) -> DataFrame:
     """(ref, content) tar blobs (plain or gz/bz2/xz) -> one row per
     member: (ref, member, n_bytes, content, error) — the zip_members
     twin for the tape-archive world.  Per-member containment and the
@@ -382,13 +378,13 @@ def _open_tar(raw: bytes):
     return tarfile.open(fileobj=io.BytesIO(raw), mode="r:*")
 
 
-def _members(ref, members, max_member_bytes: int | None) -> list[tuple]:
+def _members(ref, members, max_member_bytes: int) -> list[tuple]:
     """(name, size, read) archive members -> member rows.  A member
-    larger than max_member_bytes (when set) is an error row and is
-    never read; a read that raises is that member's error row."""
+    larger than max_member_bytes is an error row and is never read; a
+    read that raises is that member's error row."""
     rows = []
     for name, size, read in members:
-        if max_member_bytes is not None and size > max_member_bytes:
+        if size > max_member_bytes:
             rows.append((ref, name, size, None,
                          f"member exceeds max_member_bytes ({size})"))
             continue

@@ -27,24 +27,23 @@ def incremental_extract(
     pdf_elements: DataFrame | None,
     out_dir: str,
     checkpoint_dir: str,
-    parallelism: int | None = None,
     available_now: bool = True,
     **extract_kwargs,
 ):
     """Incrementally extract newly-arrived documents_in parquet files.
 
     readStream(parquet) -> foreachBatch(run_resumable).  Every
-    micro-batch commits through the batch commit protocol: one
-    `_snapshots` marker, one metrics row set and the committed-doc
-    anti-join, under a run_id made from the checkpoint dir and the
-    batch id.  foreachBatch is at-least-once — a crash between the
-    sink write and the streaming commit log replays the batch — and a
-    replay finds its run_id already committed and writes nothing, so
-    each doc is committed once.  Streamed and batch runs share one
-    snapshot set: read_extracted sees the streamed output, and a later
-    run_resumable skips its docs.  With available_now=True this
-    processes the backlog and stops.  parallelism is extract()'s span
-    width; None = the session's defaultParallelism.
+    micro-batch commits through the batch commit protocol: one run
+    dir, one `_snapshots` marker and the committed-doc anti-join, under
+    a run_id made from the checkpoint dir and the batch id.
+    foreachBatch is at-least-once — a crash between the sink write and
+    the streaming commit log replays the batch — and a replay finds its
+    run_id already committed and writes nothing, so each doc is
+    committed once.  Streamed and batch runs share one snapshot set:
+    read_extracted sees the streamed output, and a later run_resumable
+    skips its docs.  With available_now=True this processes the backlog
+    and stops.  **extract_kwargs forward to run_resumable and on to
+    extract().
     """
     stream = (
         spark.readStream.schema(
@@ -57,7 +56,7 @@ def incremental_extract(
     def process_batch(batch_df: DataFrame, batch_id: int) -> None:
         run_resumable(batch_df.sparkSession, batch_df, pdf_elements, out_dir,
                       run_id=f"stream-{query_tag}-{batch_id}",
-                      parallelism=parallelism, **extract_kwargs)
+                      **extract_kwargs)
 
     writer = (
         stream.writeStream.foreachBatch(process_batch)

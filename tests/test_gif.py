@@ -76,6 +76,20 @@ def test_gif_palette_edges_and_extension_skip():
     np.testing.assert_array_equal(px2, px)
 
 
+def test_gif_frame_larger_than_budget_rejected_before_decode():
+    """A 65535x65535 descriptor asks for 12 GiB of RGB pixels: it is
+    rejected from the header, before any LZW decode."""
+    import struct
+
+    data = bytearray(build_gif(np.zeros((2, 2), np.uint8),
+                               np.array([[1, 2, 3], [4, 5, 6]], np.uint8)))
+    i = 13 + 3 * 2  # header + LSD + 2-color GCT = descriptor offset
+    assert data[i] == 0x2C  # then x, y, w, h
+    data[i + 5:i + 9] = struct.pack("<HH", 65535, 65535)
+    with pytest.raises(MediaDecodeError, match="65535x65535 exceeds"):
+        parse_gif(bytes(data))
+
+
 def test_gif_contained_failures():
     with pytest.raises(MediaDecodeError, match="not a GIF"):
         parse_gif(b"BM000000")

@@ -859,29 +859,25 @@ def _flate_bomb_pdf() -> bytes:
     return _one_page_pdf(bomb, b" /Filter /FlateDecode")
 
 
-def test_flate_bomb_raises_typed_error_without_lenient_retry(monkeypatch):
-    """A Flate bomb stops at the output budget with PdfBombError, and
-    the ladder re-raises it (like PdfEncryptedError): the lenient rung,
-    which inflates every stream again, never runs."""
+def _parse_without_lenient_rung(monkeypatch, data: bytes):
     from pydoxtools_spark.functions import pdfparse
 
     def lenient(data):
         raise AssertionError("lenient rung ran on a bomb")
 
     monkeypatch.setattr(pdfparse, "_content_streams_lenient", lenient)
-    with pytest.raises(pdfparse.PdfBombError):
-        pdf_elements_from_bytes(_flate_bomb_pdf(), "d")
+    return pdf_elements_from_bytes(data, "d")
 
 
-def test_flate_bomb_is_one_error_row_in_extract(spark):
-    """Through extract(pdf_blobs=...), a bomb is one pdf_parse_error row
-    next to a clean doc.  The job finishing proves no task failed: a
-    local-mode task is not retried, so a failed one fails the job."""
+def _extract_next_to_clean_doc(spark, bomb: bytes) -> dict:
+    """extract(pdf_blobs=...) rows of a bomb and a clean doc.  The job
+    finishing proves no task failed: a local-mode task is not retried,
+    so a failed one fails the job."""
     from pydoxtools_spark.pipeline import extract
     from pydoxtools_spark.schemas import DOCUMENTS_IN
 
     blobs = spark.createDataFrame(
-        [("bomb", _flate_bomb_pdf()), ("ok", build_tiny_pdf(PAGES))],
+        [("bomb", bomb), ("ok", build_tiny_pdf(PAGES))],
         "ref string, content binary")
     docs = spark.createDataFrame(
         [{"doc_id": r, "spans": [{"kind": "pdf_bytes", "text": None,
@@ -889,7 +885,44 @@ def test_flate_bomb_is_one_error_row_in_extract(spark):
          for r in ("bomb", "ok")], schema=DOCUMENTS_IN)
     out = {r["doc_id"]: r for r in
            extract(spark, docs, None, parallelism=2, pdf_blobs=blobs).collect()}
-    assert out["bomb"]["error"].startswith("pdf_parse_error: FlateDecode "
-                                           "output exceeds")
     assert out["bomb"]["spans"] == []
     assert out["ok"]["error"] is None and out["ok"]["spans"]
+    return out
+
+
+def test_flate_bomb_raises_typed_error_without_lenient_retry(monkeypatch):
+    """A Flate bomb stops at the output budget with PdfBombError, and
+    the ladder re-raises it (like PdfEncryptedError): the lenient rung,
+    which inflates every stream again, never runs."""
+    from pydoxtools_spark.functions.pdfparse import PdfBombError
+
+    with pytest.raises(PdfBombError):
+        _parse_without_lenient_rung(monkeypatch, _flate_bomb_pdf())
+
+
+def test_flate_bomb_is_one_error_row_in_extract(spark):
+    """Through extract(pdf_blobs=...), a bomb is one pdf_parse_error row
+    next to a clean doc, with no failed task."""
+    out = _extract_next_to_clean_doc(spark, _flate_bomb_pdf())
+    assert out["bomb"]["error"].startswith("pdf_parse_error: FlateDecode "
+                                           "output exceeds")
+
+
+def test_lzw_bomb_raises_typed_error_without_lenient_retry(
+        monkeypatch, lzw_bomb):
+    """An LZWDecode content stream that decodes to 84 MB stops at the
+    output budget with PdfBombError, and the lenient rung never runs."""
+    from pydoxtools_spark.functions.pdfparse import PdfBombError
+
+    with pytest.raises(PdfBombError, match="LZWDecode"):
+        _parse_without_lenient_rung(
+            monkeypatch, _one_page_pdf(lzw_bomb, b" /Filter /LZWDecode"))
+
+
+def test_lzw_bomb_is_one_error_row_in_extract(spark, lzw_bomb):
+    """Through extract(pdf_blobs=...), the LZW bomb is one
+    pdf_parse_error row next to a clean doc, with no failed task."""
+    out = _extract_next_to_clean_doc(
+        spark, _one_page_pdf(lzw_bomb, b" /Filter /LZWDecode"))
+    assert out["bomb"]["error"].startswith("pdf_parse_error: LZWDecode "
+                                           "output exceeds")

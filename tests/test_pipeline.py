@@ -100,9 +100,85 @@ def test_resume_from_partial_commit(spark, corpus, tmp_path):
     r3 = run_resumable(spark, docs_df, pdf_df, out, parallelism=4)
     assert r3["docs_processed"] == 0
     # metrics rows exist with lineage
-    m = spark.read.parquet(f"{out}/metrics")
+    from pydoxtools_spark.pipeline import read_metrics
+    m = read_metrics(spark, out)
     assert m.count() >= 2
     assert m.filter("docs_processed > 0").count() >= 2
+
+
+def _metrics_by_run(spark, out):
+    from pydoxtools_spark.pipeline import read_metrics
+
+    return {r["run_id"]: r for r in read_metrics(spark, out).groupBy(
+        "run_id").agg(*(F.sum(c).alias(c) for c in (
+            "docs_processed", "parse_failures", "span_count"))).collect()}
+
+
+def test_read_metrics_equal_each_runs_commit(spark, corpus, tmp_path):
+    """read_metrics derives per-partition metrics from the committed
+    snapshots: per run they sum to the marker's doc count and to the
+    run's own counters, failures included, in schemas.METRICS shape."""
+    import json
+
+    from pydoxtools_spark.pipeline import read_metrics, run_resumable
+    from pydoxtools_spark.schemas import METRICS
+
+    docs_df, pdf_df, _ = corpus
+    out = str(tmp_path / "metrics_out")
+    bad = spark.createDataFrame([{"doc_id": "bad", "spans": [
+        {"kind": "bogus_kind", "text": "x", "media_ref": None,
+         "offset": 0}]}], schema=DOCUMENTS_IN)
+    res = {
+        "a": run_resumable(spark, docs_df.limit(N_DOCS // 3), pdf_df, out,
+                           run_id="a", parallelism=4),
+        "b": run_resumable(spark, docs_df.unionByName(bad), pdf_df, out,
+                           run_id="b", parallelism=4),
+    }
+    assert res["b"]["parse_failures"] == 1
+    got = _metrics_by_run(spark, out)
+    assert set(got) == {"a", "b"}
+    for run_id, r in res.items():
+        with open(f"{out}/_snapshots/{run_id}.json") as fh:
+            marker = json.load(fh)
+        assert got[run_id]["docs_processed"] == marker["docs"] \
+            == r["docs_processed"]
+        assert got[run_id]["parse_failures"] == r["parse_failures"]
+        assert got[run_id]["span_count"] == r["span_count"]
+        assert marker["elapsed_ms"] == r["elapsed_ms"]
+    m = read_metrics(spark, out)
+    assert [(f.name, f.dataType) for f in m.schema] == \
+        [(f.name, f.dataType) for f in METRICS]
+    assert {r["input_snapshot"] for r in m.collect()} == {
+        f"{out}/extracted/run_id=a", f"{out}/extracted/run_id=b"}
+    assert read_metrics(spark, str(tmp_path / "empty")).count() == 0
+
+
+def test_metrics_survive_a_crash_after_the_commit(spark, corpus, tmp_path,
+                                                  monkeypatch):
+    """A run that dies right after its marker commit keeps its metrics:
+    they are derived from the committed snapshot, so the retry under
+    the same run_id (already committed, writes nothing) loses nothing."""
+    from pydoxtools_spark import pipeline
+
+    docs_df, pdf_df, _ = corpus
+    out = str(tmp_path / "commit_crash")
+    commit = pipeline._commit_snapshot
+
+    def commit_then_die(*args, **kwargs):
+        commit(*args, **kwargs)
+        raise RuntimeError("killed after the commit")
+
+    monkeypatch.setattr(pipeline, "_commit_snapshot", commit_then_die)
+    with pytest.raises(RuntimeError, match="killed after the commit"):
+        pipeline.run_resumable(spark, docs_df, pdf_df, out, run_id="r1",
+                               parallelism=4)
+    monkeypatch.setattr(pipeline, "_commit_snapshot", commit)
+    retry = pipeline.run_resumable(spark, docs_df, pdf_df, out,
+                                   run_id="r1", parallelism=4)
+    assert retry.get("already_committed")
+    committed = pipeline.read_extracted(spark, out).count()
+    assert committed == N_DOCS
+    assert _metrics_by_run(spark, out)["r1"]["docs_processed"] == committed
 
 
 def test_crashed_run_dir_is_invisible_until_manifested(spark, corpus, tmp_path):

@@ -102,6 +102,16 @@ def test_contained_failures():
                    predictor=2)
 
 
+def test_lzw_bomb_strip_is_contained(lzw_bomb):
+    """A compression-5 strip that decodes to 84 MB stops at the output
+    budget: one contained MediaDecodeError, not a worker OOM."""
+    from pydoxtools_spark.functions.tiff import _emit
+
+    data = _emit([lzw_bomb], 64, 64, [8], 5, 1, 1, 64, "II", 1)
+    with pytest.raises(MediaDecodeError, match="LZWDecode output exceeds"):
+        parse_tiff(data)
+
+
 def test_media_features_decodes_tiff(spark):
     """image/tiff blobs flow through the media_features kernel in all
     four compressions; a truncated TIFF is a contained error row."""

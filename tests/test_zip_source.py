@@ -62,6 +62,33 @@ def test_zip_members_bomb_guard(spark):
     assert got["huge.txt"]["n_bytes"] == 100_000  # declared size kept
 
 
+def test_zip_members_guard_is_on_by_default(spark):
+    """Without max_member_bytes, a member declaring more than
+    constants.MAX_INFLATE_BYTES (a 64 KB zip of zeros) is an error row
+    and is never inflated.  A member whose stream runs past a smaller
+    declared size stops there: zipfile reads the declared bytes and
+    fails the CRC, so the declared size bounds every read."""
+    import struct
+
+    from pydoxtools_spark.constants import MAX_INFLATE_BYTES
+    from pydoxtools_spark.sources.loaders import zip_members
+
+    bomb = _zip({"zeros.bin": bytes(MAX_INFLATE_BYTES + 1), "ok.txt": b"ok"})
+    lied = bytearray(_zip({"lie.bin": bytes(1 << 20)}))
+    for sig, at in ((b"PK\x03\x04", 22), (b"PK\x01\x02", 24)):
+        i = lied.find(sig) + at  # declared uncompressed size: 100 bytes
+        lied[i:i + 4] = struct.pack("<I", 100)
+    blobs = spark.createDataFrame(
+        [("bomb.zip", bytearray(bomb)), ("lie.zip", lied)],
+        "path string, content binary")
+    got = {r["member"]: r for r in zip_members(blobs).collect()}
+    assert got["zeros.bin"]["content"] is None
+    assert "max_member_bytes" in got["zeros.bin"]["error"]
+    assert got["ok.txt"]["error"] is None
+    assert got["lie.bin"]["content"] is None
+    assert "CRC" in got["lie.bin"]["error"]
+
+
 def test_zip_archive_through_ingest(spark):
     """Archive members become documents: zip_members -> ingest_blobs
     routes each member by its own content (html kernel vs text)."""
