@@ -1333,8 +1333,8 @@ def q_exact_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def q_minhash_signature(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Reference-form minhash (min over shingles of md5(perm:shingle)),
-    computed through a Generate boundary: the column-expression form
-    (dedup.minhash_signature) re-evaluates the _norm regex per shingle
+    computed through a Generate boundary: a column-expression form
+    (transform + array_min) re-evaluates the _norm regex per shingle
     inside the HOF lambda (CLAUDE.md trap #1) — 26 s at sf0.01 vs ~2 s
     for this row form.  min over the shingle MULTISET == min over the
     distinct set, so the DuckDB twin (distinct shingles) is unchanged."""

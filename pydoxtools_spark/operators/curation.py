@@ -290,7 +290,6 @@ def quota_sample(
     group_col: str,
     quota: int,
     id_col: str = "doc_id",
-    salt_partitions: int = 1,
 ) -> DataFrame:
     """Deterministic stratified sampling: keep at most `quota` rows per
     group, chosen by md5-of-id rank — a reproducible uniform sample
@@ -306,22 +305,11 @@ def quota_sample(
     per group), so the shuffle carries at most quota * input_partitions
     rows per group and the per-group final sort is tiny; the classic
     "mega-domain becomes one giant sort task" failure mode is already
-    defused by the engine for rank <= k predicates.  `salt_partitions=S
-    > 1` additionally bounds the FINAL per-group task to <= S*quota
-    rows (exact: the global hash-top-quota of a group is contained in
-    the union of per-salt top-quotas) — belt-and-braces for extreme
-    quota * partitions products, one extra small shuffle.
+    defused by the engine for rank <= k predicates.
     """
     from pyspark.sql import Window
 
     h = F.md5(F.col(id_col).cast("string"))
-    if salt_partitions > 1:
-        salt = F.pmod(F.xxhash64(F.col(id_col).cast("string")),
-                      F.lit(salt_partitions))
-        w1 = Window.partitionBy(F.col(group_col), salt).orderBy(
-            h, F.col(id_col))
-        df = df.withColumn("_pre", F.row_number().over(w1)).filter(
-            F.col("_pre") <= quota).drop("_pre")
     w = Window.partitionBy(group_col).orderBy(h, F.col(id_col))
     return df.withColumn("sample_rank", F.row_number().over(w)).filter(
         F.col("sample_rank") <= quota)
@@ -517,7 +505,6 @@ def filter_url_blocklist(
     df: DataFrame,
     blocklist: DataFrame,
     url_col: str = "url",
-    broadcast_blocked: bool = True,
 ) -> DataFrame:
     """Domain-blocklist filtering — the C4/RefinedWeb curation move
     (both drop documents whose REGISTRABLE host matches a bad-domain
@@ -531,9 +518,8 @@ def filter_url_blocklist(
     documents (web corpora have ~1e7 hosts against ~1e10 docs), so
     the only full-width operation is a broadcast join of the blocked-
     host table back onto the documents — no document-table shuffle.
-    `broadcast_blocked=False` opts into a shuffle join when the
-    blocklist coverage is too large to broadcast.  Suffix matching is
-    pure Catalyst (split + transform + explode); no python."""
+    Suffix matching is pure Catalyst (split + transform + explode); no
+    python."""
     host = F.lower(F.regexp_extract(
         F.col(url_col), r"^[A-Za-z][A-Za-z0-9+.-]*://([^/:?#]+)", 1))
     hosts = df.select(host.alias("host")).filter(
@@ -549,8 +535,6 @@ def filter_url_blocklist(
         sufs.join(F.broadcast(blocklist.select(
             F.lower("domain").alias("suf"))), "suf")
         .groupBy("host").agg(F.min("suf").alias("blocked_domain")))
-    if broadcast_blocked:
-        blocked = F.broadcast(blocked)
     return (df.withColumn("host", host)
-            .join(blocked, "host", "left")
+            .join(F.broadcast(blocked), "host", "left")
             .withColumn("keep", F.col("blocked_domain").isNull()))

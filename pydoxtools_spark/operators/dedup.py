@@ -7,7 +7,7 @@ All hot paths are pure Spark SQL (higher-order array functions, hash
 aggregates) — no Python UDFs.  Hash primitive is md5 (present in both
 Spark and DuckDB) so every operator has an exact cross-engine oracle;
 fixed-width hex strings compare lexicographically == numerically, so
-`array_min` over md5 hex IS min-hashing.
+a MIN over md5 hex IS min-hashing.
 
 Scale notes (100 TB):
   - exact dedup: one hash aggregate on a 32-hex key — the classic
@@ -122,21 +122,6 @@ def word_shingle_rows(df: DataFrame, text_col: str = "text",
 
 
 # --------------------------------------------------------------- minhash
-
-
-def minhash_signature(shingles: Column, num_perm: int = MINHASH_NUM_PERM) -> Column:
-    """num_perm minhash values: for perm i, min over shingles of
-    md5(i || ':' || s).  Fixed-width hex min == numeric min.  Entirely
-    per-row (transform+array_min): no shuffle, no UDF.  Cost is
-    num_perm md5 calls per shingle — use minhash_signature_fast for the
-    production path; this variant exists for its trivially portable
-    DuckDB oracle."""
-    return F.transform(
-        F.sequence(F.lit(0), F.lit(num_perm - 1)),
-        lambda i: F.array_min(
-            F.transform(shingles, lambda s: F.md5(F.concat(i.cast("string"), F.lit(":"), s)))
-        ),
-    )
 
 
 # universal-hash parameters for the fast minhash: p prime > 2^32;

@@ -237,8 +237,7 @@ KNN_EXACT_MAX = 100_000
 def knn_graph(corpus: DataFrame, k: int = 4, max_dist: float = 0.2,
               id_col: str = "vec_id", vec_col: str = "embedding",
               exact: bool | None = None,
-              exact_max: int = KNN_EXACT_MAX, dim: int = 64,
-              size_hint: int | None = None) -> DataFrame:
+              exact_max: int = KNN_EXACT_MAX, dim: int = 64) -> DataFrame:
     """Similarity graph edges: each vector's k nearest cosine neighbors
     with distance (1-cos) <= max_dist — the reference's SimilarityGraph
     semantics (extract_index.py:163-196) relationally.
@@ -249,28 +248,25 @@ def knn_graph(corpus: DataFrame, k: int = 4, max_dist: float = 0.2,
     beyond ~100k vectors.  Anything above `exact_max` auto-routes to
     knn_graph_lsh — bucketed candidates, no broadcast, recall < 1 by
     design.  Routing with exact=None spends NO Spark job: it uses
-    `size_hint` (caller-known row count) when given, else Catalyst's
-    optimized-plan statistics — the exact rowCount when the plan carries
-    one, else a row estimate of sizeInBytes / (8*dim).  That estimate is
-    a deliberate UNDER-estimate of bytes-per-row (vectors alone), so it
-    OVER-estimates rows and errs toward LSH: the failure mode is
-    recall < 1, never an accidental O(N^2) broadcast (unestimable leaf
-    nodes default to Long.Max sizeInBytes -> LSH, same bias).  Pass
-    exact=True to pin the exact form, exact=False to force LSH."""
+    Catalyst's optimized-plan statistics — the exact rowCount when the
+    plan carries one, else a row estimate of sizeInBytes / (8*dim).
+    That estimate is a deliberate UNDER-estimate of bytes-per-row
+    (vectors alone), so it OVER-estimates rows and errs toward LSH: the
+    failure mode is recall < 1, never an accidental O(N^2) broadcast
+    (unestimable leaf nodes default to Long.Max sizeInBytes -> LSH, same
+    bias).  Pass exact=True to pin the exact form, exact=False to force
+    LSH."""
     if exact is None:
-        if size_hint is not None:
-            exact = size_hint <= exact_max
-        else:
-            stats = corpus._jdf.queryExecution().optimizedPlan().stats()
-            rc = stats.rowCount()
+        stats = corpus._jdf.queryExecution().optimizedPlan().stats()
+        rc = stats.rowCount()
 
-            def _num(v):  # py4j hands back int or scala.math.BigInt
-                return float(v) if isinstance(v, (int, float)) \
-                    else float(v.toString())
+        def _num(v):  # py4j hands back int or scala.math.BigInt
+            return float(v) if isinstance(v, (int, float)) \
+                else float(v.toString())
 
-            n = (_num(rc.get()) if rc.isDefined()
-                 else _num(stats.sizeInBytes()) / (8 * dim))
-            exact = n <= exact_max
+        n = (_num(rc.get()) if rc.isDefined()
+             else _num(stats.sizeInBytes()) / (8 * dim))
+        exact = n <= exact_max
     if not exact:
         return knn_graph_lsh(corpus, k=k, max_dist=max_dist,
                              id_col=id_col, vec_col=vec_col, dim=dim)
@@ -567,7 +563,6 @@ def textrank_sentences(
     text_col: str = "text",
     id_col: str = "doc_id",
     dim: int = 64,
-    min_parallelism: int | None = None,
 ) -> DataFrame:
     """Extractive summary: the top_k most CENTRAL sentences per doc by
     textrank over a sentence-similarity graph, returned in original
@@ -589,16 +584,9 @@ def textrank_sentences(
         ).alias("sent_idx", "sentence"),
     ).filter(F.length(F.trim("sentence")) > 0)
     # The sentence split + explode runs BEFORE the first exchange, so
-    # its parallelism is the input scan's — a single-file doc table
-    # materializes the pin in ONE task (r7 stage audit: 1.8 s
-    # single-task CPU at sf0.1).  `min_parallelism` opts into a
-    # repartition of the narrow sentence rows; it stays None by default
-    # because an already-wide corpus (the 100 TB case) must not pay a
-    # pointless extra shuffle, and probing the input's partition count
-    # here would need an .rdd access that can eagerly materialize
-    # upstream AQE stages (the package keeps construction action-free).
-    if min_parallelism:
-        sents = sents.repartition(min_parallelism)
+    # its parallelism is the input's: a caller with a single-file doc
+    # table repartitions it first (r7 stage audit: 1.8 s single-task
+    # CPU at sf0.1), as q_textrank_summary does.
     sents = pin(sents)
     # unique token id per (doc, sentence) for the embedding helper
     emb = hash_embeddings(

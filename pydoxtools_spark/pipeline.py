@@ -42,6 +42,7 @@ from __future__ import annotations
 import glob
 import json as _json
 import os as _os
+import re
 import shutil
 import time
 import uuid
@@ -75,6 +76,7 @@ from .constants import (
 from .dispatch import TYPE_MARKDOWN, TYPE_MEDIAWIKI
 from .functions.spantext import sql_paragraphs
 from .kernels import error_text, map_rows
+from .schemas import EXTRACTED, METRICS, PDF_ELEMENT
 from .session import pin
 
 # mid-pipeline row shape: one output span + its reading-order sort keys
@@ -271,8 +273,6 @@ def parse_pdf_blobs(pdf_blobs: DataFrame, emit_chars: bool = False) -> DataFrame
     failure.  emit_chars feeds the full-fidelity table path
     (extract(..., table_mode='chars'))."""
     from operator import itemgetter
-
-    from .schemas import PDF_ELEMENT
 
     as_row = itemgetter(*PDF_ELEMENT.fieldNames())
 
@@ -488,8 +488,6 @@ def extract(
     # zero rows either way (the sentinel still emits the doc).
     has_pdf = pdf_elements is not None or pdf_blobs is not None
     if pdf_elements is None:
-        from .schemas import PDF_ELEMENT
-
         # one explicit empty partition: the default empty DataFrame
         # carries defaultParallelism (32) empty partitions that union
         # into the parse stage as pure task overhead (r7)
@@ -597,15 +595,31 @@ def _run_counters() -> list[F.Column]:
 # ------------------------------------------------------------ resumable
 
 
+# a run_id is a hive directory name (`extracted/run_id=<id>`) that the
+# reader parses back, and a marker file name: no separator, no escape,
+# and not the name partition discovery reads back as NULL
+_RUN_ID = re.compile(r"(?!__HIVE_DEFAULT_PARTITION__$)[A-Za-z0-9_.-]+")
+
+# one committed run dir's rows, with its hive `run_id` directory as a
+# string column (so "007" stays "007")
+_RUN_DIR = StructType(EXTRACTED.fields + [
+    StructField("partition_id", IntegerType()),
+    StructField("run_id", StringType()),
+])
+
+
 def _read_marker(path: str) -> dict | None:
     """A `_snapshots/<run_id>.json` marker, or None when it is absent or
-    torn (unparseable, or naming no run dir): an uncommitted run."""
+    torn (unparseable, naming no run dir or no string run_id): an
+    uncommitted run."""
     try:
         with open(path) as fh:
             marker = _json.load(fh)
     except (OSError, ValueError):
         return None
-    return marker if isinstance(marker, dict) and "path" in marker else None
+    committed = (isinstance(marker, dict) and "path" in marker
+                 and isinstance(marker.get("run_id"), str))
+    return marker if committed else None
 
 
 def _markers(out_dir: str) -> list[dict]:
@@ -635,43 +649,49 @@ def _commit_snapshot(out_dir: str, run_id: str, run_path: str,
     _os.replace(tmp, f"{snap_dir}/{run_id}.json")
 
 
-def read_extracted(spark: SparkSession, out_dir: str) -> DataFrame:
-    """The committed view of the output table: union of manifested
-    snapshot directories only."""
-    paths = list_snapshots(out_dir)
-    if not paths:
-        from .schemas import EXTRACTED
+def _read_committed(spark: SparkSession, out_dir: str,
+                    markers: list[dict]) -> DataFrame:
+    """The committed snapshot set as one relation (_RUN_DIR): a single
+    scan over every marker's run dir, with the schema given (no footer
+    is read) and `run_id` taken from the hive directory, so a filter
+    on it prunes whole run dirs.  read_extracted, read_metrics and the
+    resume anti-join all read through here."""
+    reader = spark.read.schema(_RUN_DIR)
+    if markers:  # basePath needs at least one path under it
+        reader = reader.option("basePath", f"{out_dir}/extracted")
+    return reader.parquet(*(m["path"] for m in markers))
 
-        return spark.createDataFrame([], schema=EXTRACTED)
-    return spark.read.parquet(*paths)
+
+def read_extracted(spark: SparkSession, out_dir: str) -> DataFrame:
+    """The committed view of the output table: the manifested run dirs
+    only, with exactly EXTRACTED's columns whether or not any run is
+    committed."""
+    return _read_committed(spark, out_dir, _markers(out_dir)).select(
+        *EXTRACTED.fieldNames())
 
 
 def read_metrics(spark: SparkSession, out_dir: str) -> DataFrame:
     """Per-partition lineage metrics (schemas.METRICS) of every
-    committed run, the twin of read_extracted: each run dir, read with
-    its known schema (no inference job), aggregated by the write-time
-    `partition_id`; run_id, elapsed_ms and input_snapshot come from its
-    marker.  So they cannot disagree with the committed set, and only a
-    reader pays the scan; a filter on run_id folds the other runs'
-    union branches away."""
-    from functools import reduce
-
-    from .schemas import EXTRACTED, METRICS
-
-    run_dir = StructType(EXTRACTED.fields
-                         + [StructField("partition_id", IntegerType())])
-    runs = [
-        spark.read.schema(run_dir).parquet(m["path"])
-        .groupBy("partition_id").agg(*_run_counters())
-        .select(F.lit(m["run_id"]).alias("run_id"), "partition_id",
-                "docs_processed", "parse_failures", "span_count",
-                F.lit(m.get("elapsed_ms")).cast("long").alias("elapsed_ms"),
-                F.lit(m["path"]).alias("input_snapshot"))
-        for m in _markers(out_dir)
-    ]
-    if not runs:
+    committed run, the twin of read_extracted: one aggregate by
+    (run_id, write-time `partition_id`) over the committed set's one
+    scan, with elapsed_ms and input_snapshot looked up from each run's
+    marker.  So they cannot disagree with the committed set, only a
+    reader pays the scan, and a filter on run_id is a partition filter:
+    the scan reads only that run's files."""
+    markers = _markers(out_dir)
+    if not markers:
         return spark.createDataFrame([], schema=METRICS)
-    return reduce(DataFrame.unionByName, runs)
+    marker = F.create_map(*(x for m in markers for x in (
+        F.lit(m["run_id"]),
+        F.struct(F.lit(m.get("elapsed_ms")).cast("long").alias("elapsed_ms"),
+                 F.lit(m["path"]).alias("input_snapshot")),
+    )))[F.col("run_id")]
+    return (_read_committed(spark, out_dir, markers)
+            .groupBy("run_id", "partition_id").agg(*_run_counters())
+            .select("run_id", "partition_id", "docs_processed",
+                    "parse_failures", "span_count",
+                    marker["elapsed_ms"].alias("elapsed_ms"),
+                    marker["input_snapshot"].alias("input_snapshot")))
 
 
 def run_resumable(
@@ -703,6 +723,12 @@ def run_resumable(
     elapsed_ms) is the run's only commit record and nothing runs after
     it.  With Iceberg this would be `MERGE INTO` + the snapshot log.
 
+    `run_id` (default: a fresh 12-hex id) must match `[A-Za-z0-9_.-]+`
+    and not be `__HIVE_DEFAULT_PARTITION__`, or ValueError is raised
+    before anything touches disk: it becomes the `run_id=<id>`
+    directory name that the committed-set reader parses back, and a
+    separator, a `%` escape or that name would not round-trip.
+
     **extract_kwargs forward to extract(): pdf_blobs / doc_blobs
     (docx/odt/epub/rtf containers) / media_blobs + ocr_model /
     table_mode / parallelism / max_pages — resumability covers every
@@ -716,6 +742,10 @@ def run_resumable(
     from pyspark.sql import Observation
 
     run_id = run_id or uuid.uuid4().hex[:12]
+    if not isinstance(run_id, str) or not _RUN_ID.fullmatch(run_id):
+        raise ValueError(
+            f"run_id {run_id!r} must match {_RUN_ID.pattern}: it names "
+            "the run dir that read_extracted and read_metrics parse back")
     spans_path = f"{out_dir}/extracted"
     run_path = f"{spans_path}/run_id={run_id}"
 
@@ -729,9 +759,9 @@ def run_resumable(
                 "committed_docs": int(snap.get("docs", 0))}
 
     todo = documents_in
-    committed_paths = list_snapshots(out_dir)
-    if committed_paths:
-        committed = spark.read.parquet(*committed_paths).select("doc_id")
+    markers = _markers(out_dir)
+    if markers:
+        committed = _read_committed(spark, out_dir, markers).select("doc_id")
         todo = documents_in.join(committed, "doc_id", "left_anti")
 
     t0 = time.monotonic()

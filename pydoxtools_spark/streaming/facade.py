@@ -27,7 +27,6 @@ def incremental_extract(
     pdf_elements: DataFrame | None,
     out_dir: str,
     checkpoint_dir: str,
-    available_now: bool = True,
     **extract_kwargs,
 ):
     """Incrementally extract newly-arrived documents_in parquet files.
@@ -41,9 +40,9 @@ def incremental_extract(
     run_id already committed and writes nothing, so each doc is
     committed once.  Streamed and batch runs share one snapshot set:
     read_extracted sees the streamed output, and a later run_resumable
-    skips its docs.  With available_now=True this processes the backlog
-    and stops.  **extract_kwargs forward to run_resumable and on to
-    extract().
+    skips its docs.  The trigger is availableNow: each call processes
+    the backlog and stops.  **extract_kwargs forward to run_resumable
+    and on to extract().
     """
     stream = (
         spark.readStream.schema(
@@ -58,10 +57,9 @@ def incremental_extract(
                       run_id=f"stream-{query_tag}-{batch_id}",
                       **extract_kwargs)
 
-    writer = (
+    return (
         stream.writeStream.foreachBatch(process_batch)
         .option("checkpointLocation", checkpoint_dir)
+        .trigger(availableNow=True)
+        .start()
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()

@@ -181,6 +181,116 @@ def test_metrics_survive_a_crash_after_the_commit(spark, corpus, tmp_path,
     assert _metrics_by_run(spark, out)["r1"]["docs_processed"] == committed
 
 
+def _text_docs(spark, ids):
+    return spark.createDataFrame([{"doc_id": d, "spans": [
+        {"kind": "text", "text": f"para {d}\n\nmore", "media_ref": None,
+         "offset": 0}]} for d in ids], schema=DOCUMENTS_IN)
+
+
+def test_read_metrics_is_one_scan(spark, tmp_path):
+    """The committed set is read as one relation: read_metrics over
+    three committed runs plans one parquet scan and no Union, and its
+    rows equal each run's own counters."""
+    import re
+
+    from pydoxtools_spark.pipeline import read_metrics, run_resumable
+
+    out = str(tmp_path / "one_scan")
+    res = {run_id: run_resumable(spark, _text_docs(spark, ids), None, out,
+                                 run_id=run_id, parallelism=2)
+           for run_id, ids in (("r1", "ab"), ("r2", "cde"), ("r3", "f"))}
+    m = read_metrics(spark, out)
+    plan = m._jdf.queryExecution().optimizedPlan().toString()
+    assert len(re.findall(r"Relation \S*\[[^\]]*\] parquet", plan)) == 1, plan
+    assert "Union" not in plan
+    got = _metrics_by_run(spark, out)
+    assert {r: got[r]["docs_processed"] for r in got} == {
+        r: res[r]["docs_processed"] for r in res} == {"r1": 2, "r2": 3, "r3": 1}
+
+
+def test_read_extracted_returns_extracted_columns(spark, tmp_path):
+    """read_extracted has EXTRACTED's columns and types, on an empty
+    out dir and on a committed one alike: the write-time partition_id
+    and the run_id directory stay inside the reader."""
+    from pydoxtools_spark.pipeline import read_extracted, run_resumable
+    from pydoxtools_spark.schemas import EXTRACTED
+
+    out = str(tmp_path / "schema_out")
+    empty = read_extracted(spark, out).schema
+    run_resumable(spark, _text_docs(spark, "ab"), None, out, parallelism=2)
+    committed = read_extracted(spark, out)
+    want = [(f.name, f.dataType.simpleString()) for f in EXTRACTED]
+    for schema in (empty, committed.schema):
+        assert [(f.name, f.dataType.simpleString()) for f in schema] == want
+    assert empty == committed.schema
+    assert sorted(r["doc_id"] for r in committed.collect()) == ["a", "b"]
+
+
+@pytest.mark.parametrize("run_id", [
+    "a/b", "../x", "a%41", "__HIVE_DEFAULT_PARTITION__", 7])
+def test_run_id_outside_the_rule_raises_before_any_write(spark, tmp_path,
+                                                         run_id):
+    """A run_id names the run dir the reader parses back: one that
+    cannot round-trip is a ValueError, and nothing is written."""
+    import os
+
+    from pydoxtools_spark.pipeline import run_resumable
+
+    out = tmp_path / "bad_run_id"
+    with pytest.raises(ValueError, match="run_id"):
+        run_resumable(spark, _text_docs(spark, "a"), None, str(out),
+                      run_id=run_id, parallelism=2)
+    assert not os.path.exists(out)
+    assert os.listdir(tmp_path) == []
+
+
+def test_run_id_reads_back_as_written(spark, tmp_path):
+    """A run committed as "007" reads back as "007" (a string, not 7),
+    with its marker's elapsed_ms; a filter on run_id is a partition
+    filter of the one scan."""
+    from pydoxtools_spark.pipeline import read_metrics, run_resumable
+
+    out = str(tmp_path / "run_id_out") + "/"
+    r = run_resumable(spark, _text_docs(spark, "abc"), None, out,
+                      run_id="007", parallelism=2)
+    run_resumable(spark, _text_docs(spark, "d"), None, out, run_id="7",
+                  parallelism=2)
+    only = read_metrics(spark, out).filter(F.col("run_id") == "007")
+    plan = only._jdf.queryExecution().executedPlan().toString()
+    assert "PartitionFilters: [isnotnull(run_id" in plan
+    assert "(run_id#" in plan and "= 007)" in plan
+    rows = only.collect()
+    assert {row["run_id"] for row in rows} == {"007"}
+    assert sum(row["docs_processed"] for row in rows) == 3
+    assert {row["elapsed_ms"] for row in rows} == {r["elapsed_ms"]}
+    assert set(_metrics_by_run(spark, out)) == {"007", "7"}
+
+
+def test_marker_without_string_run_id_is_torn(spark, tmp_path):
+    """A marker whose run_id is missing or not a string is torn: its
+    run is uncommitted, so its docs are extracted again."""
+    import json
+
+    from pydoxtools_spark.pipeline import (
+        list_snapshots, read_extracted, run_resumable)
+
+    out = str(tmp_path / "torn_out")
+    run_resumable(spark, _text_docs(spark, "ab"), None, out, run_id="r1",
+                  parallelism=2)
+    marker = f"{out}/_snapshots/r1.json"
+    with open(marker) as fh:
+        record = json.load(fh)
+    for torn in ({k: v for k, v in record.items() if k != "run_id"},
+                 {**record, "run_id": 1}):
+        with open(marker, "w") as fh:
+            json.dump(torn, fh)
+        assert list_snapshots(out) == []
+        assert read_extracted(spark, out).count() == 0
+    r = run_resumable(spark, _text_docs(spark, "ab"), None, out,
+                      run_id="r2", parallelism=2)
+    assert r["docs_processed"] == 2
+
+
 def test_crashed_run_dir_is_invisible_until_manifested(spark, corpus, tmp_path):
     """A run killed mid-write leaves parquet WITHOUT a snapshot marker:
     the resume anti-join must ignore it and re-extract its docs (no
